@@ -73,9 +73,12 @@ object Relational {
 
     // J5: multi-key equi-join (calculate_fwci.py:90). The two aggregates
     // are already co-partitioned on the join key, so the join needs no
-    // exchange; SHUFFLE_HASH picks a hash join over the default sort-merge
-    // (guide §3.1 — both sides fit a per-partition hash table; SMJ would
-    // add two full sorts purely to merge)
+    // exchange. Unhinted, AQE broadcast one aggregate (a BroadcastHashJoin,
+    // plans/r06/j5_multikey_before.txt): it collected that side to the
+    // driver and shipped it back to every task, and at scale an aggregate
+    // of (partkey, suppkey) pairs outgrows the broadcast threshold.
+    // SHUFFLE_HASH joins the co-partitioned sides in place, one hash
+    // table per partition (guide §3.1), with no BroadcastExchange
     "j5_multikey" -> ((s, dir) => {
       val li = t(s, dir, "lineitem")
       val a = li.groupBy(col("l_partkey"), col("l_suppkey"))

@@ -14,9 +14,11 @@ import graft.model._
   *     fold), fully inside whole-stage codegen. This is the semantic
   *     baseline every optimized path must match (SURVEY.md §7.3 step 3).
   *
-  *   - `wandTopK`: block-max WAND over the encoded posting blocks in a
-  *     typed mapPartitions, one document-at-a-time scorer per docId-range
-  *     shard, per-shard top-k heap, then a global
+  *   - `wandTopK` (and every other term-only query: AND, m-of-n,
+  *     exclusions, batches): block-max WAND over the encoded posting
+  *     blocks in a typed mapPartitions, one document-at-a-time scorer
+  *     ([[QueryEngine.BoolScorer]]) per docId-range shard, per-shard
+  *     top-k heap, then a global
   *     orderBy(score desc, docId asc).limit(k) (Spark plans it as
   *     TakeOrderedAndProject, like the reference's final
   *     orderBy/limit, /root/reference/data_processing/Lexical_indexing/
@@ -92,10 +94,23 @@ object QueryEngine {
       .orderBy(col("score").desc, col("docId").asc)
   }
 
-  // ---------------------------------------------------------------- WAND
+  // ---------------------------------------------------- term-only scoring
 
   /** Query-term state passed to executors: weight = qtf * idf. */
   private[query] final case class QTerm(term: String, weight: Double)
+
+  /** One term-only query as the shard scorer sees it: `terms` sorted by
+    * term (the pinned ascending summation order), `excluded` the
+    * exclusion terms that have postings, `m` how many of `terms` a
+    * document must contain.
+    */
+  private[query] final case class BoolQuery(qid: String, terms: Seq[QTerm],
+      excluded: Seq[String], m: Int)
+
+  /** A term-only query before the idf lookup: (qid, positive (term, qtf)
+    * pairs, excluded terms, m).
+    */
+  private type TermQuery = (String, Seq[(String, Int)], Seq[String], Int)
 
   /** Blocks with the positions column replaced by an empty literal: the
     * typed Dataset[PostingBlock] deserializer would otherwise force the
@@ -109,7 +124,110 @@ object QueryEngine {
       .as[PostingBlock]
   }
 
-  /** Block-max WAND top-k over encoded blocks.
+  /** Per-shard top-k candidates (qid, docId, score) of a whole batch of
+    * term-only queries: one collect of the query terms' idfs, then ONE
+    * term-pushed block scan exchanged on shardId and scored by
+    * [[BoolScorer]] — the block scan and the per-shard block decodes are
+    * shared by every query. None when no query can match.
+    *
+    * A term without postings matches nowhere: it drops out, and a query
+    * left with fewer than m terms matches nothing (so one absent required
+    * term empties an AND); an excluded term without postings excludes
+    * nothing.
+    */
+  private def termCandidates(
+      spark: SparkSession,
+      blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat],
+      corpus: CorpusStats,
+      queries: Seq[TermQuery],
+      k: Int,
+      cfg: IndexBuilder.Config,
+      tombstones: TombstoneSet
+  ): Option[DataFrame] = {
+    import spark.implicits._
+    // fewer distinct terms than m can never match: no idf collect for them
+    val satisfiable = queries.filter { case (_, pos, _, m) => pos.nonEmpty && pos.size >= m }
+    val names = satisfiable.flatMap { case (_, pos, excl, _) => pos.map(_._1) ++ excl }.distinct
+    if (names.isEmpty) return None
+    val idfs: Map[String, Double] = termStats
+      .filter($"term".isin(names: _*))
+      .collect().map(t => t.term -> t.idf).toMap
+    val live = satisfiable.flatMap { case (qid, pos, excl, m) =>
+      val qts = pos.collect {
+        case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
+      }.sortBy(_.term)
+      if (qts.size < m) None
+      else Some(BoolQuery(qid, qts, excl.filter(idfs.contains), m))
+    }
+    if (live.isEmpty) return None
+    val scanNames = live.flatMap(q => q.terms.map(_.term) ++ q.excluded).distinct
+
+    val p = cfg.params
+    val avgdl = corpus.avgdl
+    val kk = k
+    val qB = spark.sparkContext.broadcast(live)
+    val tsB = tombstones.broadcastVia(spark)
+    // one task per core, several shards per task (scorePartitionBatch
+    // iterates shard groups); HASH partitioning on shardId keeps a shard's
+    // blocks together without a RangePartitioner's extra sampling job
+    val parts = math.max(1, math.min(cfg.numShards,
+      spark.sparkContext.defaultParallelism))
+    Some(scoringBlocks(blocks)
+      .filter($"term".isin(scanNames: _*))
+      .repartition(parts, $"shardId")
+      .sortWithinPartitions($"shardId", $"term", $"minDocId")
+      .mapPartitions { it =>
+        BoolScorer.scorePartitionBatch(it.buffered, qB.value, kk, p.k1, p.b, avgdl,
+          tsB.value)
+      }
+      .toDF("qid", "docId", "score"))
+  }
+
+  /** The docIds of every posting of `terms`, decoded in-plan from the
+    * term-pushed block scan — the build side of an exclusion anti-join.
+    */
+  private def docsWithTerms(blocks: Dataset[PostingBlock], terms: Seq[String]): DataFrame =
+    scoringBlocks(blocks).toDF()
+      .filter(col("term").isin(terms: _*))
+      .select(explode(graft.plans.DecodeBlock(col("payload"), col("n"))).as("pp"))
+      .select(col("pp.docId").as("docId"))
+
+  /** One term-only query, finished by a global
+    * orderBy(score desc, docId asc).limit(k) (TakeOrderedAndProject).
+    */
+  private def termTopK(spark: SparkSession, blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat], corpus: CorpusStats, terms: Seq[(String, Int)],
+      excluded: Seq[String], m: Int, k: Int, cfg: IndexBuilder.Config,
+      tombstones: TombstoneSet): DataFrame =
+    termCandidates(spark, blocks, termStats, corpus, Seq(("", terms, excluded, m)), k,
+      cfg, tombstones).fold(emptyScores(spark))(
+      _.select(col("docId"), col("score"))
+        .orderBy(col("score").desc, col("docId").asc).limit(k))
+
+  /** A batch of term-only queries, finished by a per-qid window top-k. */
+  private def termTopKBatch(spark: SparkSession, blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat], corpus: CorpusStats,
+      queries: Seq[TermQuery], k: Int, cfg: IndexBuilder.Config,
+      tombstones: TombstoneSet): DataFrame = {
+    import spark.implicits._
+    // a duplicated qid would merge two queries' candidates in the per-qid
+    // window finish — reject instead of silently corrupting the top-k
+    require(queries.map(_._1).distinct.size == queries.size,
+      s"duplicate qids in batch: ${queries.map(_._1)}")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("qid")).orderBy(col("score").desc, col("docId").asc)
+    termCandidates(spark, blocks, termStats, corpus, queries, k, cfg, tombstones)
+      .fold(spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score"))(
+        _.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn"))
+  }
+
+  /** Exclusion tokens analyzed like the index (case, word-break). */
+  private def exclusionTerms(raw: Seq[String], cfg: IndexBuilder.Config): Seq[String] =
+    raw.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
+
+  /** Block-max WAND (disjunctive) top-k over encoded blocks: documents
+    * containing any query term, ranked by BM25; [[BoolScorer]] with m = 1.
     *
     * @param blocks     the PostingBlock dataset/table (parquet-backed when
     *                   reading a built index; term predicate is pushed to
@@ -126,45 +244,9 @@ object QueryEngine {
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
-  ): DataFrame = {
-    import spark.implicits._
-    val analyzed = Analyzer.analyzeQuery(query, cfg.analyzer)
-    if (analyzed.isEmpty) return emptyScores(spark)
-    val names = analyzed.map(_._1)
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(names: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    // terms absent from the corpus contribute 0: drop up front
-    val qts: Seq[QTerm] = analyzed.collect {
-      case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
-    }
-    if (qts.isEmpty) return emptyScores(spark)
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val qtsB = spark.sparkContext.broadcast(qts.sortBy(_.term))
-    val tsB = tombstones.broadcastVia(spark)
-
-    // one task per core, several shards per task (scorePartition iterates
-    // shard groups); HASH partitioning on shardId keeps a shard's blocks
-    // together exactly like the former repartitionByRange did, without the
-    // RangePartitioner's extra sampling pass over the filtered scan (one
-    // whole Spark job per query at serving latency)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    val candidates = scoringBlocks(blocks)
-      .filter($"term".isin(names: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        WandScorer.scorePartition(it.buffered, qtsB.value, kk, p.k1, p.b, avgdl,
-          tsB.value)
-      }
-      .toDF("docId", "score")
-
-    candidates.orderBy($"score".desc, $"docId".asc).limit(k)
-  }
+  ): DataFrame =
+    termTopK(spark, blocks, termStats, corpus, Analyzer.analyzeQuery(query, cfg.analyzer),
+      Nil, 1, k, cfg, tombstones)
 
   /** Multi-query WAND: scores a whole query batch in ONE Spark job,
     * amortizing the per-job scheduler floor (BASELINE.md measured p50
@@ -185,57 +267,17 @@ object QueryEngine {
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
-  ): DataFrame = {
-    import spark.implicits._
-    // a duplicated qid would merge two queries' candidates in the per-qid
-    // window finish — reject instead of silently corrupting the top-k
-    require(queries.map(_._1).distinct.size == queries.size,
-      s"duplicate qids in batch: ${queries.map(_._1)}")
-    def empty: DataFrame =
-      spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score")
-    val analyzed = queries.map { case (id, q) => id -> Analyzer.analyzeQuery(q, cfg.analyzer) }
-    val names = analyzed.flatMap(_._2.map(_._1)).distinct
-    if (names.isEmpty) return empty
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(names: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    val perQuery: Seq[(String, Seq[QTerm])] = analyzed
-      .map { case (id, qs) =>
-        id -> qs.collect { case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t)) }
-          .sortBy(_.term)
-      }
-      .filter(_._2.nonEmpty)
-    if (perQuery.isEmpty) return empty
-    val liveNames = perQuery.flatMap(_._2.map(_.term)).distinct
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val qB = spark.sparkContext.broadcast(perQuery)
-    val tsB = tombstones.broadcastVia(spark)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    val candidates = scoringBlocks(blocks)
-      .filter($"term".isin(liveNames: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        WandScorer.scorePartitionBatch(it.buffered, qB.value, kk, p.k1, p.b, avgdl,
-          tsB.value)
-      }
-      .toDF("qid", "docId", "score")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"score".desc, $"docId".asc)
-    candidates.withColumn("rn", row_number().over(w))
-      .filter($"rn" <= k).drop("rn")
-  }
+  ): DataFrame =
+    termTopKBatch(spark, blocks, termStats, corpus, queries.map { case (qid, q) =>
+      (qid, Analyzer.analyzeQuery(q, cfg.analyzer), Nil, 1)
+    }, k, cfg, tombstones)
 
   // --------------------------------------------------- shared scorer glue
 
   /** Consume ONE shard group from a (shardId, term, minDocId)-sorted block
     * stream: every block of the head shard, keyed by term. The single
-    * definition behind all three block scorers (WAND, conjunctive,
-    * phrase) — a shard-grouping fix lands everywhere at once.
+    * definition behind both block scorers ([[BoolScorer]] and
+    * [[PhraseScorer]]) — a shard-grouping fix lands everywhere at once.
     */
   private[query] def nextShardGroup(
       it: BufferedIterator[PostingBlock]
@@ -252,8 +294,8 @@ object QueryEngine {
 
   /** Bounded top-k accumulator under the global tie-break (score desc,
     * docId asc): the evictable worst entry is the smallest score, ties
-    * broken toward the larger docId. Shared by the WAND and conjunctive
-    * shard scorers so the ranking contract has exactly one definition.
+    * broken toward the larger docId. [[BoolScorer]] serves every term-only
+    * query with it, so the ranking contract has exactly one definition.
     */
   private[query] final class TopKHeap(k: Int) {
     private val ord: Ordering[(Long, Double)] = new Ordering[(Long, Double)] {
@@ -303,13 +345,12 @@ object QueryEngine {
     * reference UI's free-text search implies it, App.js) — WAND's
     * disjunctive top-k is the recall-oriented complement.
     *
-    * Exactness and scale: candidates are intersected per docId-range shard
-    * with the same leapfrog skip machinery as the phrase engine (blocks
-    * skipped on maxDocId metadata without decoding), so work is bounded by
+    * [[BoolScorer]] with m = n: its pivot is the cursor furthest ahead, so
+    * the scorer runs a leapfrog intersection whose lagging cursors skip
+    * whole blocks on maxDocId metadata without decoding, pruned further by
+    * the block-max bounds once the heap holds k docs. Work is bounded by
     * the RAREST required term's postings — never a corpus scan; a required
-    * term absent from the corpus short-circuits to an empty result on the
-    * driver. The term predicate is pushed to the parquet block scan like
-    * every other query path.
+    * term absent from the corpus empties the result on the driver.
     */
   def conjunctiveTopK(
       spark: SparkSession,
@@ -321,43 +362,10 @@ object QueryEngine {
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
   ): DataFrame = {
-    import spark.implicits._
     val (posText, negRaw) = parseBoolean(query)
     val analyzed = Analyzer.analyzeQuery(posText, cfg.analyzer)
-    if (analyzed.isEmpty) return emptyScores(spark)
-    val negTerms = negRaw.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
-    val allNames = (analyzed.map(_._1) ++ negTerms).distinct
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(allNames: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    // AND semantics: a required term with no postings means no document
-    // can match — unlike WAND, absent terms are not dropped
-    if (analyzed.exists { case (t, _) => !idfs.contains(t) })
-      return emptyScores(spark)
-    val qts = analyzed.map { case (t, qtf) => QTerm(t, qtf * idfs(t)) }.sortBy(_.term)
-    // an excluded term with no postings excludes nothing
-    val excl = negTerms.filter(idfs.contains)
-    val scanNames = (qts.map(_.term) ++ excl).distinct
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val qtsB = spark.sparkContext.broadcast(qts)
-    val exclB = spark.sparkContext.broadcast(excl)
-    val tsB = tombstones.broadcastVia(spark)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    scoringBlocks(blocks)
-      .filter($"term".isin(scanNames: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        ConjunctiveScorer.scorePartition(it.buffered, qtsB.value, exclB.value,
-          kk, p.k1, p.b, avgdl, tsB.value)
-      }
-      .toDF("docId", "score")
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
+    termTopK(spark, blocks, termStats, corpus, analyzed, exclusionTerms(negRaw, cfg),
+      analyzed.size, k, cfg, tombstones)
   }
 
   /** Shared by [[prefixTopK]] and its oracle builder: wildcard tokens
@@ -386,27 +394,11 @@ object QueryEngine {
       .flatMap(t => Analyzer.tokenize(t, Analyzer.noStopwords).lastOption)
       .groupBy(identity).view.mapValues(_.size).toSeq.sortBy(_._1)
 
-  /** Expand trailing-`*` stems against the term dictionary in ONE Spark
-    * job — a union of per-prefix capped scans, each with its
-    * StringStartsWith predicate pushed to the termstats parquet (round 4
-    * issued one collect per wildcard token, paying the scheduler floor per
-    * token). The [[PrefixExpansionCap]] applies per prefix in ascending
-    * term order, exactly as before.
-    */
-  private def expandPrefixes(
-      spark: SparkSession,
-      termStats: Dataset[TermStat],
-      prefixes: Seq[(String, Int)]): Seq[(String, Int)] = {
-    val byStem = expandStems(spark, termStats, prefixes.map(_._1))
-    prefixes.flatMap { case (p, qtf) =>
-      byStem.getOrElse(p, Nil).map(_ -> qtf)
-    }
-  }
-
   /** The one dictionary scan behind every wildcard expansion: per-stem
-    * capped term lists, all stems in ONE job (union of predicate-pushed
-    * capped scans). Shared by the single-query paths and [[searchBatch]],
-    * which expands every query's stems together.
+    * capped term lists, all stems in ONE job (a union of per-stem capped
+    * scans, each with its StringStartsWith predicate pushed to the
+    * termstats parquet). Shared by the single-query paths and
+    * [[searchBatch]], which expands every query's stems together.
     */
   private def expandStems(
       spark: SparkSession,
@@ -423,6 +415,13 @@ object QueryEngine {
       .groupBy(_.getString(1)).view
       .mapValues(_.map(_.getString(0)).toSeq.sorted).toMap
   }
+
+  /** Wildcard stems (with occurrence counts) replaced by their dictionary
+    * expansions from [[expandStems]].
+    */
+  private def expand(stems: Seq[(String, Int)],
+      byStem: Map[String, Seq[String]]): Seq[(String, Int)] =
+    stems.flatMap { case (p, qtf) => byStem.getOrElse(p, Nil).map(_ -> qtf) }
 
   /** Max dictionary terms a single trailing-`*` token may expand to —
     * Lucene's MaxClauseCount shape. Deterministic: the FIRST cap terms in
@@ -450,19 +449,18 @@ object QueryEngine {
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       tombstones: TombstoneSet = TombstoneSet.empty
   ): DataFrame = {
-    import spark.implicits._
     val (literal, prefixes) = parsePrefixQuery(query, cfg)
-    if (literal.isEmpty && prefixes.isEmpty) return emptyScores(spark)
-    val expanded: Seq[(String, Int)] = expandPrefixes(spark, termStats, prefixes)
-    // one weight per distinct term: literal + expansion occurrences sum
-    val combined: Seq[(String, Int)] = (literal ++ expanded)
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    if (combined.isEmpty) return emptyScores(spark)
-    val q = combined.map { case (t, n) => Seq.fill(n)(t) }.flatten.mkString(" ")
-    // delegate to WAND: analyzeQuery over the synthesized token stream
-    // reproduces exactly the combined (term, qtf) weights
-    wandTopK(spark, blocks, termStats, corpus, q, k, cfg, tombstones)
+    val byStem = expandStems(spark, termStats, prefixes.map(_._1))
+    termTopK(spark, blocks, termStats, corpus, mergeQtf(literal ++ expand(prefixes, byStem)),
+      Nil, 1, k, cfg, tombstones)
   }
+
+  /** One weight per distinct term, in ascending term order: a term typed
+    * more than once, or typed AND matched by a wildcard, sums its
+    * occurrences.
+    */
+  private def mergeQtf(terms: Seq[(String, Int)]): Seq[(String, Int)] =
+    terms.groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
 
   /** Minimum-should-match top-k (Lucene BooleanQuery.minimumShouldMatch):
     * documents containing at least `m` of the query's distinct analyzed
@@ -472,12 +470,10 @@ object QueryEngine {
     *
     * A query term absent from the corpus can never match, so it lowers
     * the achievable count: if fewer than m terms have postings the result
-    * is empty (Lucene's SHOULD-clause semantics). Per shard the scorer is
-    * a document-at-a-time merge over the term cursors — work is bounded
-    * by the UNION of the query terms' postings, the same bound WAND has
-    * before its skipping; msm < n forfeits WAND pruning because a doc's
-    * eligibility depends on its match COUNT, which upper bounds can't
-    * prove absent.
+    * is empty (Lucene's SHOULD-clause semantics). [[BoolScorer]] keeps
+    * block-max WAND's pruning for every m: its pivot needs m cursors in
+    * the prefix as well as an upper-bound sum above θ, so docs holding
+    * fewer than m terms are skipped without being scored.
     */
   def minShouldMatchTopK(
       spark: SparkSession,
@@ -491,209 +487,9 @@ object QueryEngine {
       tombstones: TombstoneSet = TombstoneSet.empty,
       excluded: Seq[String] = Nil
   ): DataFrame = {
-    import spark.implicits._
     require(m >= 1, s"minimumShouldMatch must be >= 1, got $m")
-    val analyzed = Analyzer.analyzeQuery(query, cfg.analyzer)
-    if (analyzed.isEmpty) return emptyScores(spark)
-    val negTerms = excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
-    val allNames = (analyzed.map(_._1) ++ negTerms).distinct
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(allNames: _*))
-      .collect().map(t => t.term -> t.idf).toMap
-    val qts = analyzed.collect {
-      case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
-    }.sortBy(_.term)
-    // fewer live terms than m => no document can reach the threshold
-    if (qts.size < m) return emptyScores(spark)
-    // an excluded term with no postings excludes nothing
-    val excl = negTerms.filter(idfs.contains)
-    val scanNames = (qts.map(_.term) ++ excl).distinct
-
-    val p = cfg.params
-    val avgdl = corpus.avgdl
-    val kk = k
-    val mm = m
-    val qtsB = spark.sparkContext.broadcast(qts)
-    val exclB = spark.sparkContext.broadcast(excl)
-    val tsB = tombstones.broadcastVia(spark)
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    scoringBlocks(blocks)
-      .filter($"term".isin(scanNames: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
-      .mapPartitions { it =>
-        MsmScorer.scorePartition(it.buffered, qtsB.value, exclB.value, mm, kk,
-          p.k1, p.b, avgdl, tsB.value)
-      }
-      .toDF("docId", "score")
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
-  }
-
-  /** m-of-n doc-at-a-time merge + BM25 scoring per shard. */
-  private[query] object MsmScorer {
-    import WandScorer.Cursor
-
-    /** Rows must arrive sorted by (shardId, term, minDocId). */
-    def scorePartition(
-        it: BufferedIterator[PostingBlock],
-        qts: Seq[QTerm],
-        excluded: Seq[String],
-        m: Int,
-        k: Int,
-        k1: Double, b: Double, avgdl: Double,
-        tombstones: TombstoneSet
-    ): Iterator[(Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      while (it.hasNext) {
-        val byTerm = nextShardGroup(it)
-        // qts is term-sorted, so iterating cursors in build order pins
-        // the ascending-term summation order
-        val cursors = qts.flatMap { q =>
-          byTerm.get(q.term).map(bs =>
-            new Cursor(q.term, q.weight, bs.sortBy(_.minDocId).toArray, k1, b, avgdl))
-        }.toArray
-        val not = excluded.flatMap(t => byTerm.get(t).map(bs =>
-          new Cursor(t, 0.0, bs.sortBy(_.minDocId).toArray, k1, b, avgdl))).toArray
-        if (cursors.length >= m) out ++= mergeShard(cursors, not, m, k, tombstones)
-      }
-      out.iterator
-    }
-
-    private def mergeShard(cursors: Array[Cursor], not: Array[Cursor], m: Int,
-        k: Int, tombstones: TombstoneSet): Seq[(Long, Double)] = {
-      val heap = new TopKHeap(k)
-      var liveCount = cursors.count(!_.exhausted)
-      while (liveCount >= m) {
-        // current minimum docId across live cursors
-        var minDoc = Long.MaxValue
-        var i = 0
-        while (i < cursors.length) {
-          if (!cursors(i).exhausted && cursors(i).curDoc < minDoc)
-            minDoc = cursors(i).curDoc
-          i += 1
-        }
-        // count + score the cursors sitting on it (ascending term order)
-        var dead = tombstones.contains(minDoc)
-        var matched = 0
-        var score = 0.0
-        var j = 0
-        while (j < cursors.length) {
-          if (!cursors(j).exhausted && cursors(j).curDoc == minDoc) {
-            matched += 1
-            if (!dead) score += cursors(j).currentContribution()
-          }
-          j += 1
-        }
-        // exclusion cursors skip forward lazily: minDoc is monotone within
-        // a shard, so each advanceTo is amortized over the merge
-        if (!dead && matched >= m) {
-          var x = 0
-          while (x < not.length && !dead) {
-            if (!not(x).exhausted) {
-              not(x).advanceTo(minDoc)
-              if (!not(x).exhausted && not(x).curDoc == minDoc) dead = true
-            }
-            x += 1
-          }
-        }
-        if (!dead && matched >= m) heap.offer(minDoc, score)
-        var a = 0
-        while (a < cursors.length) {
-          if (!cursors(a).exhausted && cursors(a).curDoc == minDoc) cursors(a).advance()
-          a += 1
-        }
-        liveCount = cursors.count(!_.exhausted)
-      }
-      heap.drain()
-    }
-  }
-
-  /** All-terms-required intersect + BM25 scoring per shard. */
-  private[query] object ConjunctiveScorer {
-    import WandScorer.Cursor
-
-    /** Rows must arrive sorted by (shardId, term, minDocId). */
-    def scorePartition(
-        it: BufferedIterator[PostingBlock],
-        qts: Seq[QTerm],
-        excluded: Seq[String],
-        k: Int,
-        k1: Double, b: Double, avgdl: Double,
-        tombstones: TombstoneSet = TombstoneSet.empty
-    ): Iterator[(Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-      while (it.hasNext) {
-        val byTerm = nextShardGroup(it)
-        // docId-sharding co-locates a doc's postings: a match needs every
-        // required term present in this shard
-        if (qts.forall(q => byTerm.contains(q.term))) {
-          // qts is term-sorted, so contributions sum in ascending term
-          // order — the pinned summation order of every scoring path
-          val req = qts.map(q => new Cursor(q.term, q.weight,
-            byTerm(q.term).sortBy(_.minDocId).toArray, k1, b, avgdl)).toArray
-          val not = excluded.flatMap(t => byTerm.get(t).map(bs =>
-            new Cursor(t, 0.0, bs.sortBy(_.minDocId).toArray, k1, b, avgdl))).toArray
-          out ++= intersectShard(req, not, k, tombstones)
-        }
-      }
-      out.iterator
-    }
-
-    /** Leapfrog intersect over the required cursors; heap top-k under the
-      * global tie-break (score desc, docId asc).
-      */
-    private def intersectShard(req: Array[Cursor], not: Array[Cursor],
-        k: Int, tombstones: TombstoneSet): Seq[(Long, Double)] = {
-      val heap = new TopKHeap(k)
-      var done = false
-      while (!done) {
-        var target = Long.MinValue
-        var i = 0
-        while (i < req.length && !done) {
-          if (req(i).exhausted) done = true
-          else if (req(i).curDoc > target) target = req(i).curDoc
-          i += 1
-        }
-        if (!done) {
-          var aligned = true
-          var j = 0
-          while (j < req.length && !done) {
-            if (req(j).curDoc < target) {
-              req(j).advanceTo(target)
-              if (req(j).exhausted) done = true
-              else if (req(j).curDoc != target) aligned = false
-            }
-            j += 1
-          }
-          if (!done && aligned) {
-            var dropped = tombstones.contains(target)
-            var x = 0
-            while (x < not.length && !dropped) {
-              if (!not(x).exhausted) {
-                not(x).advanceTo(target)
-                if (!not(x).exhausted && not(x).curDoc == target) dropped = true
-              }
-              x += 1
-            }
-            if (!dropped) {
-              var score = 0.0
-              var m = 0
-              while (m < req.length) { score += req(m).currentContribution(); m += 1 }
-              heap.offer(target, score)
-            }
-            var a = 0
-            while (a < req.length && !done) {
-              req(a).advance()
-              if (req(a).exhausted) done = true
-              a += 1
-            }
-          }
-        }
-      }
-      heap.drain()
-    }
+    termTopK(spark, blocks, termStats, corpus, Analyzer.analyzeQuery(query, cfg.analyzer),
+      exclusionTerms(excluded, cfg), m, k, cfg, tombstones)
   }
 
   // ------------------------------------------------- unified search box
@@ -771,13 +567,13 @@ object QueryEngine {
     * PhraseQuery scoring — the phrase as a single term (tf = occurrence
     * count, idf over the phrase df) — exactly [[phraseTopK]].
     *
-    * Routing (each single-feature query runs the scorer it always had —
-    * property-tested identical in SearchSpec):
-    *   - plain terms, m=1            → [[wandTopK]] (block-max WAND)
-    *   - plain terms, m=n (or -term) → [[conjunctiveTopK]] (leapfrog AND)
-    *   - plain terms, 1<m<n          → [[minShouldMatchTopK]]
+    * Routing (each single-feature query is property-tested identical to
+    * its dedicated API in SearchSpec):
+    *   - terms only (any m, -term)   → one [[BoolScorer]] job: m = 1 is
+    *                                   [[wandTopK]], m = n [[conjunctiveTopK]],
+    *                                   1<m<n [[minShouldMatchTopK]]
     *   - `tok*` anywhere             → dictionary expansion (one capped,
-    *                                   predicate-pushed scan) into the above
+    *                                   predicate-pushed scan) into the rest
     *   - lone `"phrase"~s`           → [[phraseTopK]]
     *   - `"phrase"` + free terms     → [[phraseFilterRank]]
     *   - any other mix               → [[composedTopK]] (phrase survivors
@@ -815,42 +611,15 @@ object QueryEngine {
       docs: Option[DataFrame] = None
   ): DataFrame = {
     require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
-    val pq0 = parseQuery(query)
-    // forgiveness for accidental colons (Lucene-style search boxes see
-    // URLs, 're:deploy', field typos): only tokens naming an ACTUAL doc
-    // metadata column act as filters; the rest fall back to plain text
-    // ('http://x' searches the terms http/x instead of crashing on an
-    // unresolved column)
-    // without a docs relation the metadata columns are unknowable, so only
-    // the transcript schema's documented filterable fields count as field
-    // queries there — a stray 'http://x' or 're:deploy' falls back to free
-    // text instead of crashing the docs-less serving path (ADVICE r5: one
-    // such token used to throw and fail a whole searchBatch)
-    val (knownFields, strayFields) = docs match {
-      case Some(d) => pq0.fields.partition { case (f, _) => d.columns.contains(f) }
-      case None => pq0.fields.partition { case (f, _) => MetadataFields.contains(f) }
-    }
-    if (knownFields.nonEmpty && docs.isEmpty)
-      throw new IllegalArgumentException(
-        s"query [$query] has field predicates ${knownFields.map(f => f._1 + ":" + f._2)} " +
-          "— pass the docs relation")
-    val pq = pq0.copy(
-      free = pq0.free ++ strayFields.map { case (f, v) => s"$f $v" },
-      fields = knownFields)
+    val pq = resolveFields(query, docs)
     val fieldFilter: Option[DataFrame] = if (pq.fields.isEmpty) None else {
       val d = docs.get
       Some(pq.fields.foldLeft(d) { case (acc, (f, v)) => acc.filter(col(f) === v) }
         .select(col("docId")))
     }
-    val stems = analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
-    val expanded = expandPrefixes(spark, termStats, stems)
-    val literal = Analyzer.analyzeQuery(
-      (pq.free ++ pq.phrases.map(_._1)).mkString(" "), cfg.analyzer)
-    // one weight per distinct positive term; a term typed AND matched by a
-    // wildcard sums its occurrences, like prefixTopK
-    val positive = (literal ++ expanded)
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    val excl = pq.excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
+    val positive = positiveTerms(pq,
+      expandStems(spark, termStats, prefixStems(pq).map(_._1)), cfg)
+    val excl = exclusionTerms(pq.excluded, cfg)
     val m = minShouldMatch
     // a filter-only query ('role:user', no scoring terms) is a match-all
     // under the filter: constant score 0, docId order — Lucene's
@@ -867,35 +636,18 @@ object QueryEngine {
       val base = fieldFilter.get
       val filtered =
         if (excl.isEmpty) base
-        else {
-          val exclDocs = scoringBlocks(blocks).toDF()
-            .filter($"term".isin(excl: _*))
-            .select(explode(graft.plans.DecodeBlock($"payload", $"n")).as("pp"))
-            .select($"pp.docId".as("docId"))
-          base.join(exclDocs, Seq("docId"), "left_anti")
-        }
+        else base.join(docsWithTerms(blocks, excl), Seq("docId"), "left_anti")
       return filtered.select($"docId", lit(0.0).as("score"))
         .orderBy($"docId".asc).limit(k)
     }
     // more required matches than distinct positive terms is unsatisfiable
     if (positive.isEmpty || m > positive.size) return emptyScores(spark)
-    // re-synthesized token stream carrying the exact (term, qtf) weights
-    // for the query-text-taking dedicated APIs (analysis is idempotent on
-    // analyzed terms)
-    def posText = positive.flatMap { case (t, n) => Seq.fill(n)(t) }.mkString(" ")
 
     if (fieldFilter.nonEmpty) {
       composedTopK(spark, blocks, termStats, corpus, positive, pq.phrases, excl,
         m, k, cfg, tombstones, fieldFilter)
     } else if (pq.phrases.isEmpty) {
-      if (excl.isEmpty && m == 1)
-        wandTopK(spark, blocks, termStats, corpus, posText, k, cfg, tombstones)
-      else if (m == positive.size)
-        conjunctiveTopK(spark, blocks, termStats, corpus,
-          (posText +: excl.map("-" + _)).mkString(" "), k, cfg, tombstones)
-      else
-        minShouldMatchTopK(spark, blocks, termStats, corpus, posText, m, k, cfg,
-          tombstones, excl)
+      termTopK(spark, blocks, termStats, corpus, positive, excl, m, k, cfg, tombstones)
     } else if (pq.phrases.size == 1 && pq.free.isEmpty && pq.prefixes.isEmpty &&
         excl.isEmpty) {
       // a phrase match contains every phrase word, so any satisfiable m is
@@ -913,10 +665,10 @@ object QueryEngine {
   }
 
   /** Batched unified search — a whole request batch through the one
-    * search-box grammar in as few jobs as possible: queries that reduce to
-    * plain disjunctive WAND after parsing (no phrases / exclusions /
-    * fields; wildcards are fine — every query's stems expand in ONE
-    * dictionary scan) share a single [[wandTopKBatch]] job (shared block
+    * search-box grammar in as few jobs as possible: every query without
+    * phrases or field filters — any `minShouldMatch`, exclusions and
+    * wildcards included (every query's stems expand in ONE dictionary
+    * scan) — scores in a single shared [[BoolScorer]] job (shared block
     * scan + per-shard decode memo, the measured ~3× amortization of the
     * per-job scheduler floor); the rest run their routed plans and union
     * in. Returns (qid, docId, score), per-qid top-k, each qid identical to
@@ -938,50 +690,22 @@ object QueryEngine {
       docs: Option[DataFrame] = None
   ): DataFrame = {
     import spark.implicits._
-    // duplicate qids would silently cross-wire the per-qid stems map and
-    // merge two queries' candidates under one window partition
+    require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
+    // duplicate qids would merge two queries' candidates under one window
+    // partition or one qid literal of the union
     require(queries.map(_._1).distinct.size == queries.size,
       s"duplicate qids in batch: ${queries.map(_._1)}")
-    def empty: DataFrame =
-      spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score")
-    // stray colon tokens (URLs, field typos) are classified EXACTLY like
-    // search() does before routing, so a query that search() would degrade
-    // to plain free text stays in the shared WAND batch instead of paying
-    // an individual job for a cosmetic token
-    val parsed = queries.map { case (qid, q) =>
-      val pq0 = parseQuery(q)
-      val (knownFields, strayFields) = docs match {
-        case Some(d) => pq0.fields.partition { case (f, _) => d.columns.contains(f) }
-        case None => pq0.fields.partition { case (f, _) => MetadataFields.contains(f) }
-      }
-      (qid, q, pq0.copy(
-        free = pq0.free ++ strayFields.map { case (f, v) => s"$f $v" },
-        fields = knownFields))
+    val parsed = queries.map { case (qid, q) => (qid, q, resolveFields(q, docs)) }
+    val (termOnly, other) = parsed.partition { case (_, _, pq) =>
+      pq.phrases.isEmpty && pq.fields.isEmpty
     }
-    val (plain, other) =
-      if (minShouldMatch == 1)
-        parsed.partition { case (_, _, pq) =>
-          pq.phrases.isEmpty && pq.excluded.isEmpty && pq.fields.isEmpty
-        }
-      else (Nil, parsed)
-    // every plain query's wildcard stems expand in one dictionary scan
-    val stems: Map[String, Seq[(String, Int)]] = plain.map { case (qid, _, pq) =>
-      qid -> analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
-    }.toMap
-    val byStem = expandStems(spark, termStats, stems.values.flatten.map(_._1).toSeq)
-    val plainTexts: Seq[(String, String)] = plain.flatMap { case (qid, _, pq) =>
-      val expanded = stems(qid).flatMap { case (p, qtf) =>
-        byStem.getOrElse(p, Nil).map(_ -> qtf)
-      }
-      val positive = (Analyzer.analyzeQuery(pq.free.mkString(" "), cfg.analyzer) ++
-        expanded).groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-      if (positive.isEmpty) None
-      else Some(qid -> positive.flatMap { case (t, n) => Seq.fill(n)(t) }.mkString(" "))
-    }
-    val batched =
-      if (plainTexts.isEmpty) empty
-      else wandTopKBatch(spark, blocks, termStats, corpus, plainTexts, k, cfg,
-        tombstones)
+    val byStem = expandStems(spark, termStats,
+      termOnly.flatMap { case (_, _, pq) => prefixStems(pq).map(_._1) })
+    val batched = termTopKBatch(spark, blocks, termStats, corpus,
+      termOnly.map { case (qid, _, pq) =>
+        (qid, positiveTerms(pq, byStem, cfg), exclusionTerms(pq.excluded, cfg),
+          minShouldMatch)
+      }, k, cfg, tombstones)
     other.foldLeft(batched) { case (acc, (qid, q, _)) =>
       acc.unionByName(
         search(spark, blocks, termStats, corpus, q, k, minShouldMatch, cfg,
@@ -989,6 +713,40 @@ object QueryEngine {
           .select(lit(qid).as("qid"), $"docId", $"score"))
     }
   }
+
+  /** Parse a search-box query and keep as `field:value` filters only the
+    * tokens naming a real column: of `docs` when given, else of the
+    * transcript schema ([[MetadataFields]]). Every other colon token (URLs,
+    * 're:deploy', field typos) falls back to free text, so search() and
+    * searchBatch() classify it identically instead of crashing on an
+    * unresolved column. A schema field without `docs` throws the
+    * pass-the-docs contract error.
+    */
+  private def resolveFields(query: String, docs: Option[DataFrame]): ParsedQuery = {
+    val pq = parseQuery(query)
+    val (known, stray) = docs match {
+      case Some(d) => pq.fields.partition { case (f, _) => d.columns.contains(f) }
+      case None => pq.fields.partition { case (f, _) => MetadataFields.contains(f) }
+    }
+    if (known.nonEmpty && docs.isEmpty)
+      throw new IllegalArgumentException(
+        s"query [$query] has field predicates ${known.map(f => f._1 + ":" + f._2)} " +
+          "— pass the docs relation")
+    pq.copy(free = pq.free ++ stray.map { case (f, v) => s"$f $v" }, fields = known)
+  }
+
+  /** A parsed query's analyzed wildcard stems with their occurrence counts. */
+  private def prefixStems(pq: ParsedQuery): Seq[(String, Int)] =
+    analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
+
+  /** The distinct positive terms of a parsed query — free terms, phrase
+    * words and wildcard expansions (`byStem`, from [[expandStems]]) — with
+    * their summed occurrence counts, in ascending term order.
+    */
+  private def positiveTerms(pq: ParsedQuery, byStem: Map[String, Seq[String]],
+      cfg: IndexBuilder.Config): Seq[(String, Int)] =
+    mergeQtf(Analyzer.analyzeQuery((pq.free ++ pq.phrases.map(_._1)).mkString(" "),
+      cfg.analyzer) ++ expand(prefixStems(pq), byStem))
 
   /** The general composed query: every phrase is a filter, exclusions drop
     * candidates, minimum-should-match gates on the per-doc distinct-match
@@ -1048,7 +806,11 @@ object QueryEngine {
     // conservative than the measured count in one corner — min-df > cap
     // with an actual survivor set under it takes the shuffle join — which
     // only ever trades a broadcast for the AQE-planned join, never the
-    // reverse. The big decoded-postings side still never shuffles on the
+    // reverse. Without the count there is no zero-survivor early exit
+    // either: a phrase whose terms are all in the dictionary but which
+    // matches no document still runs the scoring job, which returns empty
+    // through the empty semi-join (a cost corner, never a wrong answer).
+    // The big decoded-postings side still never shuffles on the
     // broadcast path (guide §1.2 step 1 / §3.1).
     val phraseToks = phrases.map { case (ph, _) =>
       Analyzer.tokenize(ph, cfg.analyzer).distinct
@@ -1077,16 +839,10 @@ object QueryEngine {
     }
     val phrasePruned = docFilter.fold(phrasePruned0)(f =>
       phrasePruned0.join(f.select($"docId"), Seq("docId"), "left_semi"))
-    val exclLive = excluded.distinct
     val pruned =
-      if (exclLive.isEmpty) phrasePruned
-      else {
-        val exclDocs = scoringBlocks(blocks).toDF()
-          .filter($"term".isin(exclLive: _*))
-          .select(explode(graft.plans.DecodeBlock($"payload", $"n")).as("pp"))
-          .select($"pp.docId".as("docId"))
-        phrasePruned.join(exclDocs, Seq("docId"), "left_anti")
-      }
+      if (excluded.isEmpty) phrasePruned
+      else phrasePruned.join(docsWithTerms(blocks, excluded.distinct), Seq("docId"),
+        "left_anti")
     // cs has at most one entry per distinct positive term (post is keyed
     // by (term, docId); q by term), so size(cs) IS the distinct-match count
     pruned
@@ -1392,12 +1148,16 @@ object QueryEngine {
     }
   }
 
-  /** Document-at-a-time WAND, one shard at a time within a partition. */
-  private[query] object WandScorer {
+  /** The one document-at-a-time scorer behind every term-only query:
+    * block-max WAND (Ding & Suel, SIGIR 2011) with a minimum-should-match
+    * constraint, the shape of Lucene's WANDScorer. m = 1 is disjunctive
+    * WAND; m = n is a leapfrog intersection (AND); 1 < m < n is m-of-n
+    * with the same block-max pruning. One shard at a time per partition.
+    */
+  private[query] object BoolScorer {
 
-    final class Cursor(val term: String, val weight: Double,
-        blocks: Array[PostingBlock], k1: Double, b: Double, avgdl: Double,
-        decodeFn: PostingBlock => Array[Codec.P] = b => Codec.decode(b.payload, b.n)) {
+    final class Cursor(weight: Double, blocks: Array[PostingBlock],
+        k1: Double, b: Double, avgdl: Double, decodeFn: PostingBlock => Array[Codec.P]) {
       // blocks are docId-sorted and non-overlapping within (shard, term).
       // Upper bounds derive from (maxTf, minDl) with the CURRENT corpus
       // avgdl: partial() is monotone up in tf, down in dl, so this bounds
@@ -1454,24 +1214,14 @@ object QueryEngine {
       }
     }
 
-    /** Rows must arrive sorted by (shardId, term, minDocId). */
-    def scorePartition(
-        it: BufferedIterator[PostingBlock],
-        qts: Seq[QTerm],
-        k: Int,
-        k1: Double, b: Double, avgdl: Double,
-        tombstones: TombstoneSet = TombstoneSet.empty
-    ): Iterator[(Long, Double)] =
-      scorePartitionBatch(it, Seq("" -> qts), k, k1, b, avgdl, tombstones)
-        .map { case (_, d, s) => (d, s) }
-
-    /** Batch variant: every query scored against each shard group while
-      * its blocks are at hand. Decoded blocks are memoized per shard, so a
-      * block shared by several queries is decoded once.
+    /** Rows must arrive sorted by (shardId, term, minDocId). Every query
+      * is scored against each shard group while its blocks are at hand.
+      * Decoded blocks are memoized per shard, so a block shared by several
+      * queries is decoded once.
       */
     def scorePartitionBatch(
         it: BufferedIterator[PostingBlock],
-        queries: Seq[(String, Seq[QTerm])],
+        queries: Seq[BoolQuery],
         k: Int,
         k1: Double, b: Double, avgdl: Double,
         tombstones: TombstoneSet = TombstoneSet.empty
@@ -1487,81 +1237,91 @@ object QueryEngine {
         val memo = scala.collection.mutable.HashMap.empty[(String, Long), Array[Codec.P]]
         val decode: PostingBlock => Array[Codec.P] = blk =>
           memo.getOrElseUpdate((blk.term, blk.minDocId), Codec.decode(blk.payload, blk.n))
-        queries.foreach { case (qid, qts) =>
-          val cursors = qts.flatMap { qt =>
-            sortedByTerm.get(qt.term).map { bs =>
-              new Cursor(qt.term, qt.weight, bs, k1, b, avgdl, decode)
-            }
+        def cursor(term: String, weight: Double): Cursor =
+          new Cursor(weight, sortedByTerm(term), k1, b, avgdl, decode)
+        queries.foreach { q =>
+          // docId-sharding co-locates a doc's postings: a match needs m of
+          // the query's terms present in this shard. q.terms is
+          // term-sorted, so the cursors are too (the summation order)
+          val present = q.terms.filter(t => sortedByTerm.contains(t.term))
+          if (present.size >= q.m) {
+            val cursors = present.map(t => cursor(t.term, t.weight)).toArray
+            val not = q.excluded.filter(sortedByTerm.contains).map(cursor(_, 0.0)).toArray
+            out ++= scoreShard(cursors, not, q.m, k, tombstones)
+              .map { case (d, s) => (q.qid, d, s) }
           }
-          if (cursors.nonEmpty)
-            out ++= wandShard(cursors.toArray, k, tombstones)
-              .map { case (d, s) => (qid, d, s) }
         }
       }
       out.iterator
     }
 
-    /** Plain WAND pivot selection on global term upper bounds, with a
-      * block-max refinement: once a pivot is chosen, the sum of the
-      * *current-block* upper bounds must still beat the threshold or the
-      * pivot is skipped without decoding/scoring (Ding & Suel's BMW).
-      * Threshold semantics respect the global tie-break
-      * (score desc, docId asc): within a shard docIds only grow, so a
-      * candidate whose upper bound is <= θ can never displace a heap entry.
+    /** WAND pivot selection on global term upper bounds with a match-count
+      * condition: the pivot is the first cursor, in curDoc order, whose
+      * prefix holds at least m cursors AND whose prefix upper-bound sum
+      * beats θ. No doc before the pivot can hold m terms and beat θ, so a
+      * lagging cursor jumps to it. Once the pivot is extended over docId
+      * ties, every prefix cursor sits on the pivot doc (>= m of them), and
+      * the sum of their *current-block* upper bounds must still beat θ or
+      * the doc is skipped without scoring (Ding & Suel's BMW). Tombstoned
+      * docs and docs an exclusion cursor lands on are skipped the same way.
+      * θ respects the global tie-break (score desc, docId asc): within a
+      * shard docIds only grow, so a candidate whose upper bound is <= θ can
+      * never displace a heap entry. `cursors` must be term-sorted: scores
+      * sum in ascending term order, the pinned order of every path.
       */
-    private def wandShard(cursors: Array[Cursor], k: Int,
-        tombstones: TombstoneSet = TombstoneSet.empty): Seq[(Long, Double)] = {
+    private[query] def scoreShard(cursors: Array[Cursor], not: Array[Cursor], m: Int,
+        k: Int, tombstones: TombstoneSet): Seq[(Long, Double)] = {
       val heap = new TopKHeap(k)
-      def theta: Double = heap.theta
-
-      val live = scala.collection.mutable.ArrayBuffer(cursors.toIndexedSeq: _*)
-      while (live.nonEmpty) {
-        val sorted = live.sortBy(_.curDoc)
-        // pivot: first position where the prefix upper-bound sum beats theta
+      // the live cursors in curDoc order: cursors only move forward, so an
+      // insertion sort restores the order in about one pass per step
+      val sorted = cursors.clone()
+      var live = sorted.length
+      while (live >= m) {
+        var s = 1
+        while (s < live) {
+          val c = sorted(s)
+          var j = s - 1
+          while (j >= 0 && sorted(j).curDoc > c.curDoc) { sorted(j + 1) = sorted(j); j -= 1 }
+          sorted(j + 1) = c
+          s += 1
+        }
+        val theta = heap.theta
         var acc = 0.0
         var pivotIdx = -1
         var i = 0
-        while (i < sorted.length && pivotIdx < 0) {
+        while (i < live && pivotIdx < 0) {
           acc += sorted(i).globalUb
-          if (acc > theta) pivotIdx = i
+          if (i + 1 >= m && acc > theta) pivotIdx = i
           i += 1
         }
-        if (pivotIdx < 0) {
-          live.clear() // nothing remaining can beat theta
-        } else {
+        if (pivotIdx < 0) live = 0 // no remaining doc can hold m terms and beat θ
+        else {
           val pivotDoc = sorted(pivotIdx).curDoc
           // extend the pivot across docId ties: cursors beyond the first
-          // index whose prefix UB beats theta can sit at pivotDoc too, and
-          // the block-max bound below must cover EVERY cursor positioned at
-          // pivotDoc or the skip branch silently drops a doc whose true
-          // score (including the tied terms) exceeds theta (Ding & Suel's
-          // BMW / Lucene pivot semantics)
-          while (pivotIdx + 1 < sorted.length && sorted(pivotIdx + 1).curDoc == pivotDoc)
+          // qualifying index can sit at pivotDoc too, and the block-max
+          // bound below must cover EVERY cursor positioned at pivotDoc or
+          // the skip branch silently drops a doc whose true score
+          // (including the tied terms) exceeds θ (Ding & Suel's BMW /
+          // Lucene pivot semantics)
+          while (pivotIdx + 1 < live && sorted(pivotIdx + 1).curDoc == pivotDoc)
             pivotIdx += 1
-          if (sorted.head.curDoc == pivotDoc) {
-            // tombstoned (deleted) docs are skipped exactly like a failed
-            // block-max bound: never scored, never a heap slot
-            val dead = tombstones.contains(pivotDoc)
-            // block-max refinement: tighten with current-block ubs
+          if (sorted(0).curDoc == pivotDoc) {
             var blockAcc = 0.0
             var j = 0
             while (j <= pivotIdx) { blockAcc += sorted(j).curBlockUb; j += 1 }
-            if (!dead && blockAcc > theta) {
-              // score pivotDoc exactly, ascending term order (cursors were
-              // built term-sorted; sortBy on curDoc is stable, but re-sort
-              // the matching set by term to pin summation order)
-              val matching = sorted.iterator
-                .takeWhile(_.curDoc == pivotDoc).toArray.sortBy(_.term)
+            if (blockAcc > theta && !tombstones.contains(pivotDoc) &&
+                !excludedAt(not, pivotDoc)) {
               var score = 0.0
-              var m = 0
-              while (m < matching.length) { score += matching(m).currentContribution(); m += 1 }
+              var t = 0
+              while (t < cursors.length) {
+                val c = cursors(t)
+                if (!c.exhausted && c.curDoc == pivotDoc) score += c.currentContribution()
+                t += 1
+              }
               heap.offer(pivotDoc, score)
-              matching.foreach(_.advance())
-            } else {
-              // skip: advance every cursor sitting on pivotDoc past it
-              sorted.iterator.takeWhile(_.curDoc == pivotDoc)
-                .foreach(_.advanceTo(pivotDoc + 1))
             }
+            j = 0
+            while (j <= pivotIdx) { sorted(j).advance(); j += 1 }
           } else {
             // advance a lagging cursor. It MUST be one with curDoc strictly
             // below the pivot (cursors at indices < pivotIdx can already sit
@@ -1578,11 +1338,32 @@ object QueryEngine {
             }
             sorted(best).advanceTo(pivotDoc)
           }
-          var li = live.length - 1
-          while (li >= 0) { if (live(li).exhausted) live.remove(li); li -= 1 }
+          // drop exhausted cursors, keeping the rest in order
+          var w = 0
+          var r = 0
+          while (r < live) {
+            if (!sorted(r).exhausted) { sorted(w) = sorted(r); w += 1 }
+            r += 1
+          }
+          live = w
         }
       }
       heap.drain()
+    }
+
+    /** Whether an exclusion cursor holds `doc`. The cursors skip forward
+      * lazily: the docs checked here only grow within a shard (every live
+      * cursor has moved past the previous one), so each advanceTo is
+      * amortized over the shard.
+      */
+    private def excludedAt(not: Array[Cursor], doc: Long): Boolean = {
+      var x = 0
+      while (x < not.length) {
+        not(x).advanceTo(doc)
+        if (!not(x).exhausted && not(x).curDoc == doc) return true
+        x += 1
+      }
+      false
     }
   }
 }

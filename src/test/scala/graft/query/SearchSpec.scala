@@ -335,19 +335,26 @@ class SearchSpec extends AnyFunSuite {
       "b2" -> "term000* term0042", // wildcard -> expanded into the batch
       "b3" -> "\"term0000 term0001\" term0002 -term0005", // composed
       "b4" -> "role:user term0000 term0001", // fielded
-      "b5" -> "zzznotaterm") // empty result
-    val got = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
-      batch, 10, 1, cfg, graft.index.TombstoneSet.empty, docsDf)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(x => (-x._2, x._1)).toSeq).toMap
-    var nonEmpty = 0
-    batch.foreach { case (qid, q) =>
-      val single = rows(QueryEngine.search(spark, idx.blocks, idx.termStats,
-        idx.corpus, q, 10, 1, cfg, graft.index.TombstoneSet.empty, docsDf))
-      assert(got.getOrElse(qid, Nil) == single, s"batch/single mismatch for $qid [$q]")
-      if (single.nonEmpty) nonEmpty += 1
+      "b5" -> "zzznotaterm", // empty result
+      "b6" -> "term0000 term0001 term0003 -term0002", // exclusion -> shared job
+      "b7" -> "term0001 term000* -term0004", // wildcard + exclusion -> shared job
+      "b8" -> "-term0000") // exclusion alone matches nothing
+    // m = 1 and m = 2 over the same batch: every term-only query, whatever
+    // its m and exclusions, scores in the one shared job
+    Seq(1 -> 5, 2 -> 4).foreach { case (m, minNonEmpty) =>
+      val got = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
+        batch, 10, m, cfg, graft.index.TombstoneSet.empty, docsDf)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+        .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(x => (-x._2, x._1)).toSeq).toMap
+      var nonEmpty = 0
+      batch.foreach { case (qid, q) =>
+        val single = rows(QueryEngine.search(spark, idx.blocks, idx.termStats,
+          idx.corpus, q, 10, m, cfg, graft.index.TombstoneSet.empty, docsDf))
+        assert(got.getOrElse(qid, Nil) == single, s"batch/single mismatch for $qid [$q] m=$m")
+        if (single.nonEmpty) nonEmpty += 1
+      }
+      assert(nonEmpty >= minNonEmpty, s"m=$m batch fixtures mostly empty — vacuous")
     }
-    assert(nonEmpty >= 4, "batch fixtures mostly empty — vacuous")
   }
 
   test("filter-only search on a delete-carrying index never returns a tombstoned doc") {

@@ -2,15 +2,17 @@ package graft.query
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.Codec
+import graft.index.{Codec, TombstoneSet}
 import graft.index.Codec.P
 import graft.model.PostingBlock
-import graft.query.QueryEngine.{QTerm, WandScorer}
+import graft.query.QueryEngine.{BoolQuery, BoolScorer, QTerm}
 
-/** Direct unit tests of the block-max WAND scorer against a scalar
-  * exhaustive oracle over the SAME encoded blocks — no Spark involved, so
-  * adversarial block layouts (weak current block, docId ties at the pivot,
-  * multi-block lists) can be constructed exactly.
+/** Direct unit tests of the block-max WAND scorer with its
+  * minimum-should-match constraint ([[QueryEngine.BoolScorer]]) against a
+  * scalar exhaustive oracle over the SAME encoded blocks — no Spark
+  * involved, so adversarial block layouts (weak current block, docId ties
+  * at the pivot, multi-block lists, too few matches at the pivot) can be
+  * constructed exactly.
   */
 class WandUnitSpec extends AnyFunSuite {
 
@@ -22,29 +24,48 @@ class WandUnitSpec extends AnyFunSuite {
       ps.map(_.tf).max, ps.map(_.dl).min, ps.map(_.tf.toLong).sum,
       Codec.encode(ps), Array.emptyByteArray)
 
+  private def docsOf(blocks: Seq[PostingBlock], term: String): Seq[P] =
+    blocks.filter(_.term == term).sortBy(b => (b.shardId, b.minDocId))
+      .flatMap(blkk => Codec.decode(blkk.payload, blkk.n))
+
   /** Scalar exhaustive top-k over decoded blocks (same formula, same
-    * tie-break).
+    * ascending-term summation, same tie-break): docs holding >= m of the
+    * query terms, none of the excluded terms, and not in `dead`.
     */
-  private def exhaustive(blocks: Seq[PostingBlock], qts: Seq[QTerm], k: Int,
-      avgdl: Double): Seq[(Long, Double)] = {
+  private def exhaustive(blocks: Seq[PostingBlock], q: BoolQuery, k: Int,
+      avgdl: Double, dead: Set[Long] = Set.empty): Seq[(Long, Double)] = {
     val scores = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
-    qts.sortBy(_.term).foreach { qt =>
-      blocks.filter(_.term == qt.term).sortBy(b => (b.shardId, b.minDocId)).foreach { blkk =>
-        Codec.decode(blkk.payload, blkk.n).foreach { p =>
-          scores(p.docId) += qt.weight *
-            (p.tf * (k1 + 1.0) / (p.tf + k1 * (1.0 - b + b * p.dl / avgdl)))
-        }
+    val matches = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
+    q.terms.sortBy(_.term).foreach { qt =>
+      docsOf(blocks, qt.term).foreach { p =>
+        scores(p.docId) += qt.weight *
+          (p.tf * (k1 + 1.0) / (p.tf + k1 * (1.0 - b + b * p.dl / avgdl)))
+        matches(p.docId) += 1
       }
     }
-    scores.toSeq.sortBy { case (d, s) => (-s, d) }.take(k)
+    val excluded = q.excluded.flatMap(docsOf(blocks, _)).map(_.docId).toSet
+    scores.toSeq
+      .filter { case (d, _) => matches(d) >= q.m && !excluded(d) && !dead(d) }
+      .sortBy { case (d, s) => (-s, d) }.take(k)
   }
 
-  private def wand(blocks: Seq[PostingBlock], qts: Seq[QTerm], k: Int,
-      avgdl: Double): Seq[(Long, Double)] = {
+  /** Every query of `queries` in ONE scorePartitionBatch call, finished
+    * per qid like the Spark paths (global order over the shards' top-k).
+    */
+  private def scored(blocks: Seq[PostingBlock], queries: Seq[BoolQuery], k: Int,
+      avgdl: Double, tombstones: TombstoneSet = TombstoneSet.empty)
+      : Map[String, Seq[(Long, Double)]] = {
     val sorted = blocks.sortBy(b => (b.shardId, b.term, b.minDocId))
-    WandScorer.scorePartition(sorted.iterator.buffered, qts, k, k1, b, avgdl)
-      .toSeq.sortBy { case (d, s) => (-s, d) }.take(k)
+    val rows = BoolScorer.scorePartitionBatch(sorted.iterator.buffered, queries, k,
+      k1, b, avgdl, tombstones).toSeq
+    queries.map { q =>
+      q.qid -> rows.filter(_._1 == q.qid).map(r => (r._2, r._3))
+        .sortBy { case (d, s) => (-s, d) }.take(k)
+    }.toMap
   }
+
+  private def wand(qts: Seq[QTerm], m: Int = 1): BoolQuery =
+    BoolQuery("q", qts.sortBy(_.term), Nil, m)
 
   test("skip bound covers ALL cursors tied at the pivot (adversarial layout)") {
     // Term a: weak first block (maxTf=1) containing doc 5, strong later
@@ -58,35 +79,79 @@ class WandUnitSpec extends AnyFunSuite {
       blk(0, "a", 1, Seq(P(9, 100, 10))),
       blk(0, "b", 0, Seq(P(1, 1, 10))),
       blk(0, "b", 1, Seq(P(5, 50, 10))))
-    val qts = Seq(QTerm("a", 1.0), QTerm("b", 1.0))
-    val want = exhaustive(blocks, qts, 1, avgdl = 10.0)
-    val got = wand(blocks, qts, 1, avgdl = 10.0)
+    val q = wand(Seq(QTerm("a", 1.0), QTerm("b", 1.0)))
+    val want = exhaustive(blocks, q, 1, avgdl = 10.0)
+    val got = scored(blocks, Seq(q), 1, avgdl = 10.0)("q")
     assert(want.head._1 == 5L, "fixture must make doc 5 the true top-1")
     assert(got == want, s"WAND dropped the tied pivot: got $got want $want")
   }
 
-  test("randomized block layouts: WAND == exhaustive for 300 corpora") {
+  test("match count, not theta, holds the pivot back (adversarial layout)") {
+    // Term a carries a huge weight, so its cursor alone beats any θ — a
+    // pivot chosen on the upper-bound sum only stops at a's first doc.
+    // Doc 1 holds a ALONE and is the best m = 1 answer; under m = 2 it
+    // must never be scored: the pivot has to wait for the second cursor
+    // (doc 2 = {b, c}, doc 3 = {a, b} qualify).
+    val blocks = Seq(
+      blk(0, "a", 0, Seq(P(1, 50, 10), P(3, 5, 10))),
+      blk(0, "b", 0, Seq(P(2, 3, 10), P(3, 2, 10))),
+      blk(0, "c", 0, Seq(P(2, 4, 10))))
+    val qts = Seq(QTerm("a", 10.0), QTerm("b", 1.0), QTerm("c", 1.0))
+    assert(scored(blocks, Seq(wand(qts)), 1, avgdl = 10.0)("q").map(_._1) == Seq(1L),
+      "fixture must make the one-term doc 1 the m = 1 top-1")
+    (1 to 3).foreach { k =>
+      val want = exhaustive(blocks, wand(qts, m = 2), k, avgdl = 10.0)
+      val got = scored(blocks, Seq(wand(qts, m = 2)), k, avgdl = 10.0)("q")
+      assert(want.map(_._1) == Seq(3L, 2L).take(k), s"fixture: $want")
+      assert(got == want, s"k=$k: a doc with < m terms reached the heap: got $got want $want")
+    }
+  }
+
+  test("randomized block layouts: BoolScorer == exhaustive for 300 corpora, any m") {
+    // m in {1, 2, n}, with and without exclusions, with and without
+    // tombstones, one or two shards; every query of a corpus is scored
+    // both in one batched call and alone
     val rnd = new scala.util.Random(20260816L)
+    var nonEmpty = 0
     (1 to 300).foreach { iter =>
       val nTerms = 2 + rnd.nextInt(3)
       val terms = (0 until nTerms).map(i => s"t$i")
+      val exclTerms = Seq("x0", "x1")
       val nDocs = 3 + rnd.nextInt(20)
       val blockSize = 2 + rnd.nextInt(2)
       val avgdl = 8.0 + rnd.nextInt(5)
-      val blocks = terms.flatMap { t =>
-        val docIds = (1 to nDocs).filter(_ => rnd.nextDouble() < 0.6).map(_.toLong)
-        docIds.grouped(blockSize).zipWithIndex.map { case (ids, bi) =>
-          blk(0, t, bi, ids.map(id => P(id, 1 + rnd.nextInt(60), 5 + rnd.nextInt(10))))
+      // docId-range shards: one or two per corpus
+      val shardOf: Long => Int = if (rnd.nextBoolean()) _ => 0 else d => if (d > nDocs / 2) 1 else 0
+      val blocks = (terms ++ exclTerms).flatMap { t =>
+        val density = if (t.startsWith("x")) 0.3 else 0.6
+        val docIds = (1 to nDocs).filter(_ => rnd.nextDouble() < density).map(_.toLong)
+        docIds.groupBy(shardOf).toSeq.flatMap { case (shard, ids) =>
+          ids.sorted.grouped(blockSize).zipWithIndex.map { case (bids, bi) =>
+            blk(shard, t, bi, bids.map(id => P(id, 1 + rnd.nextInt(60), 5 + rnd.nextInt(10))))
+          }
         }
-      }.filter(_.n > 0)
-      if (blocks.nonEmpty) {
-        val qts = terms.map(t => QTerm(t, 0.5 + rnd.nextDouble() * 2.0))
-        (1 to 3).foreach { k =>
-          val want = exhaustive(blocks, qts, k, avgdl)
-          val got = wand(blocks, qts, k, avgdl)
-          assert(got == want, s"iter=$iter k=$k: got $got want $want")
+      }
+      val dead: Set[Long] =
+        if (rnd.nextBoolean()) Set.empty
+        else (1 to nDocs).filter(_ => rnd.nextDouble() < 0.15).map(_.toLong).toSet
+      val tombstones = TombstoneSet.fromIds(dead.toArray)
+      val qts = terms.map(t => QTerm(t, 0.5 + rnd.nextDouble() * 2.0))
+      val queries = for {
+        m <- Seq(1, 2, nTerms).distinct
+        excl <- Seq(Nil, exclTerms.take(1 + rnd.nextInt(2)))
+      } yield BoolQuery(s"m$m-x${excl.size}", qts, excl, m)
+      (1 to 3).foreach { k =>
+        val batch = scored(blocks, queries, k, avgdl, tombstones)
+        queries.foreach { q =>
+          val want = exhaustive(blocks, q, k, avgdl, dead)
+          assert(batch(q.qid) == want,
+            s"iter=$iter k=$k ${q.qid}: batched got ${batch(q.qid)} want $want")
+          val alone = scored(blocks, Seq(q), k, avgdl, tombstones)(q.qid)
+          assert(alone == want, s"iter=$iter k=$k ${q.qid}: alone got $alone want $want")
+          if (want.nonEmpty && q.m > 1 && q.excluded.nonEmpty) nonEmpty += 1
         }
       }
     }
+    assert(nonEmpty > 300, s"m > 1 + exclusion cases mostly empty ($nonEmpty) — vacuous")
   }
 }
