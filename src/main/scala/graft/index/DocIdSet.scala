@@ -3,16 +3,20 @@ package graft.index
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Compressed immutable set of deleted docIds — the scan-side tombstone
-  * structure (simplified roaring bitmap, the production extension SURVEY
-  * §9 names): docIds are paged on their high bits (64Ki ids per page);
-  * a page holds either a sorted `Array[Short]` of low 16-bit offsets
-  * (sparse, < [[TombstoneSet.DenseThreshold]] entries, 2 B/id) or a
-  * 8 KiB bitmap (dense, O(1) membership regardless of count). Round 4
-  * shipped the raw sorted `Array[Long]` (8 B/id), which is what capped
-  * deletes at 10M between compactions; the paged form carries the lifted
-  * [[IndexStore.TombstoneCap]] at a few hundred MB worst-case and far
-  * less on the clustered drop sets dedup actually produces.
+/** Compressed immutable set of docIds — the scorers' per-document
+  * membership structure (simplified roaring bitmap, the production
+  * extension SURVEY §9 names). It holds an index's tombstones (deleted
+  * docIds, skipped by every scorer) and a `field:value` query's
+  * allow-list (the docIds of the live docs view passing the filter; a
+  * scorer skips every doc outside it). docIds are paged on their high bits
+  * (64Ki ids per page); a page holds either a sorted `Array[Short]` of low
+  * 16-bit offsets (sparse, < [[DocIdSet.DenseThreshold]] entries, 2 B/id)
+  * or a 8 KiB bitmap (dense, O(1) membership regardless of count), so a
+  * set of N docIds costs at most ~N/8 bytes however dense. Round 4 shipped
+  * tombstones as the raw sorted `Array[Long]` (8 B/id), which is what
+  * capped deletes at 10M between compactions; the paged form carries the
+  * lifted [[IndexStore.TombstoneCap]] at a few hundred MB worst-case and
+  * far less on the clustered drop sets dedup actually produces.
   *
   * docId-range sharding means a scorer task touches only its shards' id
   * range, i.e. a contiguous run of pages — the page binary search is one
@@ -20,10 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * posting.
   *
   * Membership is the only query the scorers need; pages are built
-  * DISTRIBUTIVELY ([[TombstoneSet.fromDF]]) so loading a delete-heavy
-  * index never materializes the flat id array on the driver.
+  * DISTRIBUTIVELY ([[DocIdSet.fromDF]]) so loading a delete-heavy index,
+  * or filtering on a common field value, never materializes the flat id
+  * array on the driver.
   */
-final class TombstoneSet private (
+final class DocIdSet private (
     private val pageKeys: Array[Long],
     private val containers: Array[AnyRef],
     val size: Long
@@ -54,8 +59,8 @@ final class TombstoneSet private (
     * that outlives a session restart re-broadcasts instead of serving a
     * Broadcast of a stopped context.
     */
-  @transient private var bcCache: (String, Broadcast[TombstoneSet]) = _
-  def broadcastVia(spark: SparkSession): Broadcast[TombstoneSet] = synchronized {
+  @transient private var bcCache: (String, Broadcast[DocIdSet]) = _
+  def broadcastVia(spark: SparkSession): Broadcast[DocIdSet] = synchronized {
     val appId = spark.sparkContext.applicationId
     if (bcCache == null || bcCache._1 != appId)
       bcCache = (appId, spark.sparkContext.broadcast(this))
@@ -63,9 +68,9 @@ final class TombstoneSet private (
   }
 }
 
-object TombstoneSet {
+object DocIdSet {
 
-  val empty: TombstoneSet = new TombstoneSet(Array.emptyLongArray, Array.empty, 0L)
+  val empty: DocIdSet = new DocIdSet(Array.emptyLongArray, Array.empty, 0L)
 
   /** Sparse/dense crossover: above this a page's sorted-shorts form would
     * outgrow the 8 KiB bitmap, so the bitmap wins on both size and probe
@@ -91,13 +96,13 @@ object TombstoneSet {
     }
 
   /** Driver-side builder from an id array (tests, small sets). */
-  def fromIds(ids: Array[Long]): TombstoneSet = {
+  def fromIds(ids: Array[Long]): DocIdSet = {
     if (ids.isEmpty) return empty
     val byPage = ids.distinct.groupBy(_ >>> 16).toArray.sortBy(_._1)
     val keys = byPage.map(_._1)
     val containers: Array[AnyRef] =
       byPage.map { case (_, ps) => buildContainer(ps.map(id => (id & 0xffffL).toInt)) }
-    new TombstoneSet(keys, containers, byPage.map(_._2.length.toLong).sum)
+    new DocIdSet(keys, containers, byPage.map(_._2.length.toLong).sum)
   }
 
   /** Distributed builder: pages are grouped and compressed in executors;
@@ -107,7 +112,7 @@ object TombstoneSet {
     * Container wire format: tag byte (0 sparse / 1 dense) + payload
     * (sorted biased u16 pairs, or the 1024-long bitmap).
     */
-  def fromDF(df: DataFrame): TombstoneSet = {
+  def fromDF(df: DataFrame): DocIdSet = {
     val spark = df.sparkSession
     import spark.implicits._
     val pages: Array[(Long, Array[Byte])] = df
@@ -167,6 +172,6 @@ object TombstoneSet {
         arr
       }
     }
-    new TombstoneSet(pages.map(_._1), containers, n)
+    new DocIdSet(pages.map(_._1), containers, n)
   }
 }

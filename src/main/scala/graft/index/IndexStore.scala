@@ -671,7 +671,7 @@ object IndexStore {
 
   /** Max tombstoned docIds an index may carry between compactions,
     * enforced at delete time AND at load. The scan-side structure is the
-    * paged bitmap/sorted-shorts [[TombstoneSet]] (<= 2 B/id sparse, 8 KiB
+    * paged bitmap/sorted-shorts [[DocIdSet]] (<= 2 B/id sparse, 8 KiB
     * per dense 64Ki-id page — round 4's flat sorted Array[Long] cost
     * 8 B/id, which is why its cap sat at 10M), built distributively and
     * broadcast once per loaded index, so the cap is bounded by executor
@@ -683,7 +683,7 @@ object IndexStore {
 
   /** Above this many tombstones the live-docs anti join stops hinting a
     * broadcast of the RAW (docId) relation (8+ B/id hashed on the driver —
-    * ~80 MB here) and lets AQE plan it; the compressed TombstoneSet is
+    * ~80 MB here) and lets AQE plan it; the compressed DocIdSet is
     * unaffected (it has its own one-per-index broadcast).
     */
   val DocsAntiJoinBroadcastCap = 10000000L
@@ -1040,7 +1040,7 @@ object IndexStore {
       // scorers, built DISTRIBUTIVELY at load (the driver never holds the
       // flat 8 B/id array) and broadcast once per index per session; size
       // bounded by TombstoneCap, enforced at delete time AND at load
-      tombstoneSet: TombstoneSet
+      tombstoneSet: DocIdSet
   ) {
     def corpus: CorpusStats = CorpusStats(manifest.docCount, manifest.avgdl)
 
@@ -1098,9 +1098,9 @@ object IndexStore {
       if (m.tombstoneDirs.isEmpty) spark.emptyDataset[Long].toDF("docId")
       else m.tombstoneDirs.map(d => spark.read.parquet(s"$dir/$d"))
         .reduce(_.unionByName(_))
-    val tombstoneSet: TombstoneSet =
-      if (m.tombstoneDirs.isEmpty) TombstoneSet.empty
-      else TombstoneSet.fromDF(tombstones)
+    val tombstoneSet: DocIdSet =
+      if (m.tombstoneDirs.isEmpty) DocIdSet.empty
+      else DocIdSet.fromDF(tombstones)
     // deleteDocs enforces the cap at write time, but a manifest written by
     // another writer (or a future engine version) could exceed it: refuse
     // here too rather than silently stressing every query's broadcast
@@ -1113,7 +1113,7 @@ object IndexStore {
     // (~80 MB) the join degrades to a plain (AQE-planned) anti join
     // instead of re-creating the driver-stress scenario the old 10M
     // TombstoneCap existed to refuse — the 100M cap is only safe for the
-    // COMPRESSED TombstoneSet, not for this relation
+    // COMPRESSED DocIdSet, not for this relation
     val docs =
       if (tombstoneSet.isEmpty) rawDocs
       else if (tombstoneSet.size <= DocsAntiJoinBroadcastCap)

@@ -73,8 +73,9 @@ object Relational {
 
     // J5: multi-key equi-join (calculate_fwci.py:90). The two aggregates
     // are already co-partitioned on the join key, so the join needs no
-    // exchange. Unhinted, AQE broadcast one aggregate (a BroadcastHashJoin,
-    // plans/r06/j5_multikey_before.txt): it collected that side to the
+    // exchange. Unhinted, AQE broadcast one aggregate (the physical plan
+    // read `BroadcastHashJoin Inner BuildRight` over the two
+    // HashAggregates): it collected that side to the
     // driver and shipped it back to every task, and at scale an aggregate
     // of (partkey, suppkey) pairs outgrows the broadcast threshold.
     // SHUFFLE_HASH joins the co-partitioned sides in place, one hash

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Analyzer
-import graft.index.{Codec, IndexBuilder, TombstoneSet}
+import graft.index.{Codec, IndexBuilder, DocIdSet}
 import graft.model._
 
 /** Top-k BM25 query engine. Two exact, rank-identical paths:
@@ -14,11 +14,14 @@ import graft.model._
   *     fold), fully inside whole-stage codegen. This is the semantic
   *     baseline every optimized path must match (SURVEY.md §7.3 step 3).
   *
-  *   - `wandTopK` (and every other term-only query: AND, m-of-n,
-  *     exclusions, batches): block-max WAND over the encoded posting
-  *     blocks in a typed mapPartitions, one document-at-a-time scorer
-  *     ([[QueryEngine.BoolScorer]]) per docId-range shard, per-shard
-  *     top-k heap, then a global
+  *   - `wandTopK` (and every other ranked query: AND, m-of-n,
+  *     exclusions, wildcards, phrase filters, `field:value` filters,
+  *     batches): block-max WAND over the encoded posting blocks in a typed
+  *     mapPartitions, one document-at-a-time scorer
+  *     ([[QueryEngine.BoolScorer]]) per docId-range shard whose pivot doc
+  *     passes per-document checks (tombstones, field allow-list,
+  *     exclusions, then phrase positions — Lucene's two-phase iteration),
+  *     per-shard top-k heap, then a global
   *     orderBy(score desc, docId asc).limit(k) (Spark plans it as
   *     TakeOrderedAndProject, like the reference's final
   *     orderBy/limit, /root/reference/data_processing/Lexical_indexing/
@@ -94,38 +97,54 @@ object QueryEngine {
       .orderBy(col("score").desc, col("docId").asc)
   }
 
-  // ---------------------------------------------------- term-only scoring
+  // ---------------------------------------------------------- BM25 scoring
 
   /** Query-term state passed to executors: weight = qtf * idf. */
   private[query] final case class QTerm(term: String, weight: Double)
 
-  /** One term-only query as the shard scorer sees it: `terms` sorted by
-    * term (the pinned ascending summation order), `excluded` the
-    * exclusion terms that have postings, `m` how many of `terms` a
-    * document must contain.
+  /** A quoted phrase as the scorer checks it: analyzed tokens in order,
+    * duplicates kept, and the slop.
+    */
+  private[query] type Phrase = (Seq[String], Int)
+
+  /** One ranked query as the shard scorer sees it: `terms` sorted by term
+    * (the pinned ascending summation order), `excluded` the exclusion
+    * terms that have postings, `m` how many of `terms` a document must
+    * contain, `phrases` the phrases it must hold (every phrase word is one
+    * of `terms`), `allow` the docIds its `field:value` filters keep (None:
+    * no filter).
     */
   private[query] final case class BoolQuery(qid: String, terms: Seq[QTerm],
-      excluded: Seq[String], m: Int)
+      excluded: Seq[String], m: Int, phrases: Seq[Phrase] = Nil,
+      allow: Option[DocIdSet] = None)
 
-  /** A term-only query before the idf lookup: (qid, positive (term, qtf)
-    * pairs, excluded terms, m).
+  /** A ranked query before the idf lookup: positive (term, qtf) pairs,
+    * the rest as in [[BoolQuery]].
     */
-  private type TermQuery = (String, Seq[(String, Int)], Seq[String], Int)
+  private final case class TermQuery(qid: String, terms: Seq[(String, Int)],
+      excluded: Seq[String], m: Int, phrases: Seq[Phrase] = Nil,
+      allow: Option[DocIdSet] = None)
 
-  /** Blocks with the positions column replaced by an empty literal: the
-    * typed Dataset[PostingBlock] deserializer would otherwise force the
-    * parquet scan to read the phrase-only positions bytes on every BM25
-    * query of a positional index (asserted away in PlanSpec).
+  /** Blocks with the positions column blanked on every row but
+    * `phraseWords`': the typed Dataset[PostingBlock] deserializer would
+    * otherwise force the parquet scan to read the phrase-only positions
+    * bytes on every BM25 query of a positional index (asserted away in
+    * PlanSpec), and a phrase query ships through the exchange only the
+    * positions its positional check can read.
     */
-  private def scoringBlocks(blocks: Dataset[PostingBlock]): Dataset[PostingBlock] = {
+  private def scoringBlocks(blocks: Dataset[PostingBlock],
+      phraseWords: Seq[String] = Nil): Dataset[PostingBlock] = {
     import blocks.sparkSession.implicits._
+    val none = typedLit(Array.emptyByteArray)
     blocks.toDF()
-      .withColumn("positions", typedLit(Array.emptyByteArray))
+      .withColumn("positions",
+        if (phraseWords.isEmpty) none
+        else when($"term".isin(phraseWords: _*), $"positions").otherwise(none))
       .as[PostingBlock]
   }
 
   /** Per-shard top-k candidates (qid, docId, score) of a whole batch of
-    * term-only queries: one collect of the query terms' idfs, then ONE
+    * ranked queries: one collect of the query terms' idfs, then ONE
     * term-pushed block scan exchanged on shardId and scored by
     * [[BoolScorer]] — the block scan and the per-shard block decodes are
     * shared by every query. None when no query can match.
@@ -133,7 +152,8 @@ object QueryEngine {
     * A term without postings matches nowhere: it drops out, and a query
     * left with fewer than m terms matches nothing (so one absent required
     * term empties an AND); an excluded term without postings excludes
-    * nothing.
+    * nothing. A phrase word without postings, an all-stopword phrase or
+    * an empty allow-list empties its query.
     */
   private def termCandidates(
       spark: SparkSession,
@@ -143,22 +163,27 @@ object QueryEngine {
       queries: Seq[TermQuery],
       k: Int,
       cfg: IndexBuilder.Config,
-      tombstones: TombstoneSet
+      tombstones: DocIdSet
   ): Option[DataFrame] = {
     import spark.implicits._
     // fewer distinct terms than m can never match: no idf collect for them
-    val satisfiable = queries.filter { case (_, pos, _, m) => pos.nonEmpty && pos.size >= m }
-    val names = satisfiable.flatMap { case (_, pos, excl, _) => pos.map(_._1) ++ excl }.distinct
+    val satisfiable = queries.filter(q => q.terms.nonEmpty && q.terms.size >= q.m &&
+      q.phrases.forall(_._1.nonEmpty) && q.allow.forall(_.nonEmpty))
+    val names = satisfiable.flatMap(q => q.terms.map(_._1) ++ q.excluded).distinct
     if (names.isEmpty) return None
     val idfs: Map[String, Double] = termStats
       .filter($"term".isin(names: _*))
       .collect().map(t => t.term -> t.idf).toMap
-    val live = satisfiable.flatMap { case (qid, pos, excl, m) =>
-      val qts = pos.collect {
+    val live = satisfiable.flatMap { q =>
+      val qts = q.terms.collect {
         case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
       }.sortBy(_.term)
-      if (qts.size < m) None
-      else Some(BoolQuery(qid, qts, excl.filter(idfs.contains), m))
+      // a phrase match holds every distinct phrase word, each a positive
+      // term: the count condition rises to max(m, |words|) and stays exact
+      val words = q.phrases.flatMap(_._1).distinct
+      if (qts.size < q.m || !words.forall(w => qts.exists(_.term == w))) None
+      else Some(BoolQuery(q.qid, qts, q.excluded.filter(idfs.contains),
+        math.max(q.m, words.size), q.phrases, q.allow))
     }
     if (live.isEmpty) return None
     val scanNames = live.flatMap(q => q.terms.map(_.term) ++ q.excluded).distinct
@@ -173,7 +198,7 @@ object QueryEngine {
     // blocks together without a RangePartitioner's extra sampling job
     val parts = math.max(1, math.min(cfg.numShards,
       spark.sparkContext.defaultParallelism))
-    Some(scoringBlocks(blocks)
+    Some(scoringBlocks(blocks, live.flatMap(_.phrases.flatMap(_._1)).distinct)
       .filter($"term".isin(scanNames: _*))
       .repartition(parts, $"shardId")
       .sortWithinPartitions($"shardId", $"term", $"minDocId")
@@ -185,7 +210,8 @@ object QueryEngine {
   }
 
   /** The docIds of every posting of `terms`, decoded in-plan from the
-    * term-pushed block scan — the build side of an exclusion anti-join.
+    * term-pushed block scan — the build side of the filter-only path's
+    * exclusion anti-join.
     */
   private def docsWithTerms(blocks: Dataset[PostingBlock], terms: Seq[String]): DataFrame =
     scoringBlocks(blocks).toDF()
@@ -193,28 +219,27 @@ object QueryEngine {
       .select(explode(graft.plans.DecodeBlock(col("payload"), col("n"))).as("pp"))
       .select(col("pp.docId").as("docId"))
 
-  /** One term-only query, finished by a global
+  /** One ranked query, finished by a global
     * orderBy(score desc, docId asc).limit(k) (TakeOrderedAndProject).
     */
   private def termTopK(spark: SparkSession, blocks: Dataset[PostingBlock],
-      termStats: Dataset[TermStat], corpus: CorpusStats, terms: Seq[(String, Int)],
-      excluded: Seq[String], m: Int, k: Int, cfg: IndexBuilder.Config,
-      tombstones: TombstoneSet): DataFrame =
-    termCandidates(spark, blocks, termStats, corpus, Seq(("", terms, excluded, m)), k,
-      cfg, tombstones).fold(emptyScores(spark))(
-      _.select(col("docId"), col("score"))
-        .orderBy(col("score").desc, col("docId").asc).limit(k))
+      termStats: Dataset[TermStat], corpus: CorpusStats, query: TermQuery, k: Int,
+      cfg: IndexBuilder.Config, tombstones: DocIdSet): DataFrame =
+    termCandidates(spark, blocks, termStats, corpus, Seq(query), k, cfg, tombstones)
+      .fold(emptyScores(spark))(
+        _.select(col("docId"), col("score"))
+          .orderBy(col("score").desc, col("docId").asc).limit(k))
 
-  /** A batch of term-only queries, finished by a per-qid window top-k. */
+  /** A batch of ranked queries, finished by a per-qid window top-k. */
   private def termTopKBatch(spark: SparkSession, blocks: Dataset[PostingBlock],
       termStats: Dataset[TermStat], corpus: CorpusStats,
       queries: Seq[TermQuery], k: Int, cfg: IndexBuilder.Config,
-      tombstones: TombstoneSet): DataFrame = {
+      tombstones: DocIdSet): DataFrame = {
     import spark.implicits._
     // a duplicated qid would merge two queries' candidates in the per-qid
     // window finish — reject instead of silently corrupting the top-k
-    require(queries.map(_._1).distinct.size == queries.size,
-      s"duplicate qids in batch: ${queries.map(_._1)}")
+    require(queries.map(_.qid).distinct.size == queries.size,
+      s"duplicate qids in batch: ${queries.map(_.qid)}")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("score").desc, col("docId").asc)
     termCandidates(spark, blocks, termStats, corpus, queries, k, cfg, tombstones)
@@ -243,10 +268,10 @@ object QueryEngine {
       query: String,
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty
+      tombstones: DocIdSet = DocIdSet.empty
   ): DataFrame =
-    termTopK(spark, blocks, termStats, corpus, Analyzer.analyzeQuery(query, cfg.analyzer),
-      Nil, 1, k, cfg, tombstones)
+    termTopK(spark, blocks, termStats, corpus,
+      TermQuery("", Analyzer.analyzeQuery(query, cfg.analyzer), Nil, 1), k, cfg, tombstones)
 
   /** Multi-query WAND: scores a whole query batch in ONE Spark job,
     * amortizing the per-job scheduler floor (BASELINE.md measured p50
@@ -266,35 +291,124 @@ object QueryEngine {
       queries: Seq[(String, String)],
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty
+      tombstones: DocIdSet = DocIdSet.empty
   ): DataFrame =
     termTopKBatch(spark, blocks, termStats, corpus, queries.map { case (qid, q) =>
-      (qid, Analyzer.analyzeQuery(q, cfg.analyzer), Nil, 1)
+      TermQuery(qid, Analyzer.analyzeQuery(q, cfg.analyzer), Nil, 1)
     }, k, cfg, tombstones)
 
   // --------------------------------------------------- shared scorer glue
 
-  /** Consume ONE shard group from a (shardId, term, minDocId)-sorted block
-    * stream: every block of the head shard, keyed by term. The single
-    * definition behind both block scorers ([[BoolScorer]] and
+  /** ONE shard group consumed from a (shardId, term, minDocId)-sorted
+    * block stream: every block of the head shard, keyed by term and
+    * docId-sorted, with per-shard decode memos — a block read by several
+    * queries, or by a query's terms and its phrases, decodes once, and a
+    * block's positions decode only when a positional check asks. The
+    * single definition behind both block scorers ([[BoolScorer]] and
     * [[PhraseScorer]]) — a shard-grouping fix lands everywhere at once.
     */
-  private[query] def nextShardGroup(
-      it: BufferedIterator[PostingBlock]
-  ): scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[PostingBlock]] = {
-    val shard = it.head.shardId
-    val byTerm = scala.collection.mutable.LinkedHashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[PostingBlock]]
-    while (it.hasNext && it.head.shardId == shard) {
-      val blk = it.next()
-      byTerm.getOrElseUpdate(blk.term, scala.collection.mutable.ArrayBuffer.empty) += blk
+  private[query] final class Shard(it: BufferedIterator[PostingBlock]) {
+    private val byTerm: Map[String, Array[PostingBlock]] = {
+      val shard = it.head.shardId
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[String, scala.collection.mutable.ArrayBuffer[PostingBlock]]
+      while (it.hasNext && it.head.shardId == shard) {
+        val blk = it.next()
+        acc.getOrElseUpdate(blk.term, scala.collection.mutable.ArrayBuffer.empty) += blk
+      }
+      acc.iterator.map { case (t, bs) => t -> bs.sortBy(_.minDocId).toArray }.toMap
     }
-    byTerm
+    // keyed by (term, minDocId): blockIdx is NOT unique within a
+    // (shard, term) after an incremental append (delta blocks restart at
+    // 0); minDocId is, because block docId ranges are disjoint
+    private val docs = scala.collection.mutable.HashMap.empty[(String, Long), Array[Codec.P]]
+    private val poss = scala.collection.mutable.HashMap.empty[(String, Long), Array[Array[Int]]]
+
+    def has(term: String): Boolean = byTerm.contains(term)
+
+    def cursor(term: String, weight: Double, k1: Double, b: Double, avgdl: Double): Cursor =
+      new Cursor(weight, byTerm(term), k1, b, avgdl, this)
+
+    def decode(blk: PostingBlock): Array[Codec.P] =
+      docs.getOrElseUpdate((blk.term, blk.minDocId), Codec.decode(blk.payload, blk.n))
+
+    def positions(blk: PostingBlock): Array[Array[Int]] =
+      poss.getOrElseUpdate((blk.term, blk.minDocId), {
+        if (blk.positions.isEmpty && blk.sumTf > 0)
+          throw new IllegalStateException(
+            "phrase query requires a positional index (build with storePositions = true)")
+        Codec.decodePositions(blk.positions, decode(blk).map(_.tf))
+      })
+  }
+
+  /** A cursor over one term's docId-sorted, non-overlapping blocks in one
+    * shard — the one posting-list cursor of every scorer.
+    */
+  private[query] final class Cursor(weight: Double, blocks: Array[PostingBlock],
+      k1: Double, b: Double, avgdl: Double, shard: Shard) {
+    // Upper bounds derive from (maxTf, minDl) with the CURRENT corpus
+    // avgdl: partial() is monotone up in tf, down in dl, so this bounds
+    // every posting even after incremental appends moved avgdl.
+    private def blockUb(i: Int): Double =
+      weight * graft.index.IndexBuilder.partial(
+        blocks(i).maxTf, blocks(i).minDl, k1, b, avgdl)
+    val globalUb: Double = {
+      var m = 0.0
+      var i = 0
+      while (i < blocks.length) { val u = blockUb(i); if (u > m) m = u; i += 1 }
+      m
+    }
+    private var bi = 0
+    private var decoded: Array[Codec.P] = shard.decode(blocks(0))
+    private var poss: Array[Array[Int]] = _ // the current block's, once asked
+    private var pi = 0
+    var exhausted: Boolean = false
+
+    def curDoc: Long = decoded(pi).docId
+    def curDl: Int = decoded(pi).dl
+    def curBlockUb: Double = blockUb(bi)
+
+    /** The current posting's positions (a positional index's only). */
+    def curPositions: Array[Int] = {
+      if (poss == null) poss = shard.positions(blocks(bi))
+      poss(pi)
+    }
+
+    def currentContribution(): Double =
+      weight * Bm25.partial(decoded(pi).tf, decoded(pi).dl, k1, b, avgdl)
+
+    def advance(): Unit = {
+      pi += 1
+      if (pi >= decoded.length) load(bi + 1)
+    }
+
+    /** Skip forward to the first posting with docId >= target. Whole
+      * blocks are skipped on maxDocId metadata alone — only the landing
+      * block is decoded.
+      */
+    def advanceTo(target: Long): Unit = {
+      if (exhausted) return
+      if (blocks(bi).maxDocId < target) {
+        var nb = bi + 1
+        while (nb < blocks.length && blocks(nb).maxDocId < target) nb += 1
+        load(nb)
+        if (exhausted) return
+      }
+      while (decoded(pi).docId < target) pi += 1 // maxDocId bound => terminates
+    }
+
+    private def load(nb: Int): Unit = {
+      bi = nb
+      pi = 0
+      poss = null
+      if (bi >= blocks.length) { exhausted = true; decoded = null }
+      else decoded = shard.decode(blocks(bi))
+    }
   }
 
   /** Bounded top-k accumulator under the global tie-break (score desc,
     * docId asc): the evictable worst entry is the smallest score, ties
-    * broken toward the larger docId. [[BoolScorer]] serves every term-only
+    * broken toward the larger docId. [[BoolScorer]] serves every ranked
     * query with it, so the ranking contract has exactly one definition.
     */
   private[query] final class TopKHeap(k: Int) {
@@ -360,12 +474,12 @@ object QueryEngine {
       query: String,
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty
+      tombstones: DocIdSet = DocIdSet.empty
   ): DataFrame = {
     val (posText, negRaw) = parseBoolean(query)
     val analyzed = Analyzer.analyzeQuery(posText, cfg.analyzer)
-    termTopK(spark, blocks, termStats, corpus, analyzed, exclusionTerms(negRaw, cfg),
-      analyzed.size, k, cfg, tombstones)
+    termTopK(spark, blocks, termStats, corpus,
+      TermQuery("", analyzed, exclusionTerms(negRaw, cfg), analyzed.size), k, cfg, tombstones)
   }
 
   /** Shared by [[prefixTopK]] and its oracle builder: wildcard tokens
@@ -447,12 +561,12 @@ object QueryEngine {
       query: String,
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty
+      tombstones: DocIdSet = DocIdSet.empty
   ): DataFrame = {
     val (literal, prefixes) = parsePrefixQuery(query, cfg)
     val byStem = expandStems(spark, termStats, prefixes.map(_._1))
-    termTopK(spark, blocks, termStats, corpus, mergeQtf(literal ++ expand(prefixes, byStem)),
-      Nil, 1, k, cfg, tombstones)
+    termTopK(spark, blocks, termStats, corpus,
+      TermQuery("", mergeQtf(literal ++ expand(prefixes, byStem)), Nil, 1), k, cfg, tombstones)
   }
 
   /** One weight per distinct term, in ascending term order: a term typed
@@ -484,12 +598,13 @@ object QueryEngine {
       m: Int,
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty,
+      tombstones: DocIdSet = DocIdSet.empty,
       excluded: Seq[String] = Nil
   ): DataFrame = {
     require(m >= 1, s"minimumShouldMatch must be >= 1, got $m")
-    termTopK(spark, blocks, termStats, corpus, Analyzer.analyzeQuery(query, cfg.analyzer),
-      exclusionTerms(excluded, cfg), m, k, cfg, tombstones)
+    termTopK(spark, blocks, termStats, corpus, TermQuery("",
+      Analyzer.analyzeQuery(query, cfg.analyzer), exclusionTerms(excluded, cfg), m), k, cfg,
+      tombstones)
   }
 
   // ------------------------------------------------- unified search box
@@ -569,26 +684,27 @@ object QueryEngine {
     *
     * Routing (each single-feature query is property-tested identical to
     * its dedicated API in SearchSpec):
-    *   - terms only (any m, -term)   → one [[BoolScorer]] job: m = 1 is
-    *                                   [[wandTopK]], m = n [[conjunctiveTopK]],
-    *                                   1<m<n [[minShouldMatchTopK]]
-    *   - `tok*` anywhere             → dictionary expansion (one capped,
-    *                                   predicate-pushed scan) into the rest
     *   - lone `"phrase"~s`           → [[phraseTopK]]
-    *   - `"phrase"` + free terms     → [[phraseFilterRank]]
-    *   - any other mix               → [[composedTopK]] (phrase survivors
-    *                                   semi-join-prune the term postings;
-    *                                   exclusions anti-join; msm on the
-    *                                   per-doc distinct-match count)
-    *   - `field:value` anywhere      → filter-then-rank through
-    *                                   [[composedTopK]]: the doc metadata
-    *                                   relation (`docs`, REQUIRED then) is
-    *                                   filtered on the named columns —
-    *                                   predicate pushed to its parquet —
-    *                                   and doc-level-prunes the candidates.
-    *                                   Stats stay corpus-wide (Lucene
-    *                                   filter semantics, not a sub-corpus
-    *                                   rebuild).
+    *   - `field:value` + `-term`s    → match-all under the filter: constant
+    *     only (no positive intent)     score 0, docId order, the excluded
+    *                                   terms' docs anti-joined
+    *   - everything else             → one [[BoolScorer]] job over the
+    *                                   positive terms: m = 1 is [[wandTopK]],
+    *                                   m = n [[conjunctiveTopK]], 1<m<n
+    *                                   [[minShouldMatchTopK]]; `tok*`
+    *                                   expands first (one capped,
+    *                                   predicate-pushed dictionary scan);
+    *                                   a quoted phrase (any slop) is a
+    *                                   per-document positional check at the
+    *                                   pivot ([[phraseFilterRank]] for one
+    *                                   phrase + free terms); `field:value`
+    *                                   filters the live docs view
+    *                                   (`docs`, REQUIRED then; predicate
+    *                                   pushed to its parquet) into a
+    *                                   [[DocIdSet]] allow-list the pivot
+    *                                   doc must be in. Stats stay
+    *                                   corpus-wide (Lucene filter
+    *                                   semantics, not a sub-corpus rebuild).
     * Every route is bounded by the query terms' postings — never a corpus
     * scan — and the same plan shapes the dedicated APIs are plan-asserted
     * to have.
@@ -607,72 +723,44 @@ object QueryEngine {
       k: Int,
       minShouldMatch: Int = 1,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty,
+      tombstones: DocIdSet = DocIdSet.empty,
       docs: Option[DataFrame] = None
   ): DataFrame = {
     require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
     val pq = resolveFields(query, docs)
-    val fieldFilter: Option[DataFrame] = if (pq.fields.isEmpty) None else {
-      val d = docs.get
-      Some(pq.fields.foldLeft(d) { case (acc, (f, v)) => acc.filter(col(f) === v) }
-        .select(col("docId")))
-    }
-    val positive = positiveTerms(pq,
-      expandStems(spark, termStats, prefixStems(pq).map(_._1)), cfg)
     val excl = exclusionTerms(pq.excluded, cfg)
-    val m = minShouldMatch
-    // a filter-only query ('role:user', no scoring terms) is a match-all
-    // under the filter: constant score 0, docId order — Lucene's
-    // MatchAllDocsQuery + filter shape, not an empty result. '-term'
-    // exclusions still apply ('role:user -spark' = the user turns that
-    // don't contain spark), as a doc-level anti-join on the excluded
-    // terms' postings. Match-all fires only when the user typed NO
-    // positive intent at all: a wildcard that expanded to zero dictionary
-    // terms ('role:user zzz*') matches nothing, like Lucene — it must not
-    // silently widen to every filtered doc (ADVICE r5).
-    if (positive.isEmpty && fieldFilter.nonEmpty && pq.phrases.isEmpty &&
-        pq.prefixes.isEmpty) {
+    if (filterOnly(pq, cfg)) {
       import spark.implicits._
-      val base = fieldFilter.get
+      val base = fieldFilter(pq.fields, docs.get)
       val filtered =
         if (excl.isEmpty) base
         else base.join(docsWithTerms(blocks, excl), Seq("docId"), "left_anti")
       return filtered.select($"docId", lit(0.0).as("score"))
         .orderBy($"docId".asc).limit(k)
     }
+    val byStem = expandStems(spark, termStats, prefixStems(pq).map(_._1))
+    val q = termQuery("", pq, byStem, minShouldMatch, cfg, docs)
     // more required matches than distinct positive terms is unsatisfiable
-    if (positive.isEmpty || m > positive.size) return emptyScores(spark)
-
-    if (fieldFilter.nonEmpty) {
-      composedTopK(spark, blocks, termStats, corpus, positive, pq.phrases, excl,
-        m, k, cfg, tombstones, fieldFilter)
-    } else if (pq.phrases.isEmpty) {
-      termTopK(spark, blocks, termStats, corpus, positive, excl, m, k, cfg, tombstones)
-    } else if (pq.phrases.size == 1 && pq.free.isEmpty && pq.prefixes.isEmpty &&
-        excl.isEmpty) {
+    if (q.terms.isEmpty || minShouldMatch > q.terms.size) emptyScores(spark)
+    else if (lonePhrase(pq, excl)) {
       // a phrase match contains every phrase word, so any satisfiable m is
       // already met — scoring is the phrase-as-one-term PhraseQuery shape
       phraseTopK(spark, blocks, corpus, pq.phrases.head._1, k, cfg,
         pq.phrases.head._2, tombstones)
-    } else if (pq.phrases.size == 1 && pq.phrases.head._2 == 0 &&
-        pq.prefixes.isEmpty && excl.isEmpty && m == 1) {
-      phraseFilterRank(spark, blocks, termStats, corpus, pq.free.mkString(" "),
-        pq.phrases.head._1, k, cfg, tombstones)
-    } else {
-      composedTopK(spark, blocks, termStats, corpus, positive, pq.phrases, excl,
-        m, k, cfg, tombstones)
-    }
+    } else termTopK(spark, blocks, termStats, corpus, q, k, cfg, tombstones)
   }
 
   /** Batched unified search — a whole request batch through the one
-    * search-box grammar in as few jobs as possible: every query without
-    * phrases or field filters — any `minShouldMatch`, exclusions and
-    * wildcards included (every query's stems expand in ONE dictionary
-    * scan) — scores in a single shared [[BoolScorer]] job (shared block
-    * scan + per-shard decode memo, the measured ~3× amortization of the
-    * per-job scheduler floor); the rest run their routed plans and union
-    * in. Returns (qid, docId, score), per-qid top-k, each qid identical to
-    * a [[search]] call with the same text (property-tested).
+    * search-box grammar in as few jobs as possible: every query but a lone
+    * phrase and a filter-only query — any `minShouldMatch`, exclusions,
+    * wildcards (every query's stems expand in ONE dictionary scan),
+    * phrases and field filters included — scores in a single shared
+    * [[BoolScorer]] job (shared block scan + per-shard decode memo, the
+    * measured ~3× amortization of the per-job scheduler floor); a field
+    * query adds its allow-list job, and the two excepted kinds run their
+    * [[search]] plans and union in. Returns (qid, docId, score), per-qid
+    * top-k, each qid identical to a [[search]] call with the same text
+    * (property-tested).
     *
     * `minShouldMatch` applies to every query in the batch (callers with
     * per-query msm issue those queries separately).
@@ -686,7 +774,7 @@ object QueryEngine {
       k: Int,
       minShouldMatch: Int = 1,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty,
+      tombstones: DocIdSet = DocIdSet.empty,
       docs: Option[DataFrame] = None
   ): DataFrame = {
     import spark.implicits._
@@ -696,16 +784,14 @@ object QueryEngine {
     require(queries.map(_._1).distinct.size == queries.size,
       s"duplicate qids in batch: ${queries.map(_._1)}")
     val parsed = queries.map { case (qid, q) => (qid, q, resolveFields(q, docs)) }
-    val (termOnly, other) = parsed.partition { case (_, _, pq) =>
-      pq.phrases.isEmpty && pq.fields.isEmpty
+    val (other, ranked) = parsed.partition { case (_, _, pq) =>
+      filterOnly(pq, cfg) || lonePhrase(pq, exclusionTerms(pq.excluded, cfg))
     }
     val byStem = expandStems(spark, termStats,
-      termOnly.flatMap { case (_, _, pq) => prefixStems(pq).map(_._1) })
+      ranked.flatMap { case (_, _, pq) => prefixStems(pq).map(_._1) })
     val batched = termTopKBatch(spark, blocks, termStats, corpus,
-      termOnly.map { case (qid, _, pq) =>
-        (qid, positiveTerms(pq, byStem, cfg), exclusionTerms(pq.excluded, cfg),
-          minShouldMatch)
-      }, k, cfg, tombstones)
+      ranked.map { case (qid, _, pq) => termQuery(qid, pq, byStem, minShouldMatch, cfg, docs) },
+      k, cfg, tombstones)
     other.foldLeft(batched) { case (acc, (qid, q, _)) =>
       acc.unionByName(
         search(spark, blocks, termStats, corpus, q, k, minShouldMatch, cfg,
@@ -735,6 +821,52 @@ object QueryEngine {
     pq.copy(free = pq.free ++ stray.map { case (f, v) => s"$f $v" }, fields = known)
   }
 
+  /** A filter-only query ('role:user', no scoring terms) is a match-all
+    * under the filter: constant score 0, docId order — Lucene's
+    * MatchAllDocsQuery + filter shape, not an empty result. '-term'
+    * exclusions still apply ('role:user -spark' = the user turns that
+    * don't contain spark). Match-all fires only when the user typed NO
+    * positive intent at all: a wildcard that expands to zero dictionary
+    * terms ('role:user zzz*') matches nothing, like Lucene — it must not
+    * silently widen to every filtered doc (ADVICE r5).
+    */
+  private def filterOnly(pq: ParsedQuery, cfg: IndexBuilder.Config): Boolean =
+    pq.fields.nonEmpty && pq.phrases.isEmpty && pq.prefixes.isEmpty &&
+      Analyzer.analyzeQuery(pq.free.mkString(" "), cfg.analyzer).isEmpty
+
+  /** A lone quoted phrase (nothing else in the box) keeps PhraseQuery
+    * scoring ([[phraseTopK]]).
+    */
+  private def lonePhrase(pq: ParsedQuery, excl: Seq[String]): Boolean =
+    pq.phrases.size == 1 && pq.free.isEmpty && pq.prefixes.isEmpty &&
+      pq.fields.isEmpty && excl.isEmpty
+
+  /** The docIds of the live docs view that pass every `field:value`
+    * filter, the predicates pushed to the docs parquet — the match-all
+    * path's rows and the ranked path's allow-list.
+    */
+  private[graft] def fieldFilter(fields: Seq[(String, String)], docs: DataFrame): DataFrame =
+    fields.foldLeft(docs) { case (acc, (f, v)) => acc.filter(col(f) === v) }
+      .select(col("docId"))
+
+  /** A parsed query as the scorer takes it. The allow-list is collected
+    * (one distributed [[DocIdSet.fromDF]] job) only for a query that can
+    * match; an unsatisfiable one gets an empty list.
+    */
+  private def termQuery(qid: String, pq: ParsedQuery, byStem: Map[String, Seq[String]],
+      m: Int, cfg: IndexBuilder.Config, docs: Option[DataFrame]): TermQuery = {
+    val positive = positiveTerms(pq, byStem, cfg)
+    val phrases = pq.phrases.map { case (ph, slop) =>
+      (Analyzer.tokenize(ph, cfg.analyzer), slop) // order + duplicates matter
+    }
+    val allow =
+      if (pq.fields.isEmpty) None
+      else if (positive.isEmpty || positive.size < m || phrases.exists(_._1.isEmpty))
+        Some(DocIdSet.empty)
+      else Some(DocIdSet.fromDF(fieldFilter(pq.fields, docs.get)))
+    TermQuery(qid, positive, exclusionTerms(pq.excluded, cfg), m, phrases, allow)
+  }
+
   /** A parsed query's analyzed wildcard stems with their occurrence counts. */
   private def prefixStems(pq: ParsedQuery): Seq[(String, Int)] =
     analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
@@ -747,117 +879,6 @@ object QueryEngine {
       cfg: IndexBuilder.Config): Seq[(String, Int)] =
     mergeQtf(Analyzer.analyzeQuery((pq.free ++ pq.phrases.map(_._1)).mkString(" "),
       cfg.analyzer) ++ expand(prefixStems(pq), byStem))
-
-  /** The general composed query: every phrase is a filter, exclusions drop
-    * candidates, minimum-should-match gates on the per-doc distinct-match
-    * count, and ranking is the BM25 fold over the positive terms — the
-    * [[phraseFilterRank]] plan generalized.
-    *
-    * Scale shape: each phrase's survivor relation is bounded by its rarest
-    * term and semi-join-prunes the decoded postings (broadcast when that
-    * rarest term's dictionary df — a proven upper bound on the survivor
-    * count, fetched in the same collect as the idfs — fits the cap, else
-    * shuffle); exclusions are a
-    * doc-level anti-join against the excluded terms' postings; everything
-    * sits on the term-pushed block scan. Tombstones are enforced by the
-    * positional matcher inside every phrase filter, or — on the fielded
-    * path — by `docFilter` being derived from the LIVE docs view; every
-    * call has at least one of the two, so no candidate needs a second
-    * check.
-    *
-    * @param docFilter optional doc-level survivor relation (docId) — the
-    *        `field:value` filter-then-rank path. Joined as a plain (AQE-
-    *        adaptive) semi-join, never an unconditional broadcast: a field
-    *        predicate like role:user keeps a constant FRACTION of the
-    *        corpus, unlike a phrase's rarest-term-bounded survivor set.
-    */
-  private[graft] def composedTopK(
-      spark: SparkSession,
-      blocks: Dataset[PostingBlock],
-      termStats: Dataset[TermStat],
-      corpus: CorpusStats,
-      positive: Seq[(String, Int)],
-      phrases: Seq[(String, Int)],
-      excluded: Seq[String],
-      m: Int,
-      k: Int,
-      cfg: IndexBuilder.Config,
-      tombstones: TombstoneSet,
-      docFilter: Option[DataFrame] = None
-  ): DataFrame = {
-    import spark.implicits._
-    require(phrases.nonEmpty || docFilter.nonEmpty,
-      "composedTopK needs a phrase or a doc filter (tombstone enforcement)")
-    if (positive.isEmpty) return emptyScores(spark)
-    // every phrase must analyze to something or the result is empty
-    // (resolve ALL the lazy relations before doing any work — ADVICE r5)
-    val lazySets = phrases.map { case (ph, slop) =>
-      phraseMatches(spark, blocks, ph, cfg, slop, tombstones)
-    }
-    if (lazySets.exists(_.isEmpty)) return emptyScores(spark)
-    val matchSets = lazySets.map(_.get)
-    // ONE stats collect serves the scoring weights AND the join-strategy
-    // gate: a phrase's survivor count is bounded by its rarest term's df
-    // (every match contains every phrase term), so the dictionary df
-    // replaces the round-5 persist + count() probe — the same
-    // driver-safety bound on the broadcast with one fewer eager action
-    // per phrase, and the match relation now has a single consumer inside
-    // the scoring job (no session-cache footprint at all). Slightly more
-    // conservative than the measured count in one corner — min-df > cap
-    // with an actual survivor set under it takes the shuffle join — which
-    // only ever trades a broadcast for the AQE-planned join, never the
-    // reverse. Without the count there is no zero-survivor early exit
-    // either: a phrase whose terms are all in the dictionary but which
-    // matches no document still runs the scoring job, which returns empty
-    // through the empty semi-join (a cost corner, never a wrong answer).
-    // The big decoded-postings side still never shuffles on the
-    // broadcast path (guide §1.2 step 1 / §3.1).
-    val phraseToks = phrases.map { case (ph, _) =>
-      Analyzer.tokenize(ph, cfg.analyzer).distinct
-    }
-    val names = (positive.map(_._1) ++ phraseToks.flatten).distinct
-    val stats: Map[String, (Double, Long)] = termStats
-      .filter($"term".isin(names: _*))
-      .collect().map(t => t.term -> (t.idf, t.df)).toMap
-    // a phrase term absent from the dictionary can match nowhere
-    if (phraseToks.exists(_.exists(t => !stats.contains(t))))
-      return emptyScores(spark)
-    val live = positive.filter { case (t, _) => stats.contains(t) }
-    if (live.isEmpty || live.size < m) return emptyScores(spark)
-    val qdf = broadcast(live.map { case (t, qtf) => (t, qtf, stats(t)._1) }
-      .toDF("term", "qtf", "idf"))
-    val p = cfg.params
-    val post = scoringBlocks(blocks).toDF()
-      .filter($"term".isin(live.map(_._1): _*))
-      .select($"term", explode(graft.plans.DecodeBlock($"payload", $"n")).as("pp"))
-      .select($"term", $"pp.docId".as("docId"), $"pp.tf".as("tf"), $"pp.dl".as("dl"))
-    val phrasePruned0 = matchSets.zip(phraseToks).foldLeft(post) { case (acc, (ms, toks)) =>
-      val survivors = ms.select($"docId")
-      if (toks.map(t => stats(t)._2).min <= PhraseBroadcastCap)
-        acc.join(broadcast(survivors), Seq("docId"), "left_semi")
-      else acc.join(survivors, Seq("docId"), "left_semi")
-    }
-    val phrasePruned = docFilter.fold(phrasePruned0)(f =>
-      phrasePruned0.join(f.select($"docId"), Seq("docId"), "left_semi"))
-    val pruned =
-      if (excluded.isEmpty) phrasePruned
-      else phrasePruned.join(docsWithTerms(blocks, excluded.distinct), Seq("docId"),
-        "left_anti")
-    // cs has at most one entry per distinct positive term (post is keyed
-    // by (term, docId); q by term), so size(cs) IS the distinct-match count
-    pruned
-      .join(qdf, Seq("term"))
-      .withColumn("contrib",
-        contributionCol($"qtf", $"idf", $"tf", $"dl", corpus.avgdl, p))
-      .groupBy($"docId")
-      .agg(collect_list(struct($"term", $"contrib")).as("cs"))
-      .filter(size($"cs") >= m)
-      .select($"docId",
-        aggregate(array_sort($"cs"), lit(0.0),
-          (acc, x) => acc + x.getField("contrib")).as("score"))
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
-  }
 
   // --------------------------------------------------------------- phrase
 
@@ -875,8 +896,8 @@ object QueryEngine {
     * positions with at least one such chain (the minimal completion is
     * greedy, so existence is exact). slop = 0 degenerates to adjacency.
     *
-    * Plan: term-pushed block scan (positions column read ONLY here — BM25
-    * paths never project it) → per-shard document-at-a-time positional
+    * Plan: term-pushed block scan (positions column read — BM25 paths
+    * read it for phrase words only) → per-shard document-at-a-time positional
     * intersect in mapPartitions (docId-sharding co-locates all of a doc's
     * postings, so no cross-shard coordination; candidates are bounded by
     * the rarest term's postings — never a token-level explode/shuffle) →
@@ -890,7 +911,7 @@ object QueryEngine {
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       slop: Int = 0,
-      tombstones: TombstoneSet = TombstoneSet.empty
+      tombstones: DocIdSet = DocIdSet.empty
   ): DataFrame = {
     import spark.implicits._
     val lazyMatches = phraseMatches(spark, blocks, phrase, cfg, slop, tombstones)
@@ -915,23 +936,13 @@ object QueryEngine {
       .limit(k)
   }
 
-  /** Max phrase-survivor rows the composed paths will broadcast (~32 MB
-    * of docIds at 4M — comfortably under broadcast limits); beyond it the
-    * semi-join degrades to a shuffle join rather than risking the driver.
-    * Gated on the phrase's rarest term's dictionary df (survivors ⊆ the
-    * rarest term's postings, so df ≥ the survivor count — driver-safe
-    * without a counting job).
-    */
-  val PhraseBroadcastCap = 4000000L
-
   /** Mixed quoted + free-term query — the search-box semantics for
     * `spark join "data stream"`: the quoted phrase is a FILTER (docs must
     * contain the exact adjacency), and ranking is full BM25 over ALL the
-    * query's terms (phrase words included as regular terms). Exact at any
-    * scale: the candidate set is bounded by the phrase's rarest term, the
-    * term postings come from the term-pushed block scan, and the phrase
-    * survivors prune them with a semi-join before any scoring — no
-    * full-corpus work anywhere.
+    * query's terms (phrase words included as regular terms). One
+    * [[BoolScorer]] job: the phrase words' cursors are among the query's
+    * own, and a candidate doc's positions are checked only after it
+    * passed the block-max bound — no separate match job or semi-join.
     */
   def phraseFilterRank(
       spark: SparkSession,
@@ -942,17 +953,11 @@ object QueryEngine {
       phrase: String,
       k: Int,
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
-      tombstones: TombstoneSet = TombstoneSet.empty
-  ): DataFrame = {
-    // the single-phrase case of the general composed plan — ONE
-    // implementation of the decode → df-gated-broadcast semi-join →
-    // ascending-term BM25 fold pipeline, so the rank-identity-bearing
-    // fold and the PhraseBroadcastCap degrade rule cannot drift between
-    // this route and search()'s composed route
-    val positive = Analyzer.analyzeQuery(freeTerms + " " + phrase, cfg.analyzer)
-    composedTopK(spark, blocks, termStats, corpus, positive,
-      Seq((phrase, 0)), Nil, 1, k, cfg, tombstones)
-  }
+      tombstones: DocIdSet = DocIdSet.empty
+  ): DataFrame =
+    termTopK(spark, blocks, termStats, corpus,
+      TermQuery("", Analyzer.analyzeQuery(freeTerms + " " + phrase, cfg.analyzer), Nil, 1,
+        Seq((Analyzer.tokenize(phrase, cfg.analyzer), 0))), k, cfg, tombstones)
 
   /** The lazy (un-persisted) phrase match relation (docId, tfp, dl) —
     * exposed separately so plan-shape tests can assert on the actual scan
@@ -965,7 +970,7 @@ object QueryEngine {
       phrase: String,
       cfg: IndexBuilder.Config,
       slop: Int = 0,
-      tombstones: TombstoneSet = TombstoneSet.empty
+      tombstones: DocIdSet = DocIdSet.empty
   ): Option[DataFrame] = {
     import spark.implicits._
     val terms = Analyzer.tokenize(phrase, cfg.analyzer) // order + duplicates matter
@@ -989,52 +994,6 @@ object QueryEngine {
   /** Positional intersect: emits (docId, phraseTf, dl) per matching doc. */
   private[query] object PhraseScorer {
 
-    private final class PosCursor(blocks: Array[PostingBlock]) {
-      private var bi = 0
-      private var decoded: Array[Codec.P] = _
-      private var poss: Array[Array[Int]] = _
-      private var pi = 0
-      var exhausted: Boolean = false
-      loadBlock()
-
-      private def loadBlock(): Unit = {
-        val b = blocks(bi)
-        if (b.positions.isEmpty && b.sumTf > 0)
-          throw new IllegalStateException(
-            "phrase query requires a positional index (build with storePositions = true)")
-        decoded = Codec.decode(b.payload, b.n)
-        poss = Codec.decodePositions(b.positions, decoded.map(_.tf))
-        pi = 0
-      }
-
-      def curDoc: Long = decoded(pi).docId
-      def curDl: Int = decoded(pi).dl
-      def curPositions: Array[Int] = poss(pi)
-
-      def advance(): Unit = {
-        pi += 1
-        if (pi >= decoded.length) {
-          bi += 1
-          if (bi >= blocks.length) { exhausted = true; decoded = null; poss = null }
-          else loadBlock()
-        }
-      }
-
-      /** Skip to the first posting with docId >= target; whole blocks are
-        * skipped on maxDocId metadata without decoding. */
-      def advanceTo(target: Long): Unit = {
-        if (exhausted) return
-        if (blocks(bi).maxDocId < target) {
-          var nb = bi + 1
-          while (nb < blocks.length && blocks(nb).maxDocId < target) nb += 1
-          bi = nb
-          if (bi >= blocks.length) { exhausted = true; decoded = null; poss = null; return }
-          loadBlock()
-        }
-        while (decoded(pi).docId < target) pi += 1 // maxDocId bound => terminates
-      }
-    }
-
     /** Rows must arrive sorted by (shardId, term, minDocId). Shard groups
       * are consumed LAZILY, one at a time: a high-df phrase holds at most
       * one shard's match set in memory, never the whole partition's
@@ -1044,20 +1003,21 @@ object QueryEngine {
         it: BufferedIterator[PostingBlock],
         terms: Seq[String],
         slop: Int = 0,
-        tombstones: TombstoneSet = TombstoneSet.empty
+        tombstones: DocIdSet = DocIdSet.empty
     ): Iterator[(Long, Int, Int)] = {
       val distinctTerms = terms.distinct
       new Iterator[(Long, Int, Int)] {
         private var cur: Iterator[(Long, Int, Int)] = Iterator.empty
         private def refill(): Unit =
           while (!cur.hasNext && it.hasNext) {
-            val byTerm = nextShardGroup(it)
+            val shard = new Shard(it)
             // docId-sharding co-locates a doc's postings: a match needs
             // every distinct phrase term present in this shard
-            if (distinctTerms.forall(byTerm.contains)) {
-              val cursors = distinctTerms.map(t =>
-                t -> new PosCursor(byTerm(t).sortBy(_.minDocId).toArray)).toMap
-              cur = intersectShard(cursors, terms, slop, tombstones).iterator
+            if (distinctTerms.forall(shard.has)) {
+              // weight 0: the cursors are walked, never scored
+              val cursors = distinctTerms.map(t => t -> shard.cursor(t, 0.0, 0.0, 0.0, 1.0)).toMap
+              cur = intersectShard(cursors.values.toArray, terms.map(cursors).toArray, slop,
+                tombstones).iterator
             }
           }
         override def hasNext: Boolean = { refill(); cur.hasNext }
@@ -1065,189 +1025,73 @@ object QueryEngine {
       }
     }
 
-    /** Leapfrog docId intersection + (slop-windowed) position count. */
-    private def intersectShard(
-        cursors: Map[String, PosCursor],
-        terms: Seq[String],
-        slop: Int,
-        tombstones: TombstoneSet = TombstoneSet.empty
-    ): Seq[(Long, Int, Int)] = {
-      val cs = cursors.values.toArray
+    /** Leapfrog docId intersection of `cs` + the phrase's occurrence count
+      * over `chain` (its cursors in phrase order, duplicates repeated).
+      */
+    private def intersectShard(cs: Array[Cursor], chain: Array[Cursor], slop: Int,
+        tombstones: DocIdSet): Seq[(Long, Int, Int)] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-      var done = false
-      while (!done) {
+      while (!cs.exists(_.exhausted)) {
         var target = Long.MinValue
-        var i = 0
-        while (i < cs.length && !done) {
-          if (cs(i).exhausted) done = true
-          else if (cs(i).curDoc > target) target = cs(i).curDoc
-          i += 1
-        }
-        if (!done) {
-          // advance all cursors to the current max docId
-          var aligned = true
-          var j = 0
-          while (j < cs.length && !done) {
-            if (cs(j).curDoc < target) {
-              cs(j).advanceTo(target)
-              if (cs(j).exhausted) done = true
-              else if (cs(j).curDoc != target) aligned = false
-            }
-            j += 1
-          }
-          if (!done && aligned) {
-            // tombstoned docs never match (they'd distort the phrase df)
-            val dead = tombstones.contains(target)
-            val tfp = if (dead) 0 else phraseCount(terms, cursors, slop)
+        cs.foreach(c => if (c.curDoc > target) target = c.curDoc)
+        cs.foreach(_.advanceTo(target))
+        if (cs.forall(c => !c.exhausted && c.curDoc == target)) {
+          // tombstoned docs never match (they'd distort the phrase df)
+          if (!tombstones.contains(target)) {
+            val tfp = BoolScorer.phraseTf(chain, slop, target)
             if (tfp > 0) out += ((target, tfp, cs(0).curDl))
-            var m = 0
-            while (m < cs.length && !done) {
-              cs(m).advance()
-              if (cs(m).exhausted) done = true
-              m += 1
-            }
           }
+          cs.foreach(_.advance())
         }
       }
       out.toSeq
     }
-
-    /** # of start positions with a valid occurrence: a strictly increasing
-      * chain whose total span is <= (n-1)+slop, completed GREEDILY
-      * (smallest position of term j strictly after the previous term's).
-      * Greedy minimizes the final position, so a greedy miss proves no
-      * chain exists for that start — and at slop = 0 the bound forces
-      * every step to exactly 1, i.e. exact adjacency, so one loop serves
-      * both semantics with no per-level array allocation.
-      */
-    private def phraseCount(terms: Seq[String], cursors: Map[String, PosCursor],
-        slop: Int): Int = {
-      val starts: Array[Int] = cursors(terms.head).curPositions
-      if (terms.length == 1) return starts.length
-      val bound = terms.length - 1 + slop
-      var count = 0
-      var s = 0
-      while (s < starts.length) {
-        val start = starts(s)
-        var prev = start
-        var ok = true
-        var j = 1
-        while (j < terms.length && ok) {
-          val next = cursors(terms(j)).curPositions
-          // smallest position strictly greater than prev
-          val ins = java.util.Arrays.binarySearch(next, prev + 1)
-          val idx = if (ins >= 0) ins else -ins - 1
-          if (idx >= next.length) ok = false
-          else { prev = next(idx); if (prev - start > bound) ok = false }
-          j += 1
-        }
-        if (ok) count += 1
-        s += 1
-      }
-      count
-    }
   }
 
-  /** The one document-at-a-time scorer behind every term-only query:
+  /** The one document-at-a-time scorer behind every ranked query:
     * block-max WAND (Ding & Suel, SIGIR 2011) with a minimum-should-match
     * constraint, the shape of Lucene's WANDScorer. m = 1 is disjunctive
     * WAND; m = n is a leapfrog intersection (AND); 1 < m < n is m-of-n
-    * with the same block-max pruning. One shard at a time per partition.
+    * with the same block-max pruning. Phrases and field filters are
+    * per-document checks on the pivot doc (Lucene's two-phase iteration:
+    * the postings approximate, positions verify only candidates). One
+    * shard at a time per partition.
     */
   private[query] object BoolScorer {
 
-    final class Cursor(weight: Double, blocks: Array[PostingBlock],
-        k1: Double, b: Double, avgdl: Double, decodeFn: PostingBlock => Array[Codec.P]) {
-      // blocks are docId-sorted and non-overlapping within (shard, term).
-      // Upper bounds derive from (maxTf, minDl) with the CURRENT corpus
-      // avgdl: partial() is monotone up in tf, down in dl, so this bounds
-      // every posting even after incremental appends moved avgdl.
-      private def blockUb(i: Int): Double =
-        weight * graft.index.IndexBuilder.partial(
-          blocks(i).maxTf, blocks(i).minDl, k1, b, avgdl)
-      val globalUb: Double = {
-        var m = 0.0
-        var i = 0
-        while (i < blocks.length) { val u = blockUb(i); if (u > m) m = u; i += 1 }
-        m
-      }
-      private var bi = 0
-      private var decoded: Array[Codec.P] = decodeFn(blocks(0))
-      private var pi = 0
-      var exhausted: Boolean = false
-
-      def curDoc: Long = decoded(pi).docId
-      def curBlockUb: Double = blockUb(bi)
-
-      def currentContribution(): Double =
-        weight * Bm25.partial(decoded(pi).tf, decoded(pi).dl, k1, b, avgdl)
-
-      def advance(): Unit = {
-        pi += 1
-        if (pi >= decoded.length) nextBlock()
-      }
-
-      /** Skip forward to the first posting with docId >= target. Whole
-        * blocks are skipped on maxDocId metadata alone — only the landing
-        * block is decoded.
-        */
-      def advanceTo(target: Long): Unit = {
-        if (exhausted) return
-        if (blocks(bi).maxDocId >= target) {
-          // target lies in the current (already decoded) block
-          while (decoded(pi).docId < target) pi += 1 // maxDocId bound => terminates
-          return
-        }
-        var nb = bi + 1
-        while (nb < blocks.length && blocks(nb).maxDocId < target) nb += 1
-        bi = nb
-        if (bi >= blocks.length) { exhausted = true; decoded = null; return }
-        decoded = decodeFn(blocks(bi))
-        pi = 0
-        while (decoded(pi).docId < target) pi += 1
-      }
-
-      private def nextBlock(): Unit = {
-        bi += 1
-        if (bi >= blocks.length) { exhausted = true; decoded = null }
-        else { decoded = decodeFn(blocks(bi)); pi = 0 }
-      }
-    }
-
     /** Rows must arrive sorted by (shardId, term, minDocId). Every query
       * is scored against each shard group while its blocks are at hand.
-      * Decoded blocks are memoized per shard, so a block shared by several
-      * queries is decoded once.
+      * Decoded blocks are memoized per shard ([[Shard]]), so a block
+      * shared by several queries is decoded once.
       */
     def scorePartitionBatch(
         it: BufferedIterator[PostingBlock],
         queries: Seq[BoolQuery],
         k: Int,
         k1: Double, b: Double, avgdl: Double,
-        tombstones: TombstoneSet = TombstoneSet.empty
+        tombstones: DocIdSet = DocIdSet.empty
     ): Iterator[(String, Long, Double)] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
       while (it.hasNext) {
-        val byTerm = nextShardGroup(it)
-        val sortedByTerm: Map[String, Array[PostingBlock]] =
-          byTerm.iterator.map { case (t, bs) => t -> bs.sortBy(_.minDocId).toArray }.toMap
-        // keyed by (term, minDocId): blockIdx is NOT unique within a
-        // (shard, term) after an incremental append (delta blocks restart
-        // at 0); minDocId is, because block docId ranges are disjoint
-        val memo = scala.collection.mutable.HashMap.empty[(String, Long), Array[Codec.P]]
-        val decode: PostingBlock => Array[Codec.P] = blk =>
-          memo.getOrElseUpdate((blk.term, blk.minDocId), Codec.decode(blk.payload, blk.n))
-        def cursor(term: String, weight: Double): Cursor =
-          new Cursor(weight, sortedByTerm(term), k1, b, avgdl, decode)
+        val shard = new Shard(it)
         queries.foreach { q =>
           // docId-sharding co-locates a doc's postings: a match needs m of
-          // the query's terms present in this shard. q.terms is
-          // term-sorted, so the cursors are too (the summation order)
-          val present = q.terms.filter(t => sortedByTerm.contains(t.term))
-          if (present.size >= q.m) {
-            val cursors = present.map(t => cursor(t.term, t.weight)).toArray
-            val not = q.excluded.filter(sortedByTerm.contains).map(cursor(_, 0.0)).toArray
-            out ++= scoreShard(cursors, not, q.m, k, tombstones)
+          // the query's terms, and every phrase word, present in this
+          // shard. q.terms is term-sorted, so the cursors are too (the
+          // summation order)
+          val present = q.terms.filter(t => shard.has(t.term))
+          if (present.size >= q.m && q.phrases.forall(_._1.forall(shard.has))) {
+            val cursors = present.map(t => shard.cursor(t.term, t.weight, k1, b, avgdl)).toArray
+            val not = q.excluded.filter(shard.has).map(shard.cursor(_, 0.0, k1, b, avgdl)).toArray
+            val byTerm = present.map(_.term).zip(cursors).toMap
+            val chains = q.phrases.map { case (toks, slop) => (toks.map(byTerm).toArray, slop) }
+            // the per-document checks, cheapest first: the exclusion
+            // cursors skip forward lazily, positions decode only here
+            def accept(doc: Long): Boolean =
+              !tombstones.contains(doc) && q.allow.forall(_.contains(doc)) &&
+                !excludedAt(not, doc) &&
+                chains.forall { case (chain, slop) => phraseTf(chain, slop, doc) > 0 }
+            out ++= scoreShard(cursors, q.m, k, accept)
               .map { case (d, s) => (q.qid, d, s) }
           }
         }
@@ -1262,15 +1106,16 @@ object QueryEngine {
       * lagging cursor jumps to it. Once the pivot is extended over docId
       * ties, every prefix cursor sits on the pivot doc (>= m of them), and
       * the sum of their *current-block* upper bounds must still beat θ or
-      * the doc is skipped without scoring (Ding & Suel's BMW). Tombstoned
-      * docs and docs an exclusion cursor lands on are skipped the same way.
+      * the doc is skipped without scoring (Ding & Suel's BMW). A doc that
+      * `accept` rejects (tombstoned, outside the allow-list, holding an
+      * excluded term, missing a phrase) is skipped the same way.
       * θ respects the global tie-break (score desc, docId asc): within a
       * shard docIds only grow, so a candidate whose upper bound is <= θ can
       * never displace a heap entry. `cursors` must be term-sorted: scores
       * sum in ascending term order, the pinned order of every path.
       */
-    private[query] def scoreShard(cursors: Array[Cursor], not: Array[Cursor], m: Int,
-        k: Int, tombstones: TombstoneSet): Seq[(Long, Double)] = {
+    private[query] def scoreShard(cursors: Array[Cursor], m: Int, k: Int,
+        accept: Long => Boolean): Seq[(Long, Double)] = {
       val heap = new TopKHeap(k)
       // the live cursors in curDoc order: cursors only move forward, so an
       // insertion sort restores the order in about one pass per step
@@ -1309,8 +1154,7 @@ object QueryEngine {
             var blockAcc = 0.0
             var j = 0
             while (j <= pivotIdx) { blockAcc += sorted(j).curBlockUb; j += 1 }
-            if (blockAcc > theta && !tombstones.contains(pivotDoc) &&
-                !excludedAt(not, pivotDoc)) {
+            if (blockAcc > theta && accept(pivotDoc)) {
               var score = 0.0
               var t = 0
               while (t < cursors.length) {
@@ -1364,6 +1208,43 @@ object QueryEngine {
         x += 1
       }
       false
+    }
+
+    /** The positional check: the phrase's tf in `doc`, whose words in
+      * order (duplicates repeated) are `chain`'s cursors — 0 unless every
+      * cursor sits on `doc`. tf is the # of start positions with a valid
+      * occurrence: a strictly increasing chain whose total span is <=
+      * (n-1)+slop, completed GREEDILY (smallest position of word j strictly
+      * after the previous word's). Greedy minimizes the final position, so
+      * a greedy miss proves no chain exists for that start — and at slop =
+      * 0 the bound forces every step to exactly 1, i.e. exact adjacency, so
+      * one loop serves both semantics with no per-level array allocation.
+      */
+    private[query] def phraseTf(chain: Array[Cursor], slop: Int, doc: Long): Int = {
+      if (!chain.forall(c => !c.exhausted && c.curDoc == doc)) return 0
+      val starts: Array[Int] = chain(0).curPositions
+      if (chain.length == 1) return starts.length
+      val bound = chain.length - 1 + slop
+      var count = 0
+      var s = 0
+      while (s < starts.length) {
+        val start = starts(s)
+        var prev = start
+        var ok = true
+        var j = 1
+        while (j < chain.length && ok) {
+          val next = chain(j).curPositions
+          // smallest position strictly greater than prev
+          val ins = java.util.Arrays.binarySearch(next, prev + 1)
+          val idx = if (ins >= 0) ins else -ins - 1
+          if (idx >= next.length) ok = false
+          else { prev = next(idx); if (prev - start > bound) ok = false }
+          j += 1
+        }
+        if (ok) count += 1
+        s += 1
+      }
+      count
     }
   }
 }

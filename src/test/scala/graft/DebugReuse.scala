@@ -4,7 +4,7 @@ import graft.operators.TrainingData
 import graft.TestKit.spark
 
 /** Scratch: confirm the shingle self-join's exchange is reused at runtime
-  * (AQE stage reuse) — the claim plans/r06 cannot show pre-execution.
+  * (AQE stage reuse) — the claim a pre-execution plan dump cannot show.
   */
 object DebugReuse {
   def main(args: Array[String]): Unit = {

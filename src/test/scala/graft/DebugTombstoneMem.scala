@@ -1,9 +1,9 @@
 package graft
 
-import graft.index.TombstoneSet
+import graft.index.DocIdSet
 
 /** Backs the TombstoneCap sizing claim with data: java-serialized size
-  * (what a broadcast ships) of the paged TombstoneSet vs the flat
+  * (what a broadcast ships) of the paged DocIdSet vs the flat
   * Array[Long] it replaced, for a sparse (random) and a clustered
   * (dedup-shaped) id distribution at 10M ids.
   *
@@ -40,7 +40,7 @@ object DebugTombstoneMem {
     }
     Seq("sparse" -> sparse, "clustered" -> clustered).foreach { case (label, ids) =>
       val t0 = System.nanoTime()
-      val set = TombstoneSet.fromIds(ids)
+      val set = DocIdSet.fromIds(ids)
       val buildSec = (System.nanoTime() - t0) / 1e9
       val setB = serializedBytes(set)
       val flatB = serializedBytes(ids.sorted)

@@ -166,35 +166,74 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("PushedFilters: [IsNotNull(docId), EqualTo(docId,123)"), p)
   }
 
+  /** The parquet scans of a plan with their column lists (the ReadSchema
+    * string truncates).
+    */
+  private def scans(p: String): Seq[String] = "FileScan parquet \\[[^\\]]*\\]".r.findAllIn(p).toSeq
+
   test("fielded search pushes the field predicate to the docs parquet") {
     val idx = SparkEntry.index(spark, dir)
+    // the allow-list's rows: the live docs view under the field predicate
+    val allow = plan(QueryEngine.fieldFilter(Seq("role" -> "user"), idx.docs.toDF()))
+    assert(allow.contains("EqualTo(role,user)"),
+      "role predicate did not reach the docs parquet scan:\n" + allow)
+    // the ranked plan is the term-only one: the allow-list was collected
+    // into a DocIdSet, so no docs scan or join remains in it
     val p = plan(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
       "role:user data spark", 10, 1, SparkEntry.cfg, idx.tombstoneSet,
       Some(idx.docs.toDF())))
     assert(p.contains("PushedFilters: [In(term"), p) // block scan stays term-pushed
-    assert(p.contains("EqualTo(role,user)"),
-      "role predicate did not reach the docs parquet scan:\n" + p)
+    assert(scans(p).size == 1 && !p.contains("Join"), p)
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
   test("composed search keeps the term-pushed scan and the top-k finish") {
+    // phrase + term + exclusion: ONE block scan scored by the one
+    // BoolScorer job — the phrase is a per-document positional check, so
+    // the scan reads positions and no survivor join is left
     val idx = SparkEntry.index(spark, dir)
     val p = plan(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
       "\"data stream\"~1 spark -join", 10, 1, SparkEntry.cfg, idx.tombstoneSet))
     assert(p.contains("PushedFilters: [In(term"), p)
     assert(p.contains("TakeOrderedAndProject"), p)
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-    // r6 optimization: the phrase-survivor semi-join is gated on the
-    // rarest phrase term's dictionary df (a proven bound on the survivor
-    // count) instead of a persist + count() probe — the match relation
-    // must appear INSIDE this one plan as a broadcast build side, not as
-    // a separately-materialized InMemoryRelation
-    // one operator line: the plan holds other BroadcastHashJoins (qdf,
-    // exclusions), so two independent substrings would also pass on a
-    // shuffled SortMergeJoin LeftSemi
-    assert("BroadcastHashJoin \\[[^\\n]*\\], LeftSemi, BuildRight".r.findFirstIn(p).isDefined,
-      "df-gated phrase survivor broadcast missing:\n" + p)
-    assert(!p.contains("InMemoryTableScan"),
-      "composed path regressed to a persisted phrase match set:\n" + p)
+    assert(scans(p).size == 1, s"expected ONE block scan:\n$p")
+    assert(!p.contains("Join"), s"a join is left in the phrase + term plan:\n$p")
+    assert(scans(p).exists(_.contains("positions#")),
+      "the phrase's positional check needs the positions column:\n" + p)
+  }
+
+  test("searchBatch with a phrase + term query and a field query scans the block table once") {
+    val idx = SparkEntry.index(spark, dir)
+    val qs = Seq("p1" -> "\"data stream\" spark", "f1" -> "role:user spark join",
+      "t1" -> "window join")
+    val p = plan(QueryEngine.searchBatch(spark, idx.blocks, idx.termStats,
+      idx.corpus, qs, 10, 1, SparkEntry.cfg, idx.tombstoneSet, Some(idx.docs.toDF())))
+    assert(scans(p).size == 1, s"expected ONE shared block scan, got ${scans(p).size}:\n$p")
+    assert(!p.contains("Join"), p)
+  }
+
+  test("job counts: a phrase adds no job to its terms, a field filter at most 2") {
+    // Spark jobs are the deterministic cost of a query (wall-clock on a
+    // shared host is not): planning's eager collects plus the action's
+    // stages, counted under one job group
+    val idx = SparkEntry.index(spark, dir)
+    val sc = spark.sparkContext
+    def jobs(q: String): Int = {
+      def run(): Unit = QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
+        q, 10, 1, SparkEntry.cfg, idx.tombstoneSet, Some(idx.docs.toDF())).collect()
+      run() // warm: no first-touch job of a lazy relation is counted
+      val group = s"jobs-${q.hashCode}"
+      sc.setJobGroup(group, q)
+      try run() finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val terms = jobs("data stream spark -join")
+    val phrase = jobs("\"data stream\" spark -join")
+    assert(terms > 0, "no job counted — the job group did not reach the queries")
+    assert(phrase == terms, s"phrase + terms ran $phrase jobs, its terms alone $terms")
+    val plain = jobs("spark join data")
+    val fielded = jobs("role:user spark join data")
+    assert(fielded <= plain + 2, s"field filter ran $fielded jobs, the terms alone $plain")
+    info(s"jobs: terms $terms, phrase + terms $phrase, plain $plain, fielded $fielded")
   }
 }

@@ -251,7 +251,7 @@ class SearchSpec extends AnyFunSuite {
     }
     def searchDocs(q: String): Seq[(Long, Double)] =
       rows(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus, q,
-        10, 1, cfg, graft.index.TombstoneSet.empty, Some(idx.docs.toDF())))
+        10, 1, cfg, graft.index.DocIdSet.empty, Some(idx.docs.toDF())))
     val got = searchDocs("role:user term0000 term0001")
     val want = fieldedOracle("term0000 term0001", "user")
     assert(got == want, "fielded top-k must equal the role-filtered oracle")
@@ -278,7 +278,7 @@ class SearchSpec extends AnyFunSuite {
     val idx = buildIndex(turns, "graft-search-robust")
     val docsDf = Some(idx.docs.toDF())
     def s(q: String) = rows(QueryEngine.search(spark, idx.blocks, idx.termStats,
-      idx.corpus, q, 10, 1, cfg, graft.index.TombstoneSet.empty, docsDf))
+      idx.corpus, q, 10, 1, cfg, graft.index.DocIdSet.empty, docsDf))
     // a colon token NOT naming a doc column falls back to plain text
     assert(s("roles:user term0000") ==
       rows(QueryEngine.wandTopK(spark, idx.blocks, idx.termStats, idx.corpus,
@@ -343,13 +343,13 @@ class SearchSpec extends AnyFunSuite {
     // its m and exclusions, scores in the one shared job
     Seq(1 -> 5, 2 -> 4).foreach { case (m, minNonEmpty) =>
       val got = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
-        batch, 10, m, cfg, graft.index.TombstoneSet.empty, docsDf)
+        batch, 10, m, cfg, graft.index.DocIdSet.empty, docsDf)
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
         .groupBy(_._1).view.mapValues(_.map(t => (t._2, t._3)).sortBy(x => (-x._2, x._1)).toSeq).toMap
       var nonEmpty = 0
       batch.foreach { case (qid, q) =>
         val single = rows(QueryEngine.search(spark, idx.blocks, idx.termStats,
-          idx.corpus, q, 10, m, cfg, graft.index.TombstoneSet.empty, docsDf))
+          idx.corpus, q, 10, m, cfg, graft.index.DocIdSet.empty, docsDf))
         assert(got.getOrElse(qid, Nil) == single, s"batch/single mismatch for $qid [$q] m=$m")
         if (single.nonEmpty) nonEmpty += 1
       }

@@ -2,38 +2,56 @@ package graft.query
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{Codec, TombstoneSet}
+import graft.index.{Codec, DocIdSet}
 import graft.index.Codec.P
 import graft.model.PostingBlock
 import graft.query.QueryEngine.{BoolQuery, BoolScorer, QTerm}
 
 /** Direct unit tests of the block-max WAND scorer with its
-  * minimum-should-match constraint ([[QueryEngine.BoolScorer]]) against a
-  * scalar exhaustive oracle over the SAME encoded blocks — no Spark
-  * involved, so adversarial block layouts (weak current block, docId ties
-  * at the pivot, multi-block lists, too few matches at the pivot) can be
-  * constructed exactly.
+  * minimum-should-match constraint and per-document checks
+  * ([[QueryEngine.BoolScorer]]) against a scalar exhaustive oracle over
+  * the SAME encoded blocks — no Spark involved, so adversarial block
+  * layouts (weak current block, docId ties at the pivot, multi-block
+  * lists, too few matches at the pivot, phrase words on the pivot doc but
+  * apart) can be constructed exactly.
   */
 class WandUnitSpec extends AnyFunSuite {
 
   private val k1 = 1.2
   private val b = 0.75
 
-  private def blk(shard: Int, term: String, idx: Int, ps: Seq[P]): PostingBlock =
+  private def blk(shard: Int, term: String, idx: Int, ps: Seq[P],
+      positions: Seq[Array[Int]] = Nil): PostingBlock =
     PostingBlock(shard, term, idx, ps.head.docId, ps.last.docId, ps.size,
       ps.map(_.tf).max, ps.map(_.dl).min, ps.map(_.tf.toLong).sum,
-      Codec.encode(ps), Array.emptyByteArray)
+      Codec.encode(ps),
+      if (positions.isEmpty) Array.emptyByteArray else Codec.encodePositions(positions))
 
   private def docsOf(blocks: Seq[PostingBlock], term: String): Seq[P] =
     blocks.filter(_.term == term).sortBy(b => (b.shardId, b.minDocId))
       .flatMap(blkk => Codec.decode(blkk.payload, blkk.n))
 
+  /** Whether `toks` holds `words` as a strictly increasing position chain
+    * spanning at most (n-1)+slop (the phrase semantics), by exhaustive
+    * search over every chain.
+    */
+  private def hasChain(toks: Array[String], words: Seq[String], slop: Int): Boolean = {
+    val bound = words.length - 1 + slop
+    def rec(start: Int, j: Int, prev: Int): Boolean =
+      j == words.length || (prev + 1 until toks.length).exists { p =>
+        p - start <= bound && toks(p) == words(j) && rec(start, j + 1, p)
+      }
+    toks.indices.exists(i => toks(i) == words.head && rec(i, 1, i))
+  }
+
   /** Scalar exhaustive top-k over decoded blocks (same formula, same
     * ascending-term summation, same tie-break): docs holding >= m of the
-    * query terms, none of the excluded terms, and not in `dead`.
+    * query terms, none of the excluded terms, every phrase (checked on the
+    * docs' token streams `texts`), in the allow-list, and not in `dead`.
     */
   private def exhaustive(blocks: Seq[PostingBlock], q: BoolQuery, k: Int,
-      avgdl: Double, dead: Set[Long] = Set.empty): Seq[(Long, Double)] = {
+      avgdl: Double, dead: Set[Long] = Set.empty,
+      texts: Map[Long, Array[String]] = Map.empty): Seq[(Long, Double)] = {
     val scores = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
     val matches = scala.collection.mutable.Map.empty[Long, Int].withDefaultValue(0)
     q.terms.sortBy(_.term).foreach { qt =>
@@ -45,7 +63,10 @@ class WandUnitSpec extends AnyFunSuite {
     }
     val excluded = q.excluded.flatMap(docsOf(blocks, _)).map(_.docId).toSet
     scores.toSeq
-      .filter { case (d, _) => matches(d) >= q.m && !excluded(d) && !dead(d) }
+      .filter { case (d, _) =>
+        matches(d) >= q.m && !excluded(d) && !dead(d) && q.allow.forall(_.contains(d)) &&
+          q.phrases.forall { case (words, slop) => hasChain(texts(d), words, slop) }
+      }
       .sortBy { case (d, s) => (-s, d) }.take(k)
   }
 
@@ -53,7 +74,7 @@ class WandUnitSpec extends AnyFunSuite {
     * per qid like the Spark paths (global order over the shards' top-k).
     */
   private def scored(blocks: Seq[PostingBlock], queries: Seq[BoolQuery], k: Int,
-      avgdl: Double, tombstones: TombstoneSet = TombstoneSet.empty)
+      avgdl: Double, tombstones: DocIdSet = DocIdSet.empty)
       : Map[String, Seq[(Long, Double)]] = {
     val sorted = blocks.sortBy(b => (b.shardId, b.term, b.minDocId))
     val rows = BoolScorer.scorePartitionBatch(sorted.iterator.buffered, queries, k,
@@ -107,51 +128,99 @@ class WandUnitSpec extends AnyFunSuite {
     }
   }
 
+  test("phrase words on the pivot doc but apart: the positional check rejects the doc") {
+    // (1-based positions) doc 1 = "a x b": both phrase words sit on the pivot doc, two apart;
+    // doc 2 = "y a b y": a then b adjacent. Doc 1 outscores doc 2 on the
+    // terms (shorter doc), so a scorer that skips the positional check
+    // ranks it first
+    val blocks = Seq(
+      blk(0, "a", 0, Seq(P(1, 1, 3), P(2, 1, 4)), Seq(Array(1), Array(2))),
+      blk(0, "b", 0, Seq(P(1, 1, 3), P(2, 1, 4)), Seq(Array(3), Array(3))))
+    val texts = Map(1L -> Array("a", "x", "b"), 2L -> Array("y", "a", "b", "y"))
+    val qts = Seq(QTerm("a", 1.0), QTerm("b", 1.0))
+    assert(scored(blocks, Seq(wand(qts)), 2, avgdl = 3.5)("q").map(_._1) == Seq(1L, 2L),
+      "fixture must make doc 1 the unfiltered top-1")
+    Seq(0 -> Seq(2L), 1 -> Seq(1L, 2L)).foreach { case (slop, ids) =>
+      val q = BoolQuery("q", qts, Nil, 2, Seq((Seq("a", "b"), slop)))
+      val want = exhaustive(blocks, q, 2, avgdl = 3.5, texts = texts)
+      assert(want.map(_._1) == ids, s"fixture at slop $slop: $want")
+      assert(scored(blocks, Seq(q), 2, avgdl = 3.5)("q") == want,
+        s"slop $slop: the positional check let a non-matching doc through")
+    }
+  }
+
   test("randomized block layouts: BoolScorer == exhaustive for 300 corpora, any m") {
-    // m in {1, 2, n}, with and without exclusions, with and without
-    // tombstones, one or two shards; every query of a corpus is scored
-    // both in one batched call and alone
+    // m in {1, 2, n}, with and without exclusions, 0-2 phrases (1-3 words,
+    // slop 0-2, repeated words allowed), with and without an allow-list,
+    // with and without tombstones, one or two shards; every query of a
+    // corpus is scored both in one batched call and alone
     val rnd = new scala.util.Random(20260816L)
-    var nonEmpty = 0
+    var msmExcl = 0
+    var phrased = 0
     (1 to 300).foreach { iter =>
       val nTerms = 2 + rnd.nextInt(3)
       val terms = (0 until nTerms).map(i => s"t$i")
       val exclTerms = Seq("x0", "x1")
       val nDocs = 3 + rnd.nextInt(20)
       val blockSize = 2 + rnd.nextInt(2)
-      val avgdl = 8.0 + rnd.nextInt(5)
+      // each doc a token stream of query terms, exclusion terms and a
+      // filler that only lengthens it; postings and positions derive from it
+      val texts: Map[Long, Array[String]] = (1 to nDocs).map { d =>
+        d.toLong -> Array.fill(2 + rnd.nextInt(24)) {
+          val r = rnd.nextDouble()
+          if (r < 0.06) exclTerms(rnd.nextInt(2))
+          else if (r < 0.7) terms(rnd.nextInt(nTerms))
+          else "f"
+        }
+      }.toMap
+      val avgdl = texts.values.map(_.length).sum.toDouble / nDocs
       // docId-range shards: one or two per corpus
       val shardOf: Long => Int = if (rnd.nextBoolean()) _ => 0 else d => if (d > nDocs / 2) 1 else 0
       val blocks = (terms ++ exclTerms).flatMap { t =>
-        val density = if (t.startsWith("x")) 0.3 else 0.6
-        val docIds = (1 to nDocs).filter(_ => rnd.nextDouble() < density).map(_.toLong)
-        docIds.groupBy(shardOf).toSeq.flatMap { case (shard, ids) =>
-          ids.sorted.grouped(blockSize).zipWithIndex.map { case (bids, bi) =>
-            blk(shard, t, bi, bids.map(id => P(id, 1 + rnd.nextInt(60), 5 + rnd.nextInt(10))))
+        val postings = texts.toSeq.sortBy(_._1).flatMap { case (d, toks) =>
+          val pos = toks.indices.filter(toks(_) == t).map(_ + 1).toArray // 1-based
+          if (pos.isEmpty) None else Some((P(d, pos.length, toks.length), pos))
+        }
+        postings.groupBy(p => shardOf(p._1.docId)).toSeq.flatMap { case (shard, ps) =>
+          ps.grouped(blockSize).zipWithIndex.map { case (bps, bi) =>
+            blk(shard, t, bi, bps.map(_._1), bps.map(_._2))
           }
         }
       }
       val dead: Set[Long] =
         if (rnd.nextBoolean()) Set.empty
         else (1 to nDocs).filter(_ => rnd.nextDouble() < 0.15).map(_.toLong).toSet
-      val tombstones = TombstoneSet.fromIds(dead.toArray)
+      val tombstones = DocIdSet.fromIds(dead.toArray)
       val qts = terms.map(t => QTerm(t, 0.5 + rnd.nextDouble() * 2.0))
       val queries = for {
         m <- Seq(1, 2, nTerms).distinct
         excl <- Seq(Nil, exclTerms.take(1 + rnd.nextInt(2)))
-      } yield BoolQuery(s"m$m-x${excl.size}", qts, excl, m)
+      } yield {
+        val phrases = Seq.fill(rnd.nextInt(3)) {
+          (Seq.fill(1 + rnd.nextInt(3))(terms(rnd.nextInt(nTerms))), rnd.nextInt(3))
+        }
+        val allow =
+          if (rnd.nextBoolean()) None
+          else Some(DocIdSet.fromIds(
+            (1 to nDocs).filter(_ => rnd.nextDouble() < 0.7).map(_.toLong).toArray))
+        // the count condition as the engine raises it: max(m, |phrase words|)
+        BoolQuery(s"m$m-x${excl.size}", qts, excl,
+          math.max(m, phrases.flatMap(_._1).distinct.size), phrases, allow)
+      }
       (1 to 3).foreach { k =>
         val batch = scored(blocks, queries, k, avgdl, tombstones)
         queries.foreach { q =>
-          val want = exhaustive(blocks, q, k, avgdl, dead)
+          val want = exhaustive(blocks, q, k, avgdl, dead, texts)
           assert(batch(q.qid) == want,
             s"iter=$iter k=$k ${q.qid}: batched got ${batch(q.qid)} want $want")
           val alone = scored(blocks, Seq(q), k, avgdl, tombstones)(q.qid)
           assert(alone == want, s"iter=$iter k=$k ${q.qid}: alone got $alone want $want")
-          if (want.nonEmpty && q.m > 1 && q.excluded.nonEmpty) nonEmpty += 1
+          if (want.nonEmpty && q.m > 1 && q.excluded.nonEmpty) msmExcl += 1
+          if (want.nonEmpty && q.phrases.nonEmpty) phrased += 1
         }
       }
     }
-    assert(nonEmpty > 300, s"m > 1 + exclusion cases mostly empty ($nonEmpty) — vacuous")
+    assert(msmExcl > 300, s"m > 1 + exclusion cases mostly empty ($msmExcl) — vacuous")
+    assert(phrased > 300, s"phrase cases mostly empty ($phrased) — vacuous")
   }
 }
