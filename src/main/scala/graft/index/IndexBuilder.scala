@@ -1,5 +1,7 @@
 package graft.index
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -77,7 +79,20 @@ object IndexBuilder {
 
   def shardOf(docId: Long, shardSize: Long): Int = (docId / shardSize).toInt
 
-  /** `docsDir`: the docs-with-ids table is CHECKPOINTED to parquet there
+  /** Pass-1 output: the checkpointed docs and the LAZY, narrow postings. */
+  final case class Prepared(
+      docs: Dataset[Doc],
+      postings: DataFrame, // (shardId, term, docId, tf, dl[, pos]) — LAZY, narrow
+      n: Long,
+      shardSize: Long
+  )
+
+  /** Pass-1 skeleton shared by relations() (test/verify scale, postings
+    * cached) and IndexStore.build (production path, postings stream through
+    * the encode shuffle ONCE, uncached — corpus/term stats are then derived
+    * from the ~100x-smaller encoded blocks).
+    *
+    * `docsDir`: the docs-with-ids table is CHECKPOINTED to parquet there
     * and read back before anything derives from it. This is load-bearing
     * for correctness, not a convenience: docId assignment routes
     * per-partition offsets by runtime partition id, which is only valid
@@ -90,21 +105,9 @@ object IndexBuilder {
     *
     * `idOffset`/`fixedShardSize`: set by incremental snapshot appends so
     * delta docs continue the base id space and land in the base's shard
-    * grid. The returned `corpus`/`termStats` then describe the DELTA only
-    * (the append path merges them with the base's).
+    * grid. The returned `n` (and relations()' `corpus`/`termStats`) then
+    * describe the DELTA only (the append path merges them with the base's).
     */
-  /** Pass-1 skeleton shared by relations() (test/verify scale, postings
-    * cached) and IndexStore.build (production path, postings stream through
-    * the encode shuffle ONCE, uncached — corpus/term stats are then derived
-    * from the ~100x-smaller encoded blocks).
-    */
-  final case class Prepared(
-      docs: Dataset[Doc],
-      postings: DataFrame, // (shardId, term, docId, tf, dl) — LAZY, narrow
-      n: Long,
-      shardSize: Long
-  )
-
   def prepare(spark: SparkSession, turns: Dataset[Turn], docsDir: String,
       cfg: Config = Config(),
       idOffset: Long = 0L, fixedShardSize: Option[Long] = None): Prepared = {
@@ -125,7 +128,7 @@ object IndexBuilder {
     // which would shuffle every token in the corpus only to re-combine
     // values that were co-located all along. shardId = docId/shardSize is a
     // column, not a layout — the one posting-level exchange happens in
-    // encodeBlocks. Positional builds derive tf from the in-row position
+    // encodePostings. Positional builds derive tf from the in-row position
     // lists (tf = |positions|); non-positional builds carry NO pos column
     // at all — even an empty-array column costs ~16 B/posting through the
     // encode shuffle, measured as a 25% local[16] build-throughput hit on
@@ -183,16 +186,15 @@ object IndexBuilder {
     * rule. Hash-exchange on the (shardId, term) GROUP key (never on docId:
     * a group must not straddle a partition boundary or block boundaries
     * become partition-layout-dependent and resume checksums drift), then
-    * in-partition sort by (shardId, term, docId) + streaming block encode.
+    * in-partition sort by (shardId, term, docId) + the streaming
+    * [[BlockEncoder]] straight off the exchanged InternalRows.
     * numShards >= 4x partitions keeps the shard->partition placement
     * balanced.
+    *
+    * `postings` is (shardId, term, docId, tf, dl), plus `pos` only for
+    * positional builds: non-positional postings carry no pos column through
+    * the exchange, and their blocks get an empty positions stream.
     */
-  def encodeBlocks(
-      spark: SparkSession,
-      rel: Relations,
-      cfg: Config = Config()
-  ): Dataset[PostingBlock] = encodePostings(spark, rel.postings, cfg)
-
   def encodePostings(
       spark: SparkSession,
       postings: DataFrame,
@@ -202,34 +204,17 @@ object IndexBuilder {
     val blockSize = cfg.blockSize
     val parts = if (cfg.encodePartitions > 0) cfg.encodePartitions
       else spark.sparkContext.defaultParallelism
-
-    // the shuffled row is (shardId, term, docId, tf, dl) + pos ONLY for
-    // positional builds — non-positional postings have no pos column and
-    // the empty lists are synthesized after the exchange, where they cost
-    // an allocation instead of shuffle bytes
-    val hasPos = postings.columns.contains("pos")
-    val exchanged = postings
+    val withPositions = postings.columns.contains("pos")
+    val cols = Seq("shardId", "term", "docId", "tf", "dl") ++
+      (if (withPositions) Seq("pos") else Nil)
+    val rows = postings
       .repartition(parts, $"shardId", $"term")
       .sortWithinPartitions($"shardId", $"term", $"docId")
-    if (hasPos)
-      exchanged
-        .select($"shardId", $"term", $"docId", $"tf", $"dl", $"pos")
-        .as[(Int, String, Long, Int, Int, Seq[Int])]
-        .mapPartitions { it => new BlockEncodeIterator(it.buffered, blockSize) }
-    else {
-      // hot non-positional path (the headline build): encode straight off
-      // the exchanged InternalRows into primitive column buffers —
-      // byte-identical blocks without the per-posting tuple + Codec.P
-      // allocations of the typed path (~2 objects x |postings| saved;
-      // guide §1.2 step 2)
-      val projected = exchanged.select($"shardId", $"term", $"docId", $"tf", $"dl")
-      val rdd = projected.queryExecution.toRdd.mapPartitions { rows =>
-        new RawBlockEncodeIterator(rows.buffered, blockSize)
-      }
-      spark.createDataset(rdd)
-    }
+      .select(cols.map(col): _*)
+      .queryExecution.toRdd
+      .mapPartitions(it => new BlockEncoder(it.buffered, blockSize, withPositions))
+    spark.createDataset(rows)
   }
-  private val EmptyIntArray: Array[Int] = Array.emptyIntArray
 
   /** BM25 per-term partial (without idf) — delegates to the ONE formula
     * definition in [[graft.query.Bm25.partial]] so the block-bound math
@@ -238,17 +223,24 @@ object IndexBuilder {
   def partial(tf: Int, dl: Int, k1: Double, b: Double, avgdl: Double): Double =
     graft.query.Bm25.partial(tf, dl, k1, b, avgdl)
 
-  /** Streaming raw-row encoder: the non-positional twin of
-    * [[BlockEncodeIterator]] over InternalRows (shardId, term, docId, tf,
-    * dl), same block boundaries and BYTE-IDENTICAL payloads
-    * ([[Codec.encodeRaw]]). UTF8String term comparison happens against the
-    * row's buffer directly; the String materializes once per (shard, term)
-    * group, not once per posting. InternalRows may be reused by the
-    * upstream iterator, so nothing row-backed is retained across next().
+  /** Streaming block encoder over (shardId, term, docId)-sorted
+    * InternalRows (shardId, term, docId, tf, dl[, pos]): groups each
+    * (shard, term) sub-list into blocks of <= blockSize postings without
+    * materializing a term's full posting list (a head term at 10^12 docs
+    * does not fit in one task's heap; a 128-entry block always does).
+    * Postings land in primitive column buffers ([[Codec.encodeRaw]]); with
+    * `withPositions`, each posting's position list (column 5) is copied out
+    * of the row and the block's lists become its positions stream
+    * ([[Codec.encodePositions]]), otherwise that stream is empty. The
+    * UTF8String term is compared against the row's buffer directly and
+    * materializes as a String once per (shard, term) group. InternalRows
+    * may be reused by the upstream iterator, so nothing row-backed is
+    * retained across next().
     */
-  private final class RawBlockEncodeIterator(
+  private[graft] final class BlockEncoder(
       it: BufferedIterator[org.apache.spark.sql.catalyst.InternalRow],
-      blockSize: Int
+      blockSize: Int,
+      withPositions: Boolean
   ) extends Iterator[PostingBlock] {
 
     private var curShard = -1
@@ -258,6 +250,7 @@ object IndexBuilder {
     private val docIds = new Array[Long](blockSize)
     private val tfs = new Array[Int](blockSize)
     private val dls = new Array[Int](blockSize)
+    private val posLists = if (withPositions) new Array[Array[Int]](blockSize) else null
 
     override def hasNext: Boolean = it.hasNext
 
@@ -284,6 +277,7 @@ object IndexBuilder {
         docIds(n) = r.getLong(2)
         tfs(n) = tf
         dls(n) = dl
+        if (withPositions) posLists(n) = r.getArray(5).toIntArray()
         if (tf > maxTf) maxTf = tf
         if (dl < minDl) minDl = dl
         sumTf += tf
@@ -300,66 +294,8 @@ object IndexBuilder {
         minDl = minDl,
         sumTf = sumTf,
         payload = Codec.encodeRaw(docIds, tfs, dls, n),
-        positions = Array.emptyByteArray
-      )
-      blockIdx += 1
-      block
-    }
-  }
-
-  /** Streaming encoder: groups a (shardId, term, docId)-sorted iterator into
-    * blocks of <= blockSize postings without materializing a term's full
-    * posting list (a head term at 10^12 docs does not fit in one task's
-    * heap; a 128-entry block always does).
-    */
-  private final class BlockEncodeIterator(
-      it: BufferedIterator[(Int, String, Long, Int, Int, Seq[Int])],
-      blockSize: Int
-  ) extends Iterator[PostingBlock] {
-
-    private var curShard = -1
-    private var curTerm: String = null
-    private var blockIdx = 0
-
-    override def hasNext: Boolean = it.hasNext
-
-    override def next(): PostingBlock = {
-      val (shard, term, _, _, _, _) = it.head
-      if (shard != curShard || term != curTerm) {
-        curShard = shard; curTerm = term; blockIdx = 0
-      }
-      val buf = new scala.collection.mutable.ArrayBuffer[Codec.P](blockSize)
-      val posBuf = new scala.collection.mutable.ArrayBuffer[Array[Int]](blockSize)
-      var maxTf = 0
-      var minDl = Int.MaxValue
-      var sumTf = 0L
-      var anyPos = false
-      while (it.hasNext && buf.size < blockSize && {
-          val h = it.head; h._1 == shard && h._2 == term
-        }) {
-        val (_, _, docId, tf, dl, pos) = it.next()
-        buf += Codec.P(docId, tf, dl)
-        // shared empty singleton: pos.toArray would allocate a fresh empty
-        // array per posting on non-positional builds (~10^8 per 2M-turn
-        // build — measurable GC pressure on the encode stage)
-        if (pos.isEmpty) posBuf += EmptyIntArray
-        else { posBuf += pos.toArray; anyPos = true }
-        if (tf > maxTf) maxTf = tf
-        if (dl < minDl) minDl = dl
-        sumTf += tf
-      }
-      val block = PostingBlock(
-        shardId = shard,
-        term = term,
-        blockIdx = blockIdx,
-        minDocId = buf.head.docId,
-        maxDocId = buf.last.docId,
-        n = buf.size,
-        maxTf = maxTf,
-        minDl = minDl,
-        sumTf = sumTf,
-        payload = Codec.encode(buf.toSeq),
-        positions = if (anyPos) Codec.encodePositions(posBuf.toSeq)
+        positions =
+          if (withPositions) Codec.encodePositions(ArraySeq.unsafeWrapArray(posLists).take(n))
           else Array.emptyByteArray
       )
       blockIdx += 1

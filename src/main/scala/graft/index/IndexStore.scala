@@ -276,6 +276,49 @@ object IndexStore {
     }
   }
 
+  /** Per-shard lineage of a blocks Dataset, plus its token total (Σ sumTf),
+    * from ONE aggregate — and the one definition of the lineage checksum:
+    * the sum over the shard's blocks of the 64-bit xxHash of (term,
+    * payload), each hash masked to 32 bits so the sum cannot overflow a
+    * long even at trillions of blocks (Spark 4 ANSI mode makes overflow
+    * fatal). Every field is a sum over blocks, so over a loaded index's
+    * blocks (all live dirs) it reproduces what the manifest recorded.
+    * Sorted by shardId.
+    */
+  private[graft] def shardLineage(blocks: Dataset[PostingBlock]): (Seq[ShardLineage], Long) = {
+    val rows = blocks
+      .groupBy(col("shardId"))
+      .agg(
+        sum(col("n")).as("postings"),
+        count(lit(1)).as("blocks"),
+        sum(length(col("payload"))).as("payloadBytes"),
+        sum(xxhash64(col("term"), col("payload")).bitwiseAND(lit(0xffffffffL))).as("checksum"),
+        sum(col("sumTf")).as("sumTf"))
+      .collect()
+    (rows.map(r => ShardLineage(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).sortBy(_.shardId).toSeq,
+      rows.map(_.getLong(5)).sum)
+  }
+
+  /** Writes the blocks of `shards` under `path`, one `shardId=K` dir each,
+    * after clearing whatever an earlier crashed write of those shards left
+    * there. Blocks are clustered by shardId first: without it every task
+    * writes a file into every shard dir (tasks x shards tiny files —
+    * measured as the dominant commit cost and a per-query scan tax
+    * afterwards).
+    */
+  private def writeShards(blocks: Dataset[PostingBlock], path: String, shards: Seq[Int]): Unit = {
+    shards.foreach(s => org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(s"$path/shardId=$s")))
+    val parts = math.max(1,
+      math.min(blocks.sparkSession.sparkContext.defaultParallelism, shards.size))
+    blocks.filter(col("shardId").isin(shards: _*))
+      .repartition(parts, col("shardId"))
+      .sortWithinPartitions("shardId", "term", "minDocId")
+      .write.mode("append").option("compression", IndexCodec)
+      .partitionBy("shardId").parquet(path)
+  }
+
   // ------------------------------------------------------------------ build
 
   final case class BuildResult(manifest: Manifest, dir: String)
@@ -347,22 +390,8 @@ object IndexStore {
 
     // per-shard lineage + corpus token total from ONE aggregate over the
     // encoded blocks (this job also materializes the blocks cache)
-    val lineageRows = blocks
-      .groupBy($"shardId")
-      .agg(
-        sum($"n").as("postings"),
-        count(lit(1)).as("blocks"),
-        sum(length($"payload")).as("payloadBytes"),
-        // mask to 32 bits so the sum cannot overflow a long even at
-        // trillions of blocks (Spark 4 ANSI mode makes overflow fatal)
-        sum(xxhash64($"term", $"payload").bitwiseAND(lit(0xffffffffL))).as("checksum"),
-        sum($"sumTf").as("sumTf"))
-      .collect()
-    val lineage: Map[Int, ShardLineage] = lineageRows
-      .map(r => r.getInt(0) -> ShardLineage(r.getInt(0), r.getLong(1),
-        r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toMap
-    val totalTokens = lineageRows.map(_.getLong(5)).sum
+    val (shards, totalTokens) = shardLineage(blocks)
+    val lineage: Map[Int, ShardLineage] = shards.map(s => s.shardId -> s).toMap
     val avgdl = if (n == 0) 0.0 else totalTokens.toDouble / n
     val corpus = CorpusStats(n, avgdl)
     val encodeSec = (now() - tEnc0) / 1e9
@@ -390,7 +419,6 @@ object IndexStore {
       }
 
     val tCommit0 = now()
-    val allShards = lineage.keys.toSeq.sorted
     // seed the committed lineage ONLY on a true resume (same snapshot +
     // config, incomplete manifest) — seeding from a stale manifest during a
     // config-change rebuild would list shards as committed that the fresh
@@ -414,26 +442,13 @@ object IndexStore {
       complete, history = Seq(snapshotId), positional = cfg.storePositions,
       nextDocId = n)
 
-    val pending = allShards.filterNot(committed.contains)
+    val pending = shards.map(_.shardId).filterNot(committed.contains)
     pending.grouped(math.max(1, commitBatchShards)).foreach { batch =>
       failAfterShards.foreach { limit =>
         if (commitsThisRun >= limit)
           throw new RuntimeException(s"injected failure after $limit shard commits")
       }
-      // clear any partially-committed leftovers of an earlier crashed job
-      batch.foreach { s =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$dir/blocks/shardId=$s"))
-      }
-      // cluster by shardId first: without this every task writes a file
-      // into every shard dir (tasks x shards tiny files — measured as the
-      // dominant commit cost and a per-query scan tax afterwards)
-      val writeParts = math.max(1, math.min(
-        spark.sparkContext.defaultParallelism, batch.size))
-      blocks.filter($"shardId".isin(batch: _*))
-        .repartition(writeParts, $"shardId")
-        .sortWithinPartitions($"shardId", $"term", $"minDocId")
-        .write.mode("append").option("compression", IndexCodec).partitionBy("shardId").parquet(s"$dir/blocks")
+      writeShards(blocks, s"$dir/blocks", batch)
       done ++= batch.map(lineage)
       commitsThisRun += batch.size
       writeManifest(dir, partialManifest(complete = false, Map.empty))
@@ -442,8 +457,8 @@ object IndexStore {
     Await.result(auxF, Duration.Inf)
     val auxSec = (now() - tAux0) / 1e9
     val buildSec = (System.nanoTime() - t0) / 1e9
-    val totalPostings = lineage.values.map(_.postings).sum.toDouble
-    val perShard = lineage.values.map(_.postings.toDouble)
+    val totalPostings = shards.map(_.postings).sum.toDouble
+    val perShard = shards.map(_.postings.toDouble)
     val skewRatio =
       if (perShard.isEmpty) 1.0 else perShard.max / (perShard.sum / perShard.size)
     val metrics = Map(
@@ -457,7 +472,7 @@ object IndexStore {
       "postings" -> totalPostings,
       "postingsPerSec" -> totalPostings / buildSec,
       "bytesRaw" -> totalPostings * 16, // uncompressed (docId 8B + tf 4B + dl 4B)
-      "bytesCompressed" -> lineage.values.map(_.payloadBytes).sum.toDouble,
+      "bytesCompressed" -> shards.map(_.payloadBytes).sum.toDouble,
       "skewRatio" -> skewRatio
     )
     val m = partialManifest(complete = true, metrics)
@@ -556,28 +571,14 @@ object IndexStore {
 
     val blocks = IndexBuilder.encodePostings(spark, p0.postings, cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deltaRows = blocks
-      .groupBy($"shardId")
-      .agg(sum($"n").as("postings"), count(lit(1)).as("blocks"),
-        sum(length($"payload")).as("payloadBytes"),
-        sum(xxhash64($"term", $"payload").bitwiseAND(lit(0xffffffffL))).as("checksum"),
-        sum($"sumTf").as("sumTf"))
-      .collect()
-    val deltaLineage: Map[Int, ShardLineage] = deltaRows
-      .map(r => r.getInt(0) -> ShardLineage(r.getInt(0), r.getLong(1),
-        r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toMap
-    val deltaTokens = deltaRows.map(_.getLong(5)).sum
+    val (deltaLineage, deltaTokens) = shardLineage(blocks)
 
     // a delta of only token-less docs (e.g. all-stopword text) produces
     // ZERO blocks: a parquet write of zero rows leaves an unreadable dir,
     // so reference the delta blocks dir only when it will hold data
     val hasBlocks = deltaLineage.nonEmpty
     if (hasBlocks)
-      blocks
-        .repartition(math.max(1, spark.sparkContext.defaultParallelism), $"shardId")
-        .sortWithinPartitions($"shardId", $"term", $"minDocId")
-        .write.mode("overwrite").option("compression", IndexCodec).partitionBy("shardId").parquet(s"$dir/$deltaBlocksDir")
+      writeShards(blocks, s"$dir/$deltaBlocksDir", deltaLineage.map(_.shardId))
 
     // merged corpus stats: token totals are exact integers, so the combined
     // avgdl is exact too
@@ -604,16 +605,12 @@ object IndexStore {
         .write.mode("overwrite").option("compression", IndexCodec).parquet(s"$dir/$tsDirFinal")
     }
 
-    val mergedLineage = (base.shards.map(_.shardId).toSet ++ deltaLineage.keySet)
-      .toSeq.sorted.map { sid =>
-        val b0 = base.shards.find(_.shardId == sid)
-        val d = deltaLineage.get(sid)
-        ShardLineage(sid,
-          b0.map(_.postings).getOrElse(0L) + d.map(_.postings).getOrElse(0L),
-          b0.map(_.blocks).getOrElse(0L) + d.map(_.blocks).getOrElse(0L),
-          b0.map(_.payloadBytes).getOrElse(0L) + d.map(_.payloadBytes).getOrElse(0L),
-          b0.map(_.checksum).getOrElse(0L) + d.map(_.checksum).getOrElse(0L))
-      }
+    // every lineage field is a sum over blocks, so a shard's lineage over
+    // base + delta dirs is the shard-wise sum
+    val mergedLineage = (base.shards ++ deltaLineage).groupBy(_.shardId).values
+      .map(_.reduce((a, d) => ShardLineage(a.shardId, a.postings + d.postings,
+        a.blocks + d.blocks, a.payloadBytes + d.payloadBytes, a.checksum + d.checksum)))
+      .toSeq.sortBy(_.shardId)
     val perShard = mergedLineage.map(_.postings.toDouble)
     val (newHistory, historyMetric) = advanceHistory(dir, base, snapshotId)
     val m = Manifest(snapshotId, cfg.analyzer.fingerprint, cfg.params.k1,
@@ -981,22 +978,11 @@ object IndexStore {
     val blocks = IndexBuilder.encodePostings(spark, postings,
         cfg.copy(blockSize = m.blockSize))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lineage = blocks
-      .groupBy($"shardId")
-      .agg(sum($"n").as("postings"), count(lit(1)).as("blocks"),
-        sum(length($"payload")).as("payloadBytes"),
-        sum(xxhash64($"term", $"payload").bitwiseAND(lit(0xffffffffL))).as("checksum"))
-      .collect()
-      .map(r => ShardLineage(r.getInt(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-      .sortBy(_.shardId).toSeq
+    val (lineage, _) = shardLineage(blocks)
     // an index can legitimately hold docs but zero postings (token-less
     // corpus): never reference a zero-row parquet dir
     if (lineage.nonEmpty)
-      blocks
-        .repartition(math.max(1, spark.sparkContext.defaultParallelism), $"shardId")
-        .sortWithinPartitions($"shardId", $"term", $"minDocId")
-        .write.mode("overwrite").option("compression", IndexCodec).partitionBy("shardId").parquet(s"$dir/$stageBlocks")
+      writeShards(blocks, s"$dir/$stageBlocks", lineage.map(_.shardId))
     // idx.docs is the LIVE view, so compaction purges tombstoned docs
     // physically here too; a fully-deleted index would be a zero-row write
     // (unreadable parquet dir) — reference no docs dir at all instead

@@ -3,10 +3,17 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
-import graft.index.Codec
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.index.{Codec, IndexBuilder}
 
 /** Codec properties (SURVEY §5.2.2 / FIXTURES §5): varint + delta block
-  * roundtrip over sorted docId lists with gaps from 1 up to ~2^40.
+  * roundtrip over sorted docId lists with gaps from 1 up to ~2^40, and the
+  * build's streaming block encoder against the reference encoders.
   */
 class CodecSpec extends AnyFunSuite {
 
@@ -80,6 +87,64 @@ class CodecSpec extends AnyFunSuite {
       assert(java.util.Arrays.equals(
         Codec.encodeRaw(ids, tfs, dls, ids.length), Codec.encode(ps)),
         "encodeRaw bytes diverge from encode")
+    }
+  }
+
+  test("BlockEncoder == Codec.encode + encodePositions on random sorted posting rows") {
+    final case class Posting(docId: Long, tf: Int, dl: Int, pos: Array[Int])
+    val gen = for {
+      seed <- Gen.choose(0L, Long.MaxValue)
+      blockSize <- Gen.oneOf(1, 3, 8, Codec.BlockSize)
+      withPositions <- Gen.oneOf(true, false)
+    } yield (seed, blockSize, withPositions)
+    forAllSeeded(gen, 200) { case (seed, blockSize, withPositions) =>
+      val rnd = new scala.util.Random(seed)
+      // a few shards sharing one small vocabulary, so one term also spans a
+      // shard change; group lengths run past several blocks
+      val shards = (0 until 12).filter(_ => rnd.nextInt(3) == 0).take(3)
+      val groups: Seq[((Int, String), Seq[Posting])] = for {
+        shard <- shards
+        term <- Seq("a", "b", "bc", "é").filter(_ => rnd.nextBoolean())
+      } yield {
+        val len = 1 + rnd.nextInt(3 * blockSize + 2)
+        val ids = Iterator.iterate(rnd.nextInt(50).toLong)(_ + 1 + rnd.nextInt(1000)).take(len)
+        (shard, term) -> ids.map { id =>
+          val tf = 1 + rnd.nextInt(4)
+          val pos = Iterator.iterate(1 + rnd.nextInt(5))(_ + 1 + rnd.nextInt(6)).take(tf).toArray
+          Posting(id, tf, pos.last + rnd.nextInt(5), pos)
+        }.toSeq
+      }
+      def fields(shard: Int, term: String, blockIdx: Int, minDocId: Long, maxDocId: Long,
+          n: Int, maxTf: Int, minDl: Int, sumTf: Long, payload: Array[Byte],
+          positions: Array[Byte]) =
+        (shard, term, blockIdx, minDocId, maxDocId, n, maxTf, minDl, sumTf,
+          payload.toSeq, positions.toSeq)
+      val want = groups.flatMap { case ((shard, term), ps) =>
+        ps.grouped(blockSize).zipWithIndex.map { case (b, i) =>
+          fields(shard, term, i, b.head.docId, b.last.docId, b.size, b.map(_.tf).max,
+            b.map(_.dl).min, b.map(_.tf.toLong).sum,
+            Codec.encode(b.map(p => Codec.P(p.docId, p.tf, p.dl))),
+            if (withPositions) Codec.encodePositions(b.map(_.pos)) else Array.emptyByteArray)
+        }
+      }
+      val rows: Seq[InternalRow] = groups.flatMap { case ((shard, term), ps) =>
+        ps.map { p =>
+          val base = Array[Any](shard, UTF8String.fromString(term), p.docId, p.tf, p.dl)
+          new GenericInternalRow(
+            if (withPositions) base :+ new GenericArrayData(p.pos) else base)
+        }
+      }
+      // also through an UnsafeProjection, which reuses ONE output row the
+      // way the exchange's iterator does
+      val types = Array[DataType](IntegerType, StringType, LongType, IntegerType, IntegerType) ++
+        (if (withPositions) Array[DataType](ArrayType(IntegerType, containsNull = false))
+          else Array.empty[DataType])
+      Seq(rows.iterator, rows.iterator.map(UnsafeProjection.create(types))).foreach { it =>
+        val got = new IndexBuilder.BlockEncoder(it.buffered, blockSize, withPositions).map(b =>
+          fields(b.shardId, b.term, b.blockIdx, b.minDocId, b.maxDocId, b.n, b.maxTf,
+            b.minDl, b.sumTf, b.payload, b.positions)).toSeq
+        assert(got == want, s"seed=$seed blockSize=$blockSize withPositions=$withPositions")
+      }
     }
   }
 }

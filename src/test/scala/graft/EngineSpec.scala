@@ -147,8 +147,11 @@ class EngineSpec extends AnyFunSuite {
     val a = resumed.manifest.shards.map(s => (s.shardId, s.postings, s.blocks, s.payloadBytes, s.checksum)).sorted
     val b = full.manifest.shards.map(s => (s.shardId, s.postings, s.blocks, s.payloadBytes, s.checksum)).sorted
     assert(a == b, "resumed index lineage differs from uninterrupted build")
-    // and the resumed index answers queries identically
+    // the recorded lineage is what the resumed index's blocks hash to
     val idx = IndexStore.load(spark, dirA)
+    assert(resumed.manifest.shards == IndexStore.shardLineage(idx.blocks)._1,
+      "resumed manifest lineage differs from its blocks'")
+    // and the resumed index answers queries identically
     val want = OracleBM25.topK(oracle, "term0000 term0001", 10, cfg.analyzer)
     val got = QueryEngine.wandTopK(spark, idx.blocks, idx.termStats, idx.corpus,
       "term0000 term0001", 10, cfg).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

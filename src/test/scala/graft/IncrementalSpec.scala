@@ -315,7 +315,13 @@ class IncrementalSpec extends AnyFunSuite {
       val dir = Files.createTempDirectory(s"graft-fuzz-$seed").toString
       var corpus = shiftConvs(TranscriptGen.turns(seed * 7L, nConvs = 12), f"a$seed%02d-")
       var dropped = Set.empty[Long]
+      // the lineage the manifest records must be what its live blocks hash to
+      def checkLineage(step: String): Unit =
+        assert(IndexStore.readManifest(dir).get.shards ==
+          IndexStore.shardLineage(IndexStore.load(spark, dir).blocks)._1,
+          s"seed=$seed $step: recorded shard lineage differs from the blocks'")
       IndexStore.build(spark, ds(corpus), dir, s"fuzz-$seed-base", cfg)
+      checkLineage("build")
       (1 to 6).foreach { i =>
         rnd.nextInt(4) match {
           case 0 => // append, sometimes crashing just before the commit first
@@ -357,6 +363,7 @@ class IncrementalSpec extends AnyFunSuite {
               dropped ++= slice
             }
         }
+        checkLineage(s"step $i")
       }
       val idx = IndexStore.load(spark, dir)
       val full = OracleBM25.corpus(corpus, cfg.analyzer)

@@ -45,6 +45,26 @@ class PlanSpec extends AnyFunSuite {
       "postings plan acquired a shuffle before the encode exchange:\n" + p)
   }
 
+  test("positional postings encode like non-positional ones: no per-posting objects") {
+    import spark.implicits._
+    val turns = spark.createDataset(TestKit.TranscriptGen.turns(seed = 5, nConvs = 10))
+    def encodePlan(positional: Boolean): String = {
+      val cfg = IndexBuilder.Config(docIdPartitions = 4, numShards = 8,
+        storePositions = positional)
+      val p0 = IndexBuilder.prepare(spark, turns,
+        java.nio.file.Files.createTempDirectory("graft-docs").toString, cfg)
+      plan(IndexBuilder.encodePostings(spark, p0.postings, cfg).toDF())
+    }
+    // operator names, one per plan line (tree glyphs and codegen stage ids stripped)
+    def shape(p: String): Seq[String] =
+      p.linesIterator.map(_.replaceAll("^[\\s:+-]*(\\*\\(\\d+\\) )?", "")
+        .takeWhile(_.isLetter)).toSeq
+    val pos = encodePlan(positional = true)
+    assert(!pos.contains("DeserializeToObject"),
+      "positional encode deserializes each posting into an object:\n" + pos)
+    assert(shape(pos) == shape(encodePlan(positional = false)), pos)
+  }
+
   test("exhaustive top-k plans as TakeOrderedAndProject with broadcast stats") {
     import spark.implicits._
     val turns = spark.createDataset(TestKit.TranscriptGen.turns(seed = 6, nConvs = 10))
