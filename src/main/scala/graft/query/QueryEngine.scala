@@ -1,7 +1,11 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec,
+  InputAdapter, ProjectExec, SparkPlan, UnionExec, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Analyzer
 import graft.index.{Codec, IndexBuilder, DocIdSet}
@@ -28,6 +32,16 @@ import graft.model._
   *     bm25_searcher.py:111). Block-max metadata is an upper bound used
   *     only to SKIP work, never to approximate — exactness is
   *     property-tested against the exhaustive path.
+  *
+  * Serving a term query on a loaded index is ONE Spark job: the query
+  * terms' idfs and every wildcard expansion come from a driver-side term
+  * dictionary ([[TermDictionary]], loaded once per `termStats` relation),
+  * and the scorer reads the term-pushed block scan as the files lie — each
+  * shard's blocks of one generation are one file, so a task that reads
+  * whole files holds every posting of its docs and needs no shuffle
+  * ([[shardGrouped]]). Blocks that do not meet that gate (persisted,
+  * in-memory, split or multi-file shard dirs) are exchanged on shardId as
+  * before.
   *
   * Contrast with the reference's scorer, which funneled every document to
   * a single GPU task via repartition(1) (bm25_searcher.py:102-107); here
@@ -144,10 +158,12 @@ object QueryEngine {
   }
 
   /** Per-shard top-k candidates (qid, docId, score) of a whole batch of
-    * ranked queries: one collect of the query terms' idfs, then ONE
-    * term-pushed block scan exchanged on shardId and scored by
-    * [[BoolScorer]] — the block scan and the per-shard block decodes are
-    * shared by every query. None when no query can match.
+    * ranked queries: the query terms' idfs from the term dictionary (one
+    * collect of just those terms when the dictionary is over its cap),
+    * then ONE term-pushed block scan grouped by shard ([[shardGrouped]]:
+    * no exchange on a loaded index) and scored by [[BoolScorer]] — the
+    * block scan and the per-shard block decodes are shared by every query.
+    * None when no query can match.
     *
     * A term without postings matches nowhere: it drops out, and a query
     * left with fewer than m terms matches nothing (so one absent required
@@ -171,9 +187,11 @@ object QueryEngine {
       q.phrases.forall(_._1.nonEmpty) && q.allow.forall(_.nonEmpty))
     val names = satisfiable.flatMap(q => q.terms.map(_._1) ++ q.excluded).distinct
     if (names.isEmpty) return None
-    val idfs: Map[String, Double] = termStats
-      .filter($"term".isin(names: _*))
-      .collect().map(t => t.term -> t.idf).toMap
+    val idfs: Map[String, Double] = termDictionary(termStats) match {
+      case Some(dict) => names.flatMap(t => dict.idf(t).map(t -> _)).toMap
+      case None => termStats.filter($"term".isin(names: _*))
+        .collect().map(t => t.term -> t.idf).toMap
+    }
     val live = satisfiable.flatMap { q =>
       val qts = q.terms.collect {
         case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
@@ -193,20 +211,65 @@ object QueryEngine {
     val kk = k
     val qB = spark.sparkContext.broadcast(live)
     val tsB = tombstones.broadcastVia(spark)
-    // one task per core, several shards per task (scorePartitionBatch
-    // iterates shard groups); HASH partitioning on shardId keeps a shard's
-    // blocks together without a RangePartitioner's extra sampling job
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    Some(scoringBlocks(blocks, live.flatMap(_.phrases.flatMap(_._1)).distinct)
+    val scan = scoringBlocks(blocks, live.flatMap(_.phrases.flatMap(_._1)).distinct)
       .filter($"term".isin(scanNames: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
+    Some(shardGrouped(scan, blocks, cfg)
       .mapPartitions { it =>
         BoolScorer.scorePartitionBatch(it.buffered, qB.value, kk, p.k1, p.b, avgdl,
           tsB.value)
       }
       .toDF("qid", "docId", "score"))
+  }
+
+  /** `scan` (a narrow, term-pushed view of `blocks`) arranged for the
+    * shard scorers ([[Shard]]), which read contiguous same-shard rows as
+    * one group. Every block write stores one file per shard dir per
+    * generation, and a doc's postings all sit in its shard's file of the
+    * generation that indexed it; a group of whole files therefore holds
+    * every posting of its docs and is scored exactly on its own. So when
+    * each file reaches one task whole ([[wholeFileScan]]) the scan is
+    * used as it is: no exchange, no sort. Otherwise the blocks are
+    * exchanged on shardId (one task per core, several shards per task;
+    * hash partitioning keeps a shard's blocks together without a
+    * RangePartitioner's sampling job) and sorted.
+    */
+  private def shardGrouped(scan: Dataset[PostingBlock], blocks: Dataset[PostingBlock],
+      cfg: IndexBuilder.Config): Dataset[PostingBlock] =
+    if (wholeFileScan(blocks)) scan
+    else {
+      val parts = math.max(1, math.min(cfg.numShards,
+        scan.sparkSession.sparkContext.defaultParallelism))
+      scan.repartition(parts, col("shardId"))
+        .sortWithinPartitions(col("shardId"), col("term"), col("minDocId"))
+    }
+
+  /** Whether every file of `blocks` reaches one scan task whole, decided
+    * on the driver from the physical plan and the scans' file listings (no
+    * Spark job): the plan holds only file scans and narrow operators, each
+    * scan is partitioned by shardId alone with exactly one file per
+    * `shardId=K` dir, and no file exceeds the split size Spark computes
+    * for that scan under the current conf (a larger file would be split
+    * across tasks). The plan is built afresh on every call, so a relation
+    * persisted since an earlier query (an in-memory scan) fails the gate.
+    */
+  private[query] def wholeFileScan(blocks: Dataset[PostingBlock]): Boolean = {
+    val qe = blocks.queryExecution
+    val spark = qe.sparkSession
+    val plan = spark.sessionState.executePlan(qe.logical).executedPlan
+    def narrow(p: SparkPlan): Boolean = p match {
+      case _: FileSourceScanExec | _: ProjectExec | _: FilterExec | _: UnionExec |
+          _: ColumnarToRowExec | _: WholeStageCodegenExec | _: InputAdapter =>
+        p.children.forall(narrow)
+      case _ => false
+    }
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    narrow(plan) && scans.nonEmpty && scans.forall { s =>
+      val listing = s.selectedPartitions
+      val maxSplit = FilePartition.maxSplitBytes(spark, listing)
+      s.relation.partitionSchema.fieldNames.sameElements(Seq("shardId")) &&
+        listing.filePartitionIterator.forall(p =>
+          p.numFiles == 1 && p.files.forall(_.getLen <= maxSplit))
+    }
   }
 
   /** The docIds of every posting of `terms`, decoded in-plan from the
@@ -299,11 +362,12 @@ object QueryEngine {
 
   // --------------------------------------------------- shared scorer glue
 
-  /** ONE shard group consumed from a (shardId, term, minDocId)-sorted
-    * block stream: every block of the head shard, keyed by term and
-    * docId-sorted, with per-shard decode memos — a block read by several
-    * queries, or by a query's terms and its phrases, decodes once, and a
-    * block's positions decode only when a positional check asks. The
+  /** ONE shard group consumed from a block stream whose same-shard rows
+    * are contiguous ([[shardGrouped]]): the head row's shard's blocks up to
+    * the next shard change, keyed by term and docId-sorted, with per-group
+    * decode memos — a block read by several queries, or by a query's terms
+    * and its phrases, decodes once, and a block's positions decode only
+    * when a positional check asks. The
     * single definition behind both block scorers ([[BoolScorer]] and
     * [[PhraseScorer]]) — a shard-grouping fix lands everywhere at once.
     */
@@ -508,11 +572,14 @@ object QueryEngine {
       .flatMap(t => Analyzer.tokenize(t, Analyzer.noStopwords).lastOption)
       .groupBy(identity).view.mapValues(_.size).toSeq.sortBy(_._1)
 
-  /** The one dictionary scan behind every wildcard expansion: per-stem
-    * capped term lists, all stems in ONE job (a union of per-stem capped
-    * scans, each with its StringStartsWith predicate pushed to the
-    * termstats parquet). Shared by the single-query paths and
-    * [[searchBatch]], which expands every query's stems together.
+  /** The one lookup behind every wildcard expansion: per-stem capped term
+    * lists, the first [[PrefixExpansionCap]] dictionary terms with the
+    * stem as prefix in Spark's string order. A binary-search range of the
+    * term dictionary, no Spark job; above [[DictionaryCap]] terms, ONE
+    * dictionary scan for all stems (a union of per-stem capped scans, each
+    * with its StringStartsWith predicate pushed to the termstats parquet).
+    * Shared by the single-query paths and [[searchBatch]], which expands
+    * every query's stems together.
     */
   private def expandStems(
       spark: SparkSession,
@@ -520,15 +587,92 @@ object QueryEngine {
       stems: Seq[String]): Map[String, Seq[String]] = {
     import spark.implicits._
     if (stems.isEmpty) return Map.empty
-    val scans = stems.distinct.map { p =>
-      termStats.filter($"term".startsWith(p)).select($"term")
-        .orderBy($"term").limit(PrefixExpansionCap)
-        .withColumn("pfx", lit(p))
+    termDictionary(termStats) match {
+      case Some(dict) =>
+        stems.distinct.map(p => p -> dict.withPrefix(p, PrefixExpansionCap).sorted).toMap
+      case None =>
+        val scans = stems.distinct.map { p =>
+          termStats.filter($"term".startsWith(p)).select($"term")
+            .orderBy($"term").limit(PrefixExpansionCap)
+            .withColumn("pfx", lit(p))
+        }
+        scans.reduce(_ unionByName _).collect()
+          .groupBy(_.getString(1)).view
+          .mapValues(_.map(_.getString(0)).toSeq.sorted).toMap
     }
-    scans.reduce(_ unionByName _).collect()
-      .groupBy(_.getString(1)).view
-      .mapValues(_.map(_.getString(0)).toSeq.sorted).toMap
   }
+
+  /** Most terms a driver-side [[TermDictionary]] holds (~100 B a term on
+    * the driver); a larger vocabulary keeps the per-query lookups.
+    */
+  private[query] val DictionaryCap = 1000000
+
+  /** Spark's string order — UTF-8 bytes compared unsigned
+    * (`UTF8String.compareTo`), the order `orderBy(term)` sorts in. It
+    * differs from `String.compareTo` (UTF-16 code units) for terms
+    * mixing supplementary characters with the BMP's top block.
+    */
+  private val SparkStringOrder: Ordering[UTF8String] = (a, b) => a.compareTo(b)
+
+  /** Every term of an index with its idf, sorted in [[SparkStringOrder]]:
+    * the idf lookup is a binary search and a prefix's terms are one
+    * contiguous range (a UTF-8 prefix is a byte prefix).
+    */
+  private[query] final class TermDictionary(terms: Array[String], idfs: Array[Double]) {
+    /** First index whose term is not below `key`. */
+    private def lowerBound(key: UTF8String): Int = {
+      var lo = 0
+      var hi = terms.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (SparkStringOrder.lt(UTF8String.fromString(terms(mid)), key)) lo = mid + 1
+        else hi = mid
+      }
+      lo
+    }
+
+    def idf(term: String): Option[Double] = {
+      val i = lowerBound(UTF8String.fromString(term))
+      if (i < terms.length && terms(i) == term) Some(idfs(i)) else None
+    }
+
+    /** The first `cap` terms starting with `stem`, in Spark's order: what
+      * `filter(startsWith(stem)).orderBy(term).limit(cap)` returns.
+      */
+    def withPrefix(stem: String, cap: Int): Seq[String] = {
+      val p = UTF8String.fromString(stem)
+      Iterator.range(lowerBound(p), terms.length).map(terms(_))
+        .takeWhile(t => UTF8String.fromString(t).startsWith(p)).take(cap).toSeq
+    }
+  }
+
+  /** One dictionary (or None: more than `cap` terms) per `termStats`
+    * relation, held as long as the relation is. Keys are weak and compare
+    * by identity (a Dataset does not override equals): an Index handle
+    * passes the same relation on every query, and a reloaded index brings
+    * a new one, so an entry never goes stale.
+    */
+  private val dictionaries =
+    new java.util.WeakHashMap[Dataset[TermStat], Option[TermDictionary]]()
+
+  /** The dictionary of `termStats`, loaded on first use by one collect of
+    * at most `cap` + 1 (term, idf) rows; the first call's `cap` decides
+    * for the relation's lifetime (tests pass a small one to force the
+    * fallback).
+    */
+  private[query] def termDictionary(termStats: Dataset[TermStat],
+      cap: Int = DictionaryCap): Option[TermDictionary] =
+    dictionaries.synchronized {
+      dictionaries.computeIfAbsent(termStats, _ => {
+        val rows = termStats.select(col("term"), col("idf")).limit(cap + 1).collect()
+        if (rows.length > cap) None
+        else {
+          val sorted = rows.map(r => (UTF8String.fromString(r.getString(0)), r))
+            .sortBy(_._1)(SparkStringOrder).map(_._2)
+          Some(new TermDictionary(sorted.map(_.getString(0)), sorted.map(_.getDouble(1))))
+        }
+      })
+    }
 
   /** Wildcard stems (with occurrence counts) replaced by their dictionary
     * expansions from [[expandStems]].
@@ -897,7 +1041,8 @@ object QueryEngine {
     * greedy, so existence is exact). slop = 0 degenerates to adjacency.
     *
     * Plan: term-pushed block scan (positions column read — BM25 paths
-    * read it for phrase words only) → per-shard document-at-a-time positional
+    * read it for phrase words only), shard-grouped without an exchange on
+    * a loaded index → per-shard document-at-a-time positional
     * intersect in mapPartitions (docId-sharding co-locates all of a doc's
     * postings, so no cross-shard coordination; candidates are bounded by
     * the rarest term's postings — never a token-level explode/shuffle) →
@@ -959,7 +1104,9 @@ object QueryEngine {
       TermQuery("", Analyzer.analyzeQuery(freeTerms + " " + phrase, cfg.analyzer), Nil, 1,
         Seq((Analyzer.tokenize(phrase, cfg.analyzer), 0))), k, cfg, tombstones)
 
-  /** The lazy (un-persisted) phrase match relation (docId, tfp, dl) —
+  /** The lazy (un-persisted) phrase match relation (docId, tfp, dl): the
+    * term-pushed block scan grouped by shard ([[shardGrouped]], no
+    * exchange on a loaded index) and intersected by [[PhraseScorer]] —
     * exposed separately so plan-shape tests can assert on the actual scan
     * (term pushdown + positions column) before the persist hides it. None
     * when the analyzed phrase is empty.
@@ -979,12 +1126,7 @@ object QueryEngine {
     val termsB = spark.sparkContext.broadcast(terms)
     val tsB = tombstones.broadcastVia(spark)
     val slop0 = slop
-    val parts = math.max(1, math.min(cfg.numShards,
-      spark.sparkContext.defaultParallelism))
-    Some(blocks
-      .filter($"term".isin(distinctTerms: _*))
-      .repartition(parts, $"shardId")
-      .sortWithinPartitions($"shardId", $"term", $"minDocId")
+    Some(shardGrouped(blocks.filter($"term".isin(distinctTerms: _*)), blocks, cfg)
       .mapPartitions { it =>
         PhraseScorer.matchPartition(it.buffered, termsB.value, slop0, tsB.value)
       }
@@ -994,7 +1136,7 @@ object QueryEngine {
   /** Positional intersect: emits (docId, phraseTf, dl) per matching doc. */
   private[query] object PhraseScorer {
 
-    /** Rows must arrive sorted by (shardId, term, minDocId). Shard groups
+    /** Rows must arrive shard-grouped ([[shardGrouped]]). Shard groups
       * are consumed LAZILY, one at a time: a high-df phrase holds at most
       * one shard's match set in memory, never the whole partition's
       * (the per-shard set is itself bounded by the shard's doc range).
@@ -1059,7 +1201,7 @@ object QueryEngine {
     */
   private[query] object BoolScorer {
 
-    /** Rows must arrive sorted by (shardId, term, minDocId). Every query
+    /** Rows must arrive shard-grouped ([[shardGrouped]]). Every query
       * is scored against each shard group while its blocks are at hand.
       * Decoded blocks are memoized per shard ([[Shard]]), so a block
       * shared by several queries is decoded once.

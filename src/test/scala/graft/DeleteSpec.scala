@@ -42,23 +42,6 @@ class DeleteSpec extends AnyFunSuite {
     OracleBM25.Corpus(docs, c.dl, postings, n, avgdl)
   }
 
-  /** Scalar phrase oracle over a (possibly survivor-filtered) corpus. */
-  private def phraseOracle(c: OracleBM25.Corpus, phrase: String, k: Int): Seq[(Long, Double)] = {
-    val terms = graft.functions.Analyzer.tokenize(phrase, cfg.analyzer)
-    if (terms.isEmpty) return Nil
-    val matches = c.docs.flatMap { case (id, text) =>
-      val toks = graft.functions.Analyzer.tokenize(text, cfg.analyzer).toArray
-      val tfp = (0 to toks.length - terms.length).count(i =>
-        terms.indices.forall(j => toks(i + j) == terms(j)))
-      if (tfp > 0) Some((id, tfp)) else None
-    }
-    if (matches.isEmpty) return Nil
-    val idf = StrictMath.log((c.n + 1.0) / (matches.size + 1.0))
-    matches.map { case (id, tfp) =>
-      id -> graft.query.Bm25.contribution(1, idf, tfp, c.dl(id), c.avgdl, cfg.params)
-    }.sortBy { case (d, s) => (-s, d) }.take(k)
-  }
-
   private def wandTop(idx: IndexStore.Index, q: String, k: Int): Seq[(Long, Double)] =
     QueryEngine.wandTopK(spark, idx.blocks, idx.termStats, idx.corpus, q, k, cfg,
       idx.tombstoneSet).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -107,7 +90,7 @@ class DeleteSpec extends AnyFunSuite {
     val pGot = QueryEngine.phraseTopK(spark, idx.blocks, idx.corpus,
       "term0000 term0001", 10, cfg, 0, idx.tombstoneSet)
       .collect().map(r2 => (r2.getLong(0), r2.getDouble(1))).toSeq
-    val pWant = phraseOracle(survivors, "term0000 term0001", 10)
+    val pWant = OracleBM25.phraseTopK(survivors, "term0000 term0001", 0, 10, cfg)
     assert(pWant.nonEmpty, "vacuous phrase fixture")
     assert(pGot == pWant, "post-delete phrase mismatch")
   }
@@ -195,7 +178,7 @@ class DeleteSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq == wantQ)
     // phrase positions survive the purge too
     val survivors = dropFromCorpus(full, drop)
-    val pWant = phraseOracle(survivors, "term0000 term0001", 10)
+    val pWant = OracleBM25.phraseTopK(survivors, "term0000 term0001", 0, 10, cfg)
     val pGot = QueryEngine.phraseTopK(spark, idx.blocks, idx.corpus,
       "term0000 term0001", 10, cfg)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

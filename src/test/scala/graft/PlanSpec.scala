@@ -2,6 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 import graft.index.IndexBuilder
@@ -232,10 +235,37 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Join"), p)
   }
 
+  test("a loaded index's term scorers read the block scan without an exchange") {
+    // each shard dir of a loaded index holds one file, so the scorer groups
+    // shards straight off the scan; the single query's finish stays a
+    // TakeOrderedAndProject and only the batch's per-qid window exchanges
+    val idx = SparkEntry.index(spark, dir)
+    def scorerInputs(df: DataFrame): Seq[SparkPlan] = {
+      val p = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case other => other
+      }
+      p.collect { case m: MapPartitionsExec => m.child }
+    }
+    def assertExchangeFree(df: DataFrame): Unit = {
+      val inputs = scorerInputs(df)
+      assert(inputs.nonEmpty, "no MapPartitions scorer in the plan:\n" + plan(df))
+      assert(inputs.forall(_.find(_.isInstanceOf[Exchange]).isEmpty),
+        "an exchange feeds the block scorer:\n" + plan(df))
+    }
+    val single = QueryEngine.wandTopK(spark, idx.blocks, idx.termStats,
+      idx.corpus, "data spark", 10, SparkEntry.cfg)
+    assertExchangeFree(single)
+    assert(plan(single).contains("TakeOrderedAndProject"), plan(single))
+    assertExchangeFree(QueryEngine.wandTopKBatch(spark, idx.blocks, idx.termStats,
+      idx.corpus, Seq("b1" -> "data spark", "b2" -> "join stream"), 10, SparkEntry.cfg))
+  }
+
   test("job counts: a phrase adds no job to its terms, a field filter at most 2") {
     // Spark jobs are the deterministic cost of a query (wall-clock on a
     // shared host is not): planning's eager collects plus the action's
-    // stages, counted under one job group
+    // stages, counted under one job group. A term, prefix or phrase + terms
+    // query is one job; a field filter adds its allow-list's two
     val idx = SparkEntry.index(spark, dir)
     val sc = spark.sparkContext
     def jobs(q: String): Int = {
@@ -248,12 +278,13 @@ class PlanSpec extends AnyFunSuite {
       sc.statusTracker.getJobIdsForGroup(group).length
     }
     val terms = jobs("data stream spark -join")
+    val prefix = jobs("dat* spark")
     val phrase = jobs("\"data stream\" spark -join")
-    assert(terms > 0, "no job counted — the job group did not reach the queries")
-    assert(phrase == terms, s"phrase + terms ran $phrase jobs, its terms alone $terms")
-    val plain = jobs("spark join data")
     val fielded = jobs("role:user spark join data")
-    assert(fielded <= plain + 2, s"field filter ran $fielded jobs, the terms alone $plain")
-    info(s"jobs: terms $terms, phrase + terms $phrase, plain $plain, fielded $fielded")
+    info(s"jobs: terms $terms, prefix $prefix, phrase + terms $phrase, fielded $fielded")
+    assert(terms == 1, s"a term query ran $terms jobs")
+    assert(prefix == 1, s"a prefix query ran $prefix jobs")
+    assert(phrase == 1, s"a phrase + terms query ran $phrase jobs")
+    assert(fielded <= 3, s"a field query ran $fielded jobs")
   }
 }

@@ -156,5 +156,80 @@ object TestKit {
         .sortBy { case (d, s) => (-s, d) }
         .take(k)
     }
+
+    /** The occurrences of the phrase `terms` in `toks`: the start
+      * positions from which the words follow in order within a span of
+      * (n-1)+slop (slop 0: adjacent).
+      */
+    def phraseTf(toks: Array[String], terms: Seq[String], slop: Int): Int = {
+      val bound = terms.length - 1 + slop
+      def rec(start: Int, j: Int, prev: Int): Boolean =
+        if (j == terms.length) true
+        else (prev + 1 until toks.length).exists { p =>
+          p - start <= bound && toks(p) == terms(j) && rec(start, j + 1, p)
+        }
+      toks.indices.count(i => toks(i) == terms.head && rec(i, 1, i))
+    }
+
+    /** The search box's semantics (QueryEngine.search) by brute force, but
+      * for a lone phrase's PhraseQuery scoring ([[phraseTopK]]): a doc that
+      * `keep`s (a field filter) matches iff it holds every phrase, none of
+      * the excluded terms and at least m distinct positive terms (free
+      * terms, phrase words, wildcard expansions); it scores BM25 over the
+      * positive terms it holds, with corpus-wide stats.
+      */
+    def search(c: Corpus, query: String, m: Int, k: Int, cfg: graft.index.IndexBuilder.Config,
+        keep: Long => Boolean = _ => true): Seq[(Long, Double)] = {
+      val pq = graft.query.QueryEngine.parseQuery(query)
+      val stems = graft.query.QueryEngine.analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
+      val dict = c.postings.keys.toSeq.sorted
+      val expanded = stems.flatMap { case (p, n) =>
+        dict.filter(_.startsWith(p)).take(graft.query.QueryEngine.PrefixExpansionCap).map(_ -> n)
+      }
+      val literal = Analyzer.analyzeQuery(
+        (pq.free ++ pq.phrases.map(_._1)).mkString(" "), cfg.analyzer)
+      val positive = (literal ++ expanded)
+        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
+        .filter { case (t, _) => c.postings.contains(t) }
+      val excl = pq.excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
+      val phraseTerms = pq.phrases.map { case (ph, slop) =>
+        (Analyzer.tokenize(ph, cfg.analyzer), slop)
+      }
+      if (positive.isEmpty || positive.size < m || phraseTerms.exists(_._1.isEmpty))
+        return Nil
+      val idf = positive.map { case (t, _) => t -> Bm25.idf(c.n, c.postings(t).size) }.toMap
+      val matching = c.docs.filter { case (id, text) =>
+        val toks = Analyzer.tokenize(text, cfg.analyzer).toArray
+        keep(id) &&
+          phraseTerms.forall { case (terms, slop) => phraseTf(toks, terms, slop) > 0 } &&
+          !excl.exists(t => c.postings.get(t).exists(_.contains(id))) &&
+          positive.count { case (t, _) => c.postings(t).contains(id) } >= m
+      }
+      matching.map { case (id, _) =>
+        var s = 0.0
+        positive.foreach { case (t, qtf) => // ascending-term summation order
+          c.postings(t).get(id).foreach(tf =>
+            s += Bm25.contribution(qtf, idf(t), tf, c.dl(id), c.avgdl, cfg.params))
+        }
+        (id, s)
+      }.sortBy { case (d, s) => (-s, d) }.take(k).toSeq
+    }
+
+    /** A lone phrase's PhraseQuery scoring by brute force: the phrase as
+      * one term, tf its occurrences, df the matching docs.
+      */
+    def phraseTopK(c: Corpus, phrase: String, slop: Int, k: Int,
+        cfg: graft.index.IndexBuilder.Config): Seq[(Long, Double)] = {
+      val terms = Analyzer.tokenize(phrase, cfg.analyzer)
+      if (terms.isEmpty) return Nil
+      val matches = c.docs.flatMap { case (id, text) =>
+        val tfp = phraseTf(Analyzer.tokenize(text, cfg.analyzer).toArray, terms, slop)
+        if (tfp > 0) Some((id, tfp)) else None
+      }
+      val idf = StrictMath.log((c.n + 1.0) / (matches.size + 1.0))
+      matches.map { case (id, tfp) =>
+        id -> Bm25.contribution(1, idf, tfp, c.dl(id), c.avgdl, cfg.params)
+      }.sortBy { case (d, s) => (-s, d) }.take(k)
+    }
   }
 }

@@ -166,31 +166,8 @@ class BooleanQuerySpec extends AnyFunSuite {
     * completion) per start position over the filtered token stream.
     */
   private def slopOracle(turns: Seq[Turn], phrase: String, slop: Int,
-      k: Int): Seq[(Long, Double)] = {
-    val c = OracleBM25.corpus(turns, cfg.analyzer)
-    val terms = Analyzer.tokenize(phrase, cfg.analyzer)
-    if (terms.isEmpty) return Nil
-    val bound = terms.length - 1 + slop
-    def chainExists(toks: Array[String], start: Int, j: Int, prev: Int): Boolean =
-      if (j == terms.length) true
-      else (prev + 1 until toks.length).exists { p =>
-        p - start <= bound && toks(p) == terms(j) && chainExists(toks, start, j + 1, p)
-      }
-    val matches = c.docs.flatMap { case (id, text) =>
-      val toks = Analyzer.tokenize(text, cfg.analyzer).toArray
-      val tfp = toks.indices.count(i =>
-        toks(i) == terms.head && chainExists(toks, i, 1, i))
-      if (tfp > 0) Some((id, tfp)) else None
-    }
-    if (matches.isEmpty) return Nil
-    val idf = StrictMath.log((c.n + 1.0) / (matches.size + 1.0))
-    matches
-      .map { case (id, tfp) =>
-        id -> Bm25.contribution(1, idf, tfp, c.dl(id), c.avgdl, cfg.params)
-      }
-      .sortBy { case (d, s) => (-s, d) }
-      .take(k)
-  }
+      k: Int): Seq[(Long, Double)] =
+    OracleBM25.phraseTopK(OracleBM25.corpus(turns, cfg.analyzer), phrase, slop, k, cfg)
 
   private def slopTop(idx: IndexStore.Index, phrase: String, slop: Int,
       k: Int): Seq[(Long, Double)] =

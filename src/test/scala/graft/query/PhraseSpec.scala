@@ -19,36 +19,11 @@ class PhraseSpec extends AnyFunSuite {
   private val cfg = IndexBuilder.Config(docIdPartitions = 4, numShards = 8,
     storePositions = true)
 
-  /** Scalar phrase BM25: scan each doc's filtered token stream for the
-    * exact subsequence; tf = occurrence count, df = matching docs,
-    * idf = ln((N+1)/(df+1)); contribution shared with the engine (Bm25).
+  /** Scalar phrase BM25 (the shared brute-force oracle at slop 0): tf =
+    * occurrence count, df = matching docs, idf = ln((N+1)/(df+1)).
     */
-  private def phraseOracle(turns: Seq[Turn], phrase: String, k: Int): Seq[(Long, Double)] = {
-    val c = OracleBM25.corpus(turns, cfg.analyzer)
-    val terms = Analyzer.tokenize(phrase, cfg.analyzer)
-    if (terms.isEmpty) return Nil
-    val matches = c.docs.flatMap { case (id, text) =>
-      val toks = Analyzer.tokenize(text, cfg.analyzer).toArray
-      var tfp = 0
-      var i = 0
-      while (i + terms.length <= toks.length) {
-        var ok = true
-        var j = 0
-        while (ok && j < terms.length) { if (toks(i + j) != terms(j)) ok = false; j += 1 }
-        if (ok) tfp += 1
-        i += 1
-      }
-      if (tfp > 0) Some((id, tfp)) else None
-    }
-    if (matches.isEmpty) return Nil
-    val idf = StrictMath.log((c.n + 1.0) / (matches.size + 1.0))
-    matches
-      .map { case (id, tfp) =>
-        id -> Bm25.contribution(1, idf, tfp, c.dl(id), c.avgdl, cfg.params)
-      }
-      .sortBy { case (d, s) => (-s, d) }
-      .take(k)
-  }
+  private def phraseOracle(turns: Seq[Turn], phrase: String, k: Int): Seq[(Long, Double)] =
+    OracleBM25.phraseTopK(OracleBM25.corpus(turns, cfg.analyzer), phrase, 0, k, cfg)
 
   private def buildIndex(turns: Seq[Turn], name: String): IndexStore.Index = {
     val dir = Files.createTempDirectory(name).toString

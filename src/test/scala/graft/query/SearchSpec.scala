@@ -95,50 +95,8 @@ class SearchSpec extends AnyFunSuite {
 
   /** Brute-force scalar oracle for the full unified semantics. */
   private def unifiedOracle(turns: Seq[Turn], query: String, m: Int,
-      k: Int): Seq[(Long, Double)] = {
-    val c = OracleBM25.corpus(turns, cfg.analyzer)
-    val pq = QueryEngine.parseQuery(query)
-    val stems = QueryEngine.analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
-    val dict = c.postings.keys.toSeq.sorted
-    val expanded = stems.flatMap { case (p, n) =>
-      dict.filter(_.startsWith(p)).take(QueryEngine.PrefixExpansionCap).map(_ -> n)
-    }
-    val literal = Analyzer.analyzeQuery(
-      (pq.free ++ pq.phrases.map(_._1)).mkString(" "), cfg.analyzer)
-    val positive = (literal ++ expanded)
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-      .filter { case (t, _) => c.postings.contains(t) }
-    val excl = pq.excluded.flatMap(t => Analyzer.tokenize(t, cfg.analyzer)).distinct
-    val phraseTerms = pq.phrases.map { case (ph, slop) =>
-      (Analyzer.tokenize(ph, cfg.analyzer), slop)
-    }
-    if (positive.isEmpty || positive.size < m || phraseTerms.exists(_._1.isEmpty))
-      return Nil
-    def hasChain(toks: Array[String], terms: Seq[String], slop: Int): Boolean = {
-      val bound = terms.length - 1 + slop
-      def rec(start: Int, j: Int, prev: Int): Boolean =
-        if (j == terms.length) true
-        else (prev + 1 until toks.length).exists { p =>
-          p - start <= bound && toks(p) == terms(j) && rec(start, j + 1, p)
-        }
-      toks.indices.exists(i => toks(i) == terms.head && rec(i, 1, i))
-    }
-    val idf = positive.map { case (t, _) => t -> Bm25.idf(c.n, c.postings(t).size) }.toMap
-    val matching = c.docs.filter { case (id, text) =>
-      val toks = Analyzer.tokenize(text, cfg.analyzer).toArray
-      phraseTerms.forall { case (terms, slop) => hasChain(toks, terms, slop) } &&
-        !excl.exists(t => c.postings.get(t).exists(_.contains(id))) &&
-        positive.count { case (t, _) => c.postings(t).contains(id) } >= m
-    }
-    matching.map { case (id, _) =>
-      var s = 0.0
-      positive.foreach { case (t, qtf) => // ascending-term summation order
-        c.postings(t).get(id).foreach(tf =>
-          s += Bm25.contribution(qtf, idf(t), tf, c.dl(id), c.avgdl, cfg.params))
-      }
-      (id, s)
-    }.sortBy { case (d, s) => (-s, d) }.take(k).toSeq
-  }
+      k: Int): Seq[(Long, Double)] =
+    OracleBM25.search(OracleBM25.corpus(turns, cfg.analyzer), query, m, k, cfg)
 
   test("composed path (phrase + exclusion + msm + wildcard) matches the scalar oracle") {
     val turns = TranscriptGen.turns(seed = 122, nConvs = 40)
