@@ -176,7 +176,7 @@ object IndexBuilder {
     val termStats = postings
       .groupBy($"term")
       .agg(count(lit(1)).as("df"))
-      .withColumn("idf", log((lit(n) + 1.0) / ($"df" + 1.0)))
+      .withColumn("idf", graft.query.Bm25.idfCol(n, $"df"))
       .as[TermStat]
 
     Relations(docs, postings, docStats, termStats, corpus, shardSize)

@@ -4,9 +4,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s.{DefaultFormats, Extraction, Formats, JInt, JObject}
+import org.json4s.jackson.JsonMethods
 
 import graft.functions.Analyzer
 import graft.model._
+import graft.plans.DecodeBlock
 
 /** On-disk index layout + snapshot/lineage manifest (SURVEY.md §7.2, §7.6).
   *
@@ -15,11 +18,17 @@ import graft.model._
   *   manifest.json          committed atomically (tmp + rename); the SINGLE
   *                          source of truth for which data dirs are live
   *   docs/                  (docId, conv_id, turn_idx, role, text, tool, ts)
-  *   termstats-vN/          (term, df, idf) — versioned; manifest points at
-  *                          the live one
   *   blocks/shardId=K/      encoded PostingBlock rows (dynamic partitions)
-  *   delta-vN/{blocks,docs} appended snapshots, one dir pair per append
+  *   termstats-v0/          (term, df, idf) of the build
+  *   delta-gN/{blocks,docs} an appended snapshot
+  *   termstats-gN/          (term, df, idf) rewritten by an append or delete
+  *   tombstones-gN/         (docId) of every deleted doc since the last compact
+  *   compact-gN/{blocks,docs} a compaction's output
   * ```
+  *
+  * N is the manifest's monotonic `dirGen`: every append, delete and compact
+  * stages its output under a fresh generation, and the manifest points at
+  * the live dirs of each kind.
   *
   * Resumability (north rule "resumable from snapshot checkpoints with
   * per-partition lineage"): shards are committed one batch at a time — write
@@ -122,37 +131,27 @@ object IndexStore {
       // dirs superseded by THIS manifest's commit, deleted only after the
       // NEXT commit — the one-generation grace window for live readers
       graceDirs: Seq[String] = Nil
-  )
+  ) {
+    /** Top-level dirs this manifest keeps on disk, grace-window dirs included. */
+    def referencedDirs: Set[String] =
+      (blockDirs ++ docDirs ++ Seq(termstatsDir) ++ tombstoneDirs ++ graceDirs)
+        .filter(_.nonEmpty).map(_.split('/').head).toSet
+  }
 
   // ------------------------------------------------------------- manifest IO
-  // Hand-rolled (flat, fixed-shape) JSON so the manifest has no dependency
-  // on whichever Jackson happens to ship with the Spark distribution.
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  private implicit val manifestFormats: Formats = DefaultFormats
 
+  /** Writes `m` as JSON next to a `formatVersion` key (the `history` field
+    * is stored under `snapshotHistory`), then renames it over
+    * `manifest.json` atomically: the rename is the commit point of every
+    * lifecycle step.
+    */
   def writeManifest(dir: String, m: Manifest): Unit = {
-    val shards = m.shards
-      .map(s => s"""{"shardId":${s.shardId},"postings":${s.postings},"blocks":${s.blocks},"payloadBytes":${s.payloadBytes},"checksum":${s.checksum}}""")
-      .mkString("[", ",", "]")
-    val metrics = m.metrics.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
-    def strArr(xs: Seq[String]) = xs.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
-    // "complete" stays the LAST key: readManifest matches it with an
-    // end-anchored regex that escaped text inside string fields can't spoof
-    val json =
-      s"""{"formatVersion":$FormatVersion,"snapshotId":"${esc(m.snapshotId)}","analyzer":"${esc(m.analyzer)}",
-         |"k1":${m.k1},"b":${m.b},"numShards":${m.numShards},"shardSize":${m.shardSize},
-         |"blockSize":${m.blockSize},"docCount":${m.docCount},"avgdl":${m.avgdl},"nextDocId":${m.nextDocId},
-         |"blockDirs":${strArr(m.blockDirs)},"docDirs":${strArr(m.docDirs)},"termstatsDir":"${esc(m.termstatsDir)}",
-         |"tombstoneDirs":${strArr(m.tombstoneDirs)},"graceDirs":${strArr(m.graceDirs)},
-         |"snapshotHistory":${strArr(m.history)},"positional":${m.positional},
-         |"shards":$shards,"metrics":$metrics,"complete":${m.complete}}""".stripMargin
+    val fields = Extraction.decompose(m).transformField {
+      case ("history", v) => ("snapshotHistory", v)
+    }
+    val json = JsonMethods.compact(JObject("formatVersion" -> JInt(FormatVersion)).merge(fields))
     val tmp = Paths.get(dir, "manifest.json.tmp")
     Files.createDirectories(tmp.getParent)
     Files.writeString(tmp, json)
@@ -160,78 +159,18 @@ object IndexStore {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** The manifest at `dir`; None when there is none or its `formatVersion`
+    * is not [[FormatVersion]] (callers rebuild). Strict otherwise: a
+    * missing field without a default, or a value of the wrong type, throws
+    * naming the field.
+    */
   def readManifest(dir: String): Option[Manifest] = {
     val p = Paths.get(dir, "manifest.json")
     if (!Files.exists(p)) return None
-    val s = Files.readString(p)
-    def unesc(v: String): String = {
-      val sb = new StringBuilder
-      var i = 0
-      while (i < v.length) {
-        val c = v(i)
-        if (c == '\\' && i + 1 < v.length) {
-          v(i + 1) match {
-            case 'u' => sb.append(Integer.parseInt(v.substring(i + 2, i + 6), 16).toChar); i += 6
-            case 'n' => sb.append('\n'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case o => sb.append(o); i += 2
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
-    def str(k: String) = s"""\"$k\":\"((?:[^\"\\\\]|\\\\.)*)\"""".r
-      .findFirstMatchIn(s).map(m => unesc(m.group(1))).getOrElse("")
-    def num(k: String) = s"""\"$k\":(-?[0-9.E+-]+)""".r
-      .findFirstMatchIn(s).map(_.group(1)).getOrElse("0")
-    // exact-equality version check (a substring test would accept v40, v41…)
-    if (num("formatVersion").toDouble.toInt != FormatVersion) return None
-    // the array body is parsed as a sequence of QUOTED strings (escapes
-    // honored), never by scanning for ']' — a caller-supplied snapshotId
-    // containing ']' must not truncate the history (or any dir list)
-    def strArr(k: String): Seq[String] =
-      s"""\"$k\":\\[((?:\"(?:[^\"\\\\]|\\\\.)*\"|,)*)\\]""".r
-        .findFirstMatchIn(s).map(_.group(1)).toSeq.flatMap { body =>
-          """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(body).map(m => unesc(m.group(1)))
-        }
-    val shardRe =
-      """\{"shardId":(\d+),"postings":(\d+),"blocks":(\d+),"payloadBytes":(\d+),"checksum":(-?\d+)\}""".r
-    val shards = shardRe.findAllMatchIn(s).map { m =>
-      ShardLineage(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toLong, m.group(5).toLong)
-    }.toSeq
-    val metricsRe = """"metrics":\{([^}]*)\}""".r
-    val metrics = metricsRe.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-    val metricMap = """"([^"]+)":(-?[0-9.E+-]+)""".r.findAllMatchIn(metrics)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    // anchored: "complete" is the final key writeManifest emits, so escaped
-    // occurrences inside snapshotId/analyzer can't match here
-    val complete = """"complete":(true|false)\}\s*$""".r
-      .findFirstMatchIn(s).exists(_.group(1) == "true")
-    Some(Manifest(
-      snapshotId = str("snapshotId"),
-      analyzer = str("analyzer"),
-      k1 = num("k1").toDouble,
-      b = num("b").toDouble,
-      numShards = num("numShards").toDouble.toInt,
-      shardSize = num("shardSize").toDouble.toLong,
-      blockSize = num("blockSize").toDouble.toInt,
-      docCount = num("docCount").toDouble.toLong,
-      avgdl = num("avgdl").toDouble,
-      shards = shards,
-      metrics = metricMap,
-      blockDirs = strArr("blockDirs"),
-      docDirs = strArr("docDirs"),
-      termstatsDir = str("termstatsDir"),
-      complete = complete,
-      history = strArr("snapshotHistory"),
-      positional = """"positional":(true|false)""".r
-        .findFirstMatchIn(s).exists(_.group(1) == "true"),
-      nextDocId = num("nextDocId").toDouble.toLong,
-      tombstoneDirs = strArr("tombstoneDirs"),
-      graceDirs = strArr("graceDirs")
-    ))
+    val json = JsonMethods.parse(Files.readString(p))
+    if (json \ "formatVersion" != JInt(FormatVersion)) None
+    else Some(json.transformField { case ("snapshotHistory", v) => ("history", v) }
+      .extract[Manifest])
   }
 
   /** The manifest's build/analysis config must match the caller's — a
@@ -263,9 +202,7 @@ object IndexStore {
     */
   private def sweepOrphans(dir: String, m: Manifest): Unit = {
     val gen = m.metrics.getOrElse("dirGen", 0.0).toInt
-    val live = (m.blockDirs ++ m.docDirs ++ Seq(m.termstatsDir) ++
-        m.tombstoneDirs ++ m.graceDirs)
-      .filter(_.nonEmpty).map(_.split('/').head).toSet
+    val live = m.referencedDirs
     val staged = """(?:delta|compact|termstats|tombstones)-g(\d+)""".r
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty).foreach { f =>
       f.getName match {
@@ -274,6 +211,69 @@ object IndexStore {
         case _ => ()
       }
     }
+  }
+
+  private def rmDirs(dir: String, names: Iterable[String]): Unit =
+    names.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$d")))
+
+  /** The committed manifest every lifecycle step (append, delete, update,
+    * compact, load) starts from: there must be one, and no build may have
+    * crashed before completing it.
+    */
+  private def openCommitted(dir: String): Manifest = {
+    val m = readManifest(dir)
+      .getOrElse(throw new IllegalStateException(s"no manifest at $dir"))
+    require(m.complete, s"index at $dir is incomplete (crashed build?) — resume it first")
+    m
+  }
+
+  /** What appending under `cfg` requires of the base index: the same
+    * analyzer, BM25 params, block size and positional-ness. The shard grid
+    * is the base's own, so numShards is not compared.
+    */
+  private def requireAppendable(base: Manifest, cfg: IndexBuilder.Config): Unit = {
+    require(base.analyzer == cfg.analyzer.fingerprint,
+      s"analyzer mismatch: index=${base.analyzer} cfg=${cfg.analyzer.fingerprint}")
+    require(base.k1 == cfg.params.k1 && base.b == cfg.params.b,
+      s"BM25 param mismatch: index=(${base.k1},${base.b}) cfg=(${cfg.params.k1},${cfg.params.b})")
+    require(base.blockSize == cfg.blockSize,
+      s"blockSize mismatch: index=${base.blockSize} cfg=${cfg.blockSize}")
+    require(base.positional == cfg.storePositions,
+      s"positional mismatch: index=${base.positional} cfg=${cfg.storePositions} " +
+        "(a mixed positional/non-positional index would silently break phrase queries)")
+  }
+
+  /** Writes (term, df) term stats to `path` with their idf over `n` live
+    * docs.
+    */
+  private def writeTermStats(dfs: DataFrame, n: Long, path: String): Unit =
+    dfs.withColumn("idf", graft.query.Bm25.idfCol(n, col("df")))
+      .write.mode("overwrite").option("compression", IndexCodec).parquet(path)
+
+  /** The one commit sequence of every lifecycle step: the crash-test hook,
+    * the atomic manifest rewrite (THE commit point), then deleting the
+    * `retired` dirs and sweeping orphaned staging dirs. A crash anywhere
+    * before the rewrite leaves the previous manifest and every dir it
+    * references intact.
+    */
+  private def commit(dir: String, step: String, m: Manifest, retired: Iterable[String],
+      failBeforeCommit: Boolean = false): BuildResult = {
+    if (failBeforeCommit)
+      throw new RuntimeException(s"injected failure before $step commit")
+    writeManifest(dir, m)
+    rmDirs(dir, retired)
+    sweepOrphans(dir, m)
+    BuildResult(m, dir)
+  }
+
+  /** Dirs whose one-commit grace window ends when `m` supersedes `base`. */
+  private def graceEnded(base: Manifest, m: Manifest): Seq[String] =
+    base.graceDirs.filterNot(m.graceDirs.contains)
+
+  /** Largest shard's postings over the mean shard's (1.0 when empty). */
+  private def skewRatio(shards: Seq[ShardLineage]): Double = {
+    val ps = shards.map(_.postings.toDouble)
+    if (ps.isEmpty) 1.0 else ps.max / (ps.sum / ps.size)
   }
 
   /** Per-shard lineage of a blocks Dataset, plus its token total (Σ sumTf),
@@ -308,8 +308,7 @@ object IndexStore {
     * afterwards).
     */
   private def writeShards(blocks: Dataset[PostingBlock], path: String, shards: Seq[Int]): Unit = {
-    shards.foreach(s => org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(s"$path/shardId=$s")))
+    rmDirs(path, shards.map(s => s"shardId=$s"))
     val parts = math.max(1,
       math.min(blocks.sparkSession.sparkContext.defaultParallelism, shards.size))
     blocks.filter(col("shardId").isin(shards: _*))
@@ -381,8 +380,7 @@ object IndexStore {
 
     // fresh build (no committed shards): clear any stale block layout from
     // an older format version or an abandoned different-snapshot build
-    if (committed.isEmpty)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/blocks"))
+    if (committed.isEmpty) rmDirs(dir, Seq("blocks"))
 
     val tEnc0 = now()
     val blocks = IndexBuilder.encodePostings(spark, p0.postings, cfg)
@@ -412,10 +410,7 @@ object IndexStore {
     val auxF: Future[Unit] =
       if (lineage.isEmpty) Future.successful(())
       else Future {
-        blocks.groupBy($"term")
-          .agg(sum($"n").as("df"))
-          .withColumn("idf", log((lit(n) + 1.0) / ($"df" + 1.0)))
-          .write.mode("overwrite").option("compression", IndexCodec).parquet(s"$dir/$tsDir")
+        writeTermStats(blocks.groupBy($"term").agg(sum($"n").as("df")), n, s"$dir/$tsDir")
       }
 
     val tCommit0 = now()
@@ -458,9 +453,6 @@ object IndexStore {
     val auxSec = (now() - tAux0) / 1e9
     val buildSec = (System.nanoTime() - t0) / 1e9
     val totalPostings = shards.map(_.postings).sum.toDouble
-    val perShard = shards.map(_.postings.toDouble)
-    val skewRatio =
-      if (perShard.isEmpty) 1.0 else perShard.max / (perShard.sum / perShard.size)
     val metrics = Map(
       "relSec" -> relSec,
       "auxWriteSec" -> auxSec,
@@ -473,27 +465,17 @@ object IndexStore {
       "postingsPerSec" -> totalPostings / buildSec,
       "bytesRaw" -> totalPostings * 16, // uncompressed (docId 8B + tf 4B + dl 4B)
       "bytesCompressed" -> shards.map(_.payloadBytes).sum.toDouble,
-      "skewRatio" -> skewRatio
+      "skewRatio" -> skewRatio(shards)
     )
     val m = partialManifest(complete = true, metrics)
-    writeManifest(dir, m)
-    // post-commit cleanup: top-level dirs the SUPERSEDED manifest
-    // referenced (older delta-g*/compact-g*/termstats-g* generations) that
-    // the fresh manifest does not — a rebuild over a long append lifecycle
-    // must not leak them forever. No-op on resume (same dirs).
-    if (committed.isEmpty) existing.foreach { old =>
-      val keep = (m.blockDirs ++ m.docDirs ++ Seq(m.termstatsDir))
-        .filter(_.nonEmpty).map(_.split('/').head).toSet
-      (old.blockDirs ++ old.docDirs ++ Seq(old.termstatsDir) ++
-          old.tombstoneDirs ++ old.graceDirs)
-        .filter(_.nonEmpty).map(_.split('/').head).distinct
-        .filterNot(keep.contains)
-        .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"$dir/$d")))
-    }
-    sweepOrphans(dir, m)
-    blocks.unpersist()
-    BuildResult(m, dir)
+    // a rebuild retires, with no grace window, the top-level dirs the
+    // SUPERSEDED manifest referenced that the fresh one does not (older
+    // delta-g*/compact-g*/termstats-g* generations) — a rebuild over a long
+    // append lifecycle must not leak them forever. None on resume (same dirs).
+    val retired =
+      if (committed.isEmpty) existing.toSeq.flatMap(_.referencedDirs -- m.referencedDirs)
+      else Nil
+    try commit(dir, "build", m, retired) finally blocks.unpersist()
   }
 
   // ---------------------------------------------------------------- append
@@ -506,9 +488,9 @@ object IndexStore {
     *
     * Crash-safe by staging: delta blocks/docs and merged term stats are
     * written to fresh dirs the live manifest does not reference
-    * (`delta-vN/`, `termstats-vN/`); the commit is one atomic manifest
-    * rewrite pointing at them. A crash anywhere before the commit leaves
-    * the base index untouched and fully servable; re-running the append
+    * (`delta-gN/{blocks,docs}`, `termstats-gN/`); the commit is one atomic
+    * manifest rewrite pointing at them. A crash anywhere before the commit
+    * leaves the base index untouched and fully servable; re-running the append
     * overwrites the staging dirs and commits. `failBeforeCommit` injects a
     * crash just before the manifest rewrite (crash-safety test hook).
     */
@@ -521,9 +503,7 @@ object IndexStore {
       failBeforeCommit: Boolean = false
   ): BuildResult = {
     import spark.implicits._
-    val base = readManifest(dir)
-      .getOrElse(throw new IllegalStateException(s"no manifest at $dir"))
-    require(base.complete, s"base index at $dir is incomplete")
+    val base = openCommitted(dir)
     // idempotence under at-least-once retry (e.g. Structured Streaming's
     // foreachBatch): an append whose snapshotId already committed is a
     // no-op — re-running it would append the same turns a second time.
@@ -532,15 +512,7 @@ object IndexStore {
     // must not re-append past snapshots just because later ones committed.
     if (base.snapshotId == snapshotId || base.history.contains(snapshotId))
       return BuildResult(base, dir)
-    require(base.analyzer == cfg.analyzer.fingerprint,
-      s"analyzer mismatch: index=${base.analyzer} cfg=${cfg.analyzer.fingerprint}")
-    require(base.k1 == cfg.params.k1 && base.b == cfg.params.b,
-      s"BM25 param mismatch: index=(${base.k1},${base.b}) cfg=(${cfg.params.k1},${cfg.params.b})")
-    require(base.blockSize == cfg.blockSize,
-      s"blockSize mismatch: index=${base.blockSize} cfg=${cfg.blockSize}")
-    require(base.positional == cfg.storePositions,
-      s"positional mismatch: index=${base.positional} cfg=${cfg.storePositions} " +
-        "(a mixed positional/non-positional index would silently break phrase queries)")
+    requireAppendable(base, cfg)
     // appending onto an EMPTY base (degenerate corpus) is just a build —
     // guarded on the id-space watermark, not docCount: a fully-deleted
     // index still owns its id space and must not reset it
@@ -556,8 +528,7 @@ object IndexStore {
     val deltaDocsDir = s"delta-g$gen/docs"
     val tsDir = s"termstats-g$gen"
     // idempotent retry: clear any staging leftovers of a crashed append
-    Seq(s"$dir/delta-g$gen", s"$dir/$tsDir").foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    rmDirs(dir, Seq(s"delta-g$gen", tsDir))
 
     // prepare, not relations: the delta postings stream through the encode
     // shuffle ONCE, uncached, and all stats derive from the ~100x-smaller
@@ -565,7 +536,7 @@ object IndexStore {
     val p0 = IndexBuilder.prepare(spark, newTurns, s"$dir/$deltaDocsDir", cfg,
       idOffset = base.nextDocId, fixedShardSize = Some(base.shardSize))
     if (p0.n == 0) { // nothing indexable in this snapshot: no-op
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/delta-g$gen"))
+      rmDirs(dir, Seq(s"delta-g$gen"))
       return BuildResult(base, dir)
     }
 
@@ -599,10 +570,8 @@ object IndexStore {
           spark.emptyDataset[(String, Long)].toDF("term", "df")
         else spark.read.parquet(s"$dir/${base.termstatsDir}").select($"term", $"df")
       val deltaTs = blocks.groupBy($"term").agg(sum($"n").as("df"))
-      baseTs.unionByName(deltaTs)
-        .groupBy($"term").agg(sum($"df").as("df"))
-        .withColumn("idf", log((lit(nNew) + 1.0) / ($"df" + 1.0)))
-        .write.mode("overwrite").option("compression", IndexCodec).parquet(s"$dir/$tsDirFinal")
+      writeTermStats(baseTs.unionByName(deltaTs).groupBy($"term").agg(sum($"df").as("df")),
+        nNew, s"$dir/$tsDirFinal")
     }
 
     // every lineage field is a sum over blocks, so a shard's lineage over
@@ -611,7 +580,6 @@ object IndexStore {
       .map(_.reduce((a, d) => ShardLineage(a.shardId, a.postings + d.postings,
         a.blocks + d.blocks, a.payloadBytes + d.payloadBytes, a.checksum + d.checksum)))
       .toSeq.sortBy(_.shardId)
-    val perShard = mergedLineage.map(_.postings.toDouble)
     val (newHistory, historyMetric) = advanceHistory(dir, base, snapshotId)
     val m = Manifest(snapshotId, cfg.analyzer.fingerprint, cfg.params.k1,
       cfg.params.b, base.numShards, base.shardSize, cfg.blockSize,
@@ -619,8 +587,7 @@ object IndexStore {
       base.metrics ++ historyMetric ++ Map(
         "appendedTurns" -> p0.n.toDouble,
         "dirGen" -> gen.toDouble,
-        "skewRatio" -> (if (perShard.isEmpty) 1.0
-          else perShard.max / (perShard.sum / perShard.size))),
+        "skewRatio" -> skewRatio(mergedLineage)),
       blockDirs = if (hasBlocks) base.blockDirs :+ deltaBlocksDir else base.blockDirs,
       docDirs = base.docDirs :+ deltaDocsDir,
       termstatsDir = tsDirFinal,
@@ -633,15 +600,8 @@ object IndexStore {
       // NEXT commit), so a reader on the previous manifest keeps working
       graceDirs = Seq(base.termstatsDir).filter(d =>
         d.nonEmpty && d != tsDirFinal))
-    if (failBeforeCommit)
-      throw new RuntimeException("injected failure before append commit")
-    writeManifest(dir, m) // THE commit point
-    // post-commit cleanup: dirs whose grace window ENDED with this commit
-    base.graceDirs.filterNot(d => m.graceDirs.contains(d)).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$d")))
-    sweepOrphans(dir, m)
-    blocks.unpersist()
-    BuildResult(m, dir)
+    try commit(dir, "append", m, graceEnded(base, m), failBeforeCommit)
+    finally blocks.unpersist()
   }
 
   /** Advance the committed-id idempotence history under the cap — ONE
@@ -728,9 +688,7 @@ object IndexStore {
       preloaded: Option[Index] = None
   ): BuildResult = {
     import spark.implicits._
-    val base = readManifest(dir)
-      .getOrElse(throw new IllegalStateException(s"no manifest at $dir"))
-    require(base.complete, s"base index at $dir is incomplete")
+    val base = openCommitted(dir)
     if (base.snapshotId == snapshotId || base.history.contains(snapshotId))
       return BuildResult(base, dir) // idempotent retry
     require(base.analyzer == cfg.analyzer.fingerprint,
@@ -777,8 +735,7 @@ object IndexStore {
       val gen = nextGen(base)
       val tsDir = s"termstats-g$gen"
       val tombDir = s"tombstones-g$gen"
-      Seq(s"$dir/$tsDir", s"$dir/$tombDir").foreach(d =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+      rmDirs(dir, Seq(tsDir, tombDir))
 
       // merged tombstones: previous set ∪ new drops, ONE dir and one file
       // (the set is small between compactions; load() sorts on read, so
@@ -798,12 +755,10 @@ object IndexStore {
         .join(removedDf, Seq("term"), "left")
         .select($"term", ($"df" - coalesce($"rdf", lit(0L))).as("df"))
         .filter($"df" > 0)
-        .withColumn("idf", log((lit(nNew) + 1.0) / ($"df" + 1.0)))
         .persist()
       val hasTs = survivingTs.limit(1).count() > 0
       val tsDirFinal = if (hasTs) tsDir else ""
-      if (hasTs)
-        survivingTs.write.mode("overwrite").option("compression", IndexCodec).parquet(s"$dir/$tsDir")
+      if (hasTs) writeTermStats(survivingTs, nNew, s"$dir/$tsDir")
 
       val (newHistory, historyMetric) = advanceHistory(dir, base, snapshotId)
       val m = base.copy(
@@ -819,13 +774,7 @@ object IndexStore {
         history = newHistory,
         graceDirs = (base.tombstoneDirs :+ base.termstatsDir)
           .filter(d => d.nonEmpty && d != tsDirFinal))
-      if (failBeforeCommit)
-        throw new RuntimeException("injected failure before delete commit")
-      writeManifest(dir, m) // THE commit point
-      base.graceDirs.filterNot(d => m.graceDirs.contains(d)).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$d")))
-      sweepOrphans(dir, m)
-      BuildResult(m, dir)
+      commit(dir, "delete", m, graceEnded(base, m), failBeforeCommit)
     } finally {
       // every exit path — cap refusal, injected crash, success — frees the
       // cached intermediates; a long-lived ingest session retries deletes
@@ -868,22 +817,13 @@ object IndexStore {
       failBetweenSteps: Boolean = false
   ): BuildResult = {
     import spark.implicits._
-    val base = readManifest(dir)
-      .getOrElse(throw new IllegalStateException(s"no manifest at $dir"))
-    require(base.complete, s"base index at $dir is incomplete")
+    val base = openCommitted(dir)
     // the APPEND step's preconditions, checked BEFORE the delete commits:
     // deleteDocs alone only validates the analyzer, so a k1/b/blockSize/
     // positional mismatch surfacing first at the append would leave the
     // old versions permanently tombstoned with a retry that can never
     // converge — fail the whole update up front instead
-    require(base.analyzer == cfg.analyzer.fingerprint,
-      s"analyzer mismatch: index=${base.analyzer} cfg=${cfg.analyzer.fingerprint}")
-    require(base.k1 == cfg.params.k1 && base.b == cfg.params.b,
-      s"BM25 param mismatch: index=(${base.k1},${base.b}) cfg=(${cfg.params.k1},${cfg.params.b})")
-    require(base.blockSize == cfg.blockSize,
-      s"blockSize mismatch: index=${base.blockSize} cfg=${cfg.blockSize}")
-    require(base.positional == cfg.storePositions,
-      s"positional mismatch: index=${base.positional} cfg=${cfg.storePositions}")
+    requireAppendable(base, cfg)
     // whole-update idempotence: the ADD step commits last, so its id in
     // the history means the update fully applied
     if (base.snapshotId == s"$snapshotId|add" || base.history.contains(s"$snapshotId|add"))
@@ -937,10 +877,7 @@ object IndexStore {
       cfg: IndexBuilder.Config = IndexBuilder.Config(),
       failBeforeCommit: Boolean = false
   ): BuildResult = {
-    import spark.implicits._
-    val m = readManifest(dir)
-      .getOrElse(throw new IllegalStateException(s"no manifest at $dir"))
-    require(m.complete, s"index at $dir is incomplete")
+    val m = openCommitted(dir)
     if (m.blockDirs.size <= 1 && m.docDirs.size <= 1 && m.tombstoneDirs.isEmpty)
       return BuildResult(m, dir)
     val idx = load(spark, dir)
@@ -949,33 +886,11 @@ object IndexStore {
     val gen = nextGen(m)
     val stageBlocks = s"compact-g$gen/blocks"
     val stageDocs = s"compact-g$gen/docs"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/compact-g$gen"))
+    rmDirs(dir, Seq(s"compact-g$gen"))
 
-    // positional indexes carry per-posting position lists through the
-    // re-block (block boundaries move; the lists themselves are unchanged)
-    val rawPostings: DataFrame =
-      if (m.positional)
-        idx.blocks.flatMap { b =>
-          val ps = graft.index.Codec.decode(b.payload, b.n)
-          val poss = graft.index.Codec.decodePositions(b.positions, ps.map(_.tf))
-          ps.iterator.zip(poss.iterator).map { case (p, pos) =>
-            (b.shardId, b.term, p.docId, p.tf, p.dl, pos.toSeq)
-          }
-        }.toDF("shardId", "term", "docId", "tf", "dl", "pos")
-      else
-        idx.blocks.toDF()
-          .select($"shardId", $"term",
-            explode(graft.plans.DecodeBlock($"payload", $"n")).as("p"))
-          .select($"shardId", $"term", $"p.docId".as("docId"),
-            $"p.tf".as("tf"), $"p.dl".as("dl"))
-    // physical purge: tombstoned docs leave the posting stream here (the
-    // tiny tombstone relation broadcasts into an anti join)
-    val postings: DataFrame =
-      if (m.tombstoneDirs.isEmpty) rawPostings
-      else rawPostings.join(broadcast(idx.tombstones), Seq("docId"), "left_anti")
     // re-encode with the MANIFEST's block size — the manifest is the truth
     // about the on-disk layout, whatever cfg the caller passed
-    val blocks = IndexBuilder.encodePostings(spark, postings,
+    val blocks = IndexBuilder.encodePostings(spark, livePostings(idx),
         cfg.copy(blockSize = m.blockSize))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (lineage, _) = shardLineage(blocks)
@@ -1000,17 +915,26 @@ object IndexStore {
       // superseded dirs survive until the NEXT commit (reader grace window)
       graceDirs = (m.blockDirs ++ m.docDirs ++ m.tombstoneDirs)
         .map(_.split('/').head).distinct)
-    if (failBeforeCommit)
-      throw new RuntimeException("injected failure before compact commit")
-    writeManifest(dir, m2) // THE commit point
-    blocks.unpersist()
-    // post-commit cleanup: only dirs whose grace window ENDED with this
-    // commit (the previous commit's superseded dirs)
-    m.graceDirs.filterNot(d => m2.graceDirs.contains(d)).foreach { d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$d"))
-    }
-    sweepOrphans(dir, m2)
-    BuildResult(m2, dir)
+    try commit(dir, "compact", m2, graceEnded(m, m2), failBeforeCommit)
+    finally blocks.unpersist()
+  }
+
+  /** An index's live postings (shardId, term, docId, tf, dl[, pos]),
+    * decoded in-plan from its blocks: compaction's input. A positional
+    * index carries each posting's position list (the re-block moves block
+    * boundaries; the lists themselves are unchanged). Tombstoned docs leave
+    * the stream here (the tiny tombstone relation broadcasts into an anti
+    * join).
+    */
+  private[graft] def livePostings(idx: Index): DataFrame = {
+    val b = idx.blocks.toDF()
+    val decode =
+      if (idx.manifest.positional) DecodeBlock(b("payload"), b("n"), b("positions"))
+      else DecodeBlock(b("payload"), b("n"))
+    val postings = b.select(b("shardId"), b("term"), explode(decode).as("p"))
+      .select("shardId", "term", "p.*")
+    if (idx.manifest.tombstoneDirs.isEmpty) postings
+    else postings.join(broadcast(idx.tombstones), Seq("docId"), "left_anti")
   }
 
   // ------------------------------------------------------------------- load
@@ -1059,9 +983,7 @@ object IndexStore {
 
   def load(spark: SparkSession, dir: String): Index = {
     import spark.implicits._
-    val m = readManifest(dir)
-      .getOrElse(throw new IllegalStateException(s"no manifest at $dir"))
-    require(m.complete, s"index at $dir is incomplete (crashed build?) — resume it first")
+    val m = openCommitted(dir)
     // shardId=K dynamic-partition layout: discovery restores shardId as an
     // int column and prunes shard dirs on shardId predicates for free.
     // Each manifest-listed dir (base + committed deltas) is discovered

@@ -30,7 +30,7 @@ object GraftFunctions {
     ("term_positions", "term_positions(array<string>) - 1-based token positions as map<string,array<int>>",
       classOf[TermPositions].getName, exprs => TermPositions(exprs.head)),
     ("decode_block", "decode_block(payload, n) - decode a varint posting block to array<struct<docId,tf,dl>>",
-      classOf[DecodeBlock].getName, exprs => DecodeBlock(exprs(0), exprs(1))),
+      classOf[DecodeBlock].getName, exprs => DecodeBlock(exprs)),
     ("lower_root", "lower_root(string) - Locale.ROOT lowercase (JVM-default-locale-proof)",
       classOf[LowerRoot].getName, exprs => LowerRoot(exprs.head)),
     ("filter_stopwords_en", "filter_stopwords_en(array<string>) - drop Spark ML English stopwords",

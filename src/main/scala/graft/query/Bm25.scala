@@ -1,5 +1,8 @@
 package graft.query
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{lit, log}
+
 import graft.model.Bm25Params
 
 /** The one BM25 formula, shared by every scoring path (scalar oracle,
@@ -26,6 +29,11 @@ object Bm25 {
     * distributed paths.
     */
   def idf(n: Long, df: Long): Double = java.lang.StrictMath.log((n + 1.0) / (df + 1.0))
+
+  /** [[idf]] as a Catalyst column over a `df` column — what every term
+    * stats relation stores.
+    */
+  def idfCol(n: Long, df: Column): Column = log((lit(n) + 1.0) / (df + 1.0))
 
   /** tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) — THE single definition, with
     * the exact association mirrored by the Catalyst expression in

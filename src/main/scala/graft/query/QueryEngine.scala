@@ -1047,6 +1047,8 @@ object QueryEngine {
     * postings, so no cross-shard coordination; candidates are bounded by
     * the rarest term's postings — never a token-level explode/shuffle) →
     * persisted match relation → global df → score + TakeOrderedAndProject.
+    * The k rows come back as a local DataFrame: the match relation is
+    * unpersisted before this returns.
     */
   def phraseTopK(
       spark: SparkSession,
@@ -1061,24 +1063,28 @@ object QueryEngine {
     import spark.implicits._
     val lazyMatches = phraseMatches(spark, blocks, phrase, cfg, slop, tombstones)
       .getOrElse(return emptyScores(spark))
-    // two consumers (df count + scoring): persisted, left to LRU eviction
-    // like the other one-shot sweep intermediates (TrainingData note).
+    // two consumers (df count + scoring): persisted, and unpersisted once
+    // the top k are on the driver — a cache entry left behind per distinct
+    // phrase would grow the session's CacheManager, which every later
+    // query's cache substitution walks.
     // NOTE (optimization round): folding the count into the scoring plan
     // via a broadcast scalar aggregate was tried and MEASURED SLOWER
     // (+0.09 s/query at sf0.1 — the BroadcastExchange job outweighs a
     // count() on the cached matches), so the explicit count stays.
     val matches = lazyMatches.persist()
-    val dfp = matches.count()
-    if (dfp == 0) { matches.unpersist(); return emptyScores(spark) }
-    val p = cfg.params
-    // same association as the term scorer (contributionCol), qtf = 1;
-    // StrictMath.log matches Catalyst's log() used for the term idf
-    val idf = StrictMath.log((corpus.docCount + 1.0) / (dfp + 1.0))
-    matches
-      .select($"docId",
-        contributionCol(lit(1), lit(idf), $"tfp", $"dl", corpus.avgdl, p).as("score"))
-      .orderBy($"score".desc, $"docId".asc)
-      .limit(k)
+    try {
+      val dfp = matches.count()
+      if (dfp == 0) return emptyScores(spark)
+      val p = cfg.params
+      // same association as the term scorer (contributionCol), qtf = 1
+      val idf = Bm25.idf(corpus.docCount, dfp)
+      val top = matches
+        .select($"docId",
+          contributionCol(lit(1), lit(idf), $"tfp", $"dl", corpus.avgdl, p).as("score"))
+        .orderBy($"score".desc, $"docId".asc)
+        .limit(k)
+      spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+    } finally matches.unpersist()
   }
 
   /** Mixed quoted + free-term query — the search-box semantics for

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
-import graft.index.IndexBuilder
+import graft.index.{IndexBuilder, IndexStore}
 import graft.query.QueryEngine
 import TestKit.spark
 
@@ -66,6 +66,23 @@ class PlanSpec extends AnyFunSuite {
     assert(!pos.contains("DeserializeToObject"),
       "positional encode deserializes each posting into an object:\n" + pos)
     assert(shape(pos) == shape(encodePlan(positional = false)), pos)
+  }
+
+  test("compaction decodes blocks in the plan: no per-posting objects, positional or not") {
+    import spark.implicits._
+    val turns = spark.createDataset(TestKit.TranscriptGen.turns(seed = 5, nConvs = 10))
+    Seq(false, true).foreach { positional =>
+      val cfg = IndexBuilder.Config(docIdPartitions = 4, numShards = 8,
+        storePositions = positional)
+      val dir = java.nio.file.Files.createTempDirectory("graft-compact-plan").toString
+      IndexStore.build(spark, turns, dir, "base", cfg)
+      IndexStore.deleteDocs(spark, Seq(1L, 2L).toDF("docId"), dir, "del", cfg)
+      val postings = IndexStore.livePostings(IndexStore.load(spark, dir))
+      assert(postings.columns.contains("pos") == positional, postings.columns.toSeq)
+      val p = plan(postings)
+      assert(!p.contains("DeserializeToObject"),
+        s"positional=$positional compaction decode deserializes each block:\n" + p)
+    }
   }
 
   test("exhaustive top-k plans as TakeOrderedAndProject with broadcast stats") {

@@ -147,6 +147,16 @@ class PhraseSpec extends AnyFunSuite {
     }
   }
 
+  test("a lone phrase leaves no cached match relation behind") {
+    val idx = buildIndex(TranscriptGen.turns(seed = 83, nConvs = 20), "graft-phrase-cache")
+    val phrases = Seq("term0000 term0001", "term0001 term0000", "term0000 term0002")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    phrases.foreach(p => assert(phraseTop(idx, p, 10).nonEmpty, s"vacuous: [$p]"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"phraseTopK left cached relations: ${
+      leaked.map(spark.sparkContext.getPersistentRDDs).mkString("; ")}")
+  }
+
   test("phrase query against a NON-positional index fails loudly, not silently-empty") {
     val turns = Seq(
       Turn("c0", 0, "user", "data spark data", "", new java.sql.Timestamp(0L)))
