@@ -249,8 +249,8 @@ object SparkEntry {
   /** WAND fetch size: the driver compares on scores ROUNDED to 4 decimals,
     * so docs whose exact scores straddle the k-th by < 1e-4 can reorder
     * after rounding — the over-fetch makes round-then-rank exact at any
-    * verify scale. Cost is bounded: per-shard heap inserts are O(log k')
-    * and the final TakeOrderedAndProject only ever sees per-shard winners.
+    * verify scale. Cost is bounded: per-task heap inserts are O(log k')
+    * and the driver's final merge only ever sees per-task winners.
     * A latency-sensitive caller would use k directly on the raw scores
     * (the engine's own tie-break needs no rounding).
     */
@@ -393,8 +393,8 @@ object SparkEntry {
 
   /** Flagship: decorated BM25 top-10 for q1 on sf0.001 through the
     * block-max WAND path over the encoded on-disk index (block scan with
-    * term pushdown → per-shard WAND → TakeOrderedAndProject → broadcast
-    * decoration).
+    * term pushdown → per-shard WAND into per-task heaps → driver merge →
+    * broadcast decoration).
     */
   def entry(spark: SparkSession): DataFrame =
     bm25Wand(spark, "/root/testdata/sf0.001", queryText("q1"))

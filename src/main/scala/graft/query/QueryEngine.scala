@@ -1,10 +1,13 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, FilterExec,
   InputAdapter, ProjectExec, SparkPlan, UnionExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalRows
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.Analyzer
@@ -20,28 +23,32 @@ import graft.model._
   *
   *   - `wandTopK` (and every other ranked query: AND, m-of-n,
   *     exclusions, wildcards, phrase filters, `field:value` filters,
-  *     batches): block-max WAND over the encoded posting blocks in a typed
-  *     mapPartitions, one document-at-a-time scorer
-  *     ([[QueryEngine.BoolScorer]]) per docId-range shard whose pivot doc
-  *     passes per-document checks (tombstones, field allow-list,
-  *     exclusions, then phrase positions — Lucene's two-phase iteration),
-  *     per-shard top-k heap, then a global
-  *     orderBy(score desc, docId asc).limit(k) (Spark plans it as
-  *     TakeOrderedAndProject, like the reference's final
-  *     orderBy/limit, /root/reference/data_processing/Lexical_indexing/
-  *     bm25_searcher.py:111). Block-max metadata is an upper bound used
-  *     only to SKIP work, never to approximate — exactness is
+  *     batches): block-max WAND over the encoded posting blocks, one
+  *     document-at-a-time scorer ([[QueryEngine.BoolScorer]]) per
+  *     docId-range shard whose pivot doc passes per-document checks
+  *     (tombstones, field allow-list, exclusions, then phrase positions —
+  *     Lucene's two-phase iteration). A scan task keeps ONE top-k heap per
+  *     query for all of its shard groups ([[TopKHeap]]), and its θ is the
+  *     pair (score, docId) of the heap's worst entry, so a shard group read
+  *     late prunes against the task's best so far in whatever order the
+  *     groups arrive (REPOSE's partition-level threshold sharing). Each
+  *     task returns its top k per query as primitive arrays; the driver
+  *     k-way merges them under (score desc, docId asc) — the reference's
+  *     final orderBy/limit (bm25_searcher.py:111) — and the result is a
+  *     local relation of those rows. Block-max metadata is an upper bound
+  *     used only to SKIP work, never to approximate — exactness is
   *     property-tested against the exhaustive path.
   *
-  * Serving a term query on a loaded index is ONE Spark job: the query
-  * terms' idfs and every wildcard expansion come from a driver-side term
-  * dictionary ([[TermDictionary]], loaded once per `termStats` relation),
-  * and the scorer reads the term-pushed block scan as the files lie — each
-  * shard's blocks of one generation are one file, so a task that reads
-  * whole files holds every posting of its docs and needs no shuffle
-  * ([[shardGrouped]]). Blocks that do not meet that gate (persisted,
-  * in-memory, split or multi-file shard dirs) are exchanged on shardId as
-  * before.
+  * Serving a term query, or a whole batch of them, on a loaded index is
+  * ONE Spark job: the query terms' idfs and every wildcard expansion come
+  * from a driver-side term dictionary ([[TermDictionary]], loaded once per
+  * `termStats` relation), the scorer reads the term-pushed block scan as
+  * the files lie — each shard's blocks of one generation are one file, so
+  * a task that reads whole files holds every posting of its docs and needs
+  * no shuffle ([[shardGrouped]]) — and the finish is the driver merge, not
+  * a second job. The job runs inside the call. Blocks that do not meet the
+  * whole-file gate (persisted, in-memory, split or multi-file shard dirs)
+  * are exchanged on shardId as before.
   *
   * Contrast with the reference's scorer, which funneled every document to
   * a single GPU task via repartition(1) (bm25_searcher.py:102-107); here
@@ -96,10 +103,21 @@ object QueryEngine {
       .limit(k)
   }
 
-  private def emptyScores(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    spark.emptyDataset[(Long, Double)].toDF("docId", "score")
-  }
+  /** (docId, score): every ranked result's schema. */
+  private val ScoreSchema = StructType(Seq(
+    StructField("docId", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
+  /** (qid, docId, score): a batch's. */
+  private val QidScoreSchema = StructType(StructField("qid", StringType) +: ScoreSchema.fields)
+
+  /** The one finish of every ranked path: (docId, score) rows already on
+    * the driver, in rank order, as a local relation.
+    */
+  private def scoreRows(spark: SparkSession, rows: Seq[InternalRow]): DataFrame =
+    LocalRows.frame(spark, ScoreSchema, rows)
+
+  private def emptyScores(spark: SparkSession): DataFrame = scoreRows(spark, Nil)
 
   /** Decorate top-k scores with the originating turn (reference join J3
     * shape, bm25_searcher.py:117-120): the k-row side is broadcast.
@@ -139,6 +157,11 @@ object QueryEngine {
       excluded: Seq[String], m: Int, phrases: Seq[Phrase] = Nil,
       allow: Option[DocIdSet] = None)
 
+  /** The PostingBlock encoder, derived once (`spark.implicits._` derives
+    * it by Scala reflection at every use).
+    */
+  private val PostingBlockEnc: Encoder[PostingBlock] = Encoders.product[PostingBlock]
+
   /** Blocks with the positions column blanked on every row but
     * `phraseWords`': the typed Dataset[PostingBlock] deserializer would
     * otherwise force the parquet scan to read the phrase-only positions
@@ -148,22 +171,19 @@ object QueryEngine {
     */
   private def scoringBlocks(blocks: Dataset[PostingBlock],
       phraseWords: Seq[String] = Nil): Dataset[PostingBlock] = {
-    import blocks.sparkSession.implicits._
     val none = typedLit(Array.emptyByteArray)
     blocks.toDF()
       .withColumn("positions",
         if (phraseWords.isEmpty) none
-        else when($"term".isin(phraseWords: _*), $"positions").otherwise(none))
-      .as[PostingBlock]
+        else when(col("term").isin(phraseWords: _*), col("positions")).otherwise(none))
+      .as(PostingBlockEnc)
   }
 
-  /** Per-shard top-k candidates (qid, docId, score) of a whole batch of
-    * ranked queries: the query terms' idfs from the term dictionary (one
-    * collect of just those terms when the dictionary is over its cap),
-    * then ONE term-pushed block scan grouped by shard ([[shardGrouped]]:
-    * no exchange on a loaded index) and scored by [[BoolScorer]] — the
-    * block scan and the per-shard block decodes are shared by every query.
-    * None when no query can match.
+  /** A batch of ranked queries as the scorer runs them: the query terms'
+    * idfs from the term dictionary (one collect of just those terms when
+    * the dictionary is over its cap), and ONE term-pushed block scan
+    * grouped by shard ([[shardGrouped]]: no exchange on a loaded index)
+    * that every query shares. None when no query can match.
     *
     * A term without postings matches nowhere: it drops out, and a query
     * left with fewer than m terms matches nothing (so one absent required
@@ -171,16 +191,13 @@ object QueryEngine {
     * nothing. A phrase word without postings, an all-stopword phrase or
     * an empty allow-list empties its query.
     */
-  private def termCandidates(
+  private def scorerPlan(
       spark: SparkSession,
       blocks: Dataset[PostingBlock],
       termStats: Dataset[TermStat],
-      corpus: CorpusStats,
       queries: Seq[TermQuery],
-      k: Int,
-      cfg: IndexBuilder.Config,
-      tombstones: DocIdSet
-  ): Option[DataFrame] = {
+      cfg: IndexBuilder.Config
+  ): Option[(Seq[BoolQuery], Dataset[PostingBlock])] = {
     import spark.implicits._
     // fewer distinct terms than m can never match: no idf collect for them
     val satisfiable = queries.filter(q => q.terms.nonEmpty && q.terms.size >= q.m &&
@@ -205,21 +222,78 @@ object QueryEngine {
     }
     if (live.isEmpty) return None
     val scanNames = live.flatMap(q => q.terms.map(_.term) ++ q.excluded).distinct
+    val scan = scoringBlocks(blocks, live.flatMap(_.phrases.flatMap(_._1)).distinct)
+      .filter(col("term").isin(scanNames: _*))
+    Some((live, shardGrouped(scan, blocks, cfg)))
+  }
 
+  /** The exact top k of every query of a batch that has any match, by qid:
+    * ONE Spark job over [[scorerPlan]]'s scan, in which each task scores
+    * its shard groups into one heap per query and returns that query's top
+    * k ([[BoolScorer.scoreTask]]), then a k-way merge of the tasks' lists
+    * on the driver ([[mergeTopK]]). The job runs now, inside the call.
+    */
+  private def rankedTopK(
+      spark: SparkSession,
+      blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat],
+      corpus: CorpusStats,
+      queries: Seq[TermQuery],
+      k: Int,
+      cfg: IndexBuilder.Config,
+      tombstones: DocIdSet
+  ): Seq[(String, Ranked)] = {
+    if (k < 1) return Nil
+    val (live, scan) = scorerPlan(spark, blocks, termStats, queries, cfg).getOrElse(return Nil)
     val p = cfg.params
     val avgdl = corpus.avgdl
     val kk = k
     val qB = spark.sparkContext.broadcast(live)
     val tsB = tombstones.broadcastVia(spark)
-    val scan = scoringBlocks(blocks, live.flatMap(_.phrases.flatMap(_._1)).distinct)
-      .filter($"term".isin(scanNames: _*))
-    Some(shardGrouped(scan, blocks, cfg)
-      .mapPartitions { it =>
-        BoolScorer.scorePartitionBatch(it.buffered, qB.value, kk, p.k1, p.b, avgdl,
-          tsB.value)
-      }
-      .toDF("qid", "docId", "score"))
+    val perTask = try {
+      scan.rdd.mapPartitions { it =>
+        BoolScorer.scoreTask(it.buffered, qB.value, kk, p.k1, p.b, avgdl, tsB.value)
+      }.collect()
+    } finally qB.destroy()
+    perTask.groupBy(_._1).toSeq.sortBy(_._1).map { case (i, lists) =>
+      live(i).qid -> mergeTopK(lists.map(_._2).toSeq, k)
+    }
   }
+
+  /** The best `k` of several rank-ordered lists (one per scan task), in
+    * rank order (score desc, docId asc), under the heap's one comparison:
+    * each list is read until its next entry cannot enter. A docId is in
+    * at most one list: a doc's postings all sit in one file, which one
+    * task reads whole (or in one exchanged shard).
+    */
+  private[query] def mergeTopK(lists: Seq[Ranked], k: Int): Ranked = {
+    val heap = new TopKHeap(k)
+    lists.foreach { r =>
+      var i = 0
+      while (i < r.size && heap.admits(r.scores(i), r.docIds(i))) {
+        heap.offer(r.docIds(i), r.scores(i))
+        i += 1
+      }
+    }
+    heap.drain()
+  }
+
+  /** The scan [[searchBatch]] scores `queries`' ranked ones from — the
+    * input of its one scoring job, exposed so plan-shape tests can assert
+    * on it (the result is a local relation). None when no query can match.
+    */
+  private[graft] def scorerInput(
+      spark: SparkSession,
+      blocks: Dataset[PostingBlock],
+      termStats: Dataset[TermStat],
+      queries: Seq[String],
+      minShouldMatch: Int,
+      cfg: IndexBuilder.Config,
+      docs: Option[DataFrame] = None
+  ): Option[Dataset[PostingBlock]] =
+    scorerPlan(spark, blocks, termStats, termQueries(spark, termStats,
+      queries.zipWithIndex.map { case (q, i) => s"q$i" -> resolveFields(q, docs) },
+      minShouldMatch, cfg, docs), cfg).map(_._2)
 
   /** `scan` (a narrow, term-pushed view of `blocks`) arranged for the
     * shard scorers ([[Shard]]), which read contiguous same-shard rows as
@@ -249,10 +323,35 @@ object QueryEngine {
     * scan is partitioned by shardId alone with exactly one file per
     * `shardId=K` dir, and no file exceeds the split size Spark computes
     * for that scan under the current conf (a larger file would be split
-    * across tasks). The plan is built afresh on every call, so a relation
-    * persisted since an earlier query (an in-memory scan) fails the gate.
+    * across tasks).
+    *
+    * Planning costs a few ms, so the verdict is memoized per relation
+    * (weak identity keys, like [[dictionaries]]) and per what can change
+    * it for that relation: whether the CacheManager holds any part of its
+    * plan (a relation persisted since an earlier query scans from memory
+    * and fails the gate) and the confs of Spark's split size.
     */
   private[query] def wholeFileScan(blocks: Dataset[PostingBlock]): Boolean = {
+    val qe = blocks.queryExecution
+    val spark = qe.sparkSession
+    val cache = spark.sharedState.cacheManager
+    val cached = !cache.isEmpty && qe.analyzed.exists(cache.lookupCachedData(spark, _).isDefined)
+    val key = (cached, SplitConfs.map(spark.conf.getOption))
+    wholeFileVerdicts.synchronized {
+      wholeFileVerdicts.computeIfAbsent(blocks, _ => scala.collection.mutable.Map.empty)
+        .getOrElseUpdate(key, planWholeFileScan(blocks))
+    }
+  }
+
+  /** The confs `FilePartition.maxSplitBytes` reads. */
+  private val SplitConfs = Seq("spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism")
+
+  private val wholeFileVerdicts = new java.util.WeakHashMap[Dataset[PostingBlock],
+    scala.collection.mutable.Map[(Boolean, Seq[Option[String]]), Boolean]]()
+
+  private def planWholeFileScan(blocks: Dataset[PostingBlock]): Boolean = {
     val qe = blocks.queryExecution
     val spark = qe.sparkSession
     val plan = spark.sessionState.executePlan(qe.logical).executedPlan
@@ -282,32 +381,32 @@ object QueryEngine {
       .select(explode(graft.plans.DecodeBlock(col("payload"), col("n"))).as("pp"))
       .select(col("pp.docId").as("docId"))
 
-  /** One ranked query, finished by a global
-    * orderBy(score desc, docId asc).limit(k) (TakeOrderedAndProject).
-    */
+  /** One ranked query's exact top k ([[rankedTopK]]), in rank order. */
   private def termTopK(spark: SparkSession, blocks: Dataset[PostingBlock],
       termStats: Dataset[TermStat], corpus: CorpusStats, query: TermQuery, k: Int,
       cfg: IndexBuilder.Config, tombstones: DocIdSet): DataFrame =
-    termCandidates(spark, blocks, termStats, corpus, Seq(query), k, cfg, tombstones)
-      .fold(emptyScores(spark))(
-        _.select(col("docId"), col("score"))
-          .orderBy(col("score").desc, col("docId").asc).limit(k))
+    scoreRows(spark, rankedTopK(spark, blocks, termStats, corpus, Seq(query), k, cfg,
+      tombstones).flatMap { case (_, r) =>
+        r.docIds.indices.map(i => InternalRow(r.docIds(i), r.scores(i)))
+      })
 
-  /** A batch of ranked queries, finished by a per-qid window top-k. */
+  /** A batch of ranked queries' exact top k ([[rankedTopK]]): (qid, docId,
+    * score) rows, each qid's in rank order.
+    */
   private def termTopKBatch(spark: SparkSession, blocks: Dataset[PostingBlock],
       termStats: Dataset[TermStat], corpus: CorpusStats,
       queries: Seq[TermQuery], k: Int, cfg: IndexBuilder.Config,
       tombstones: DocIdSet): DataFrame = {
-    import spark.implicits._
-    // a duplicated qid would merge two queries' candidates in the per-qid
-    // window finish — reject instead of silently corrupting the top-k
+    // a duplicated qid would leave two queries' rows indistinguishable in
+    // the result — reject instead of silently mixing the top-ks
     require(queries.map(_.qid).distinct.size == queries.size,
       s"duplicate qids in batch: ${queries.map(_.qid)}")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("score").desc, col("docId").asc)
-    termCandidates(spark, blocks, termStats, corpus, queries, k, cfg, tombstones)
-      .fold(spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score"))(
-        _.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn"))
+    val rows = rankedTopK(spark, blocks, termStats, corpus, queries, k, cfg, tombstones)
+      .flatMap { case (qid, r) =>
+        val q = UTF8String.fromString(qid)
+        r.docIds.indices.map(i => InternalRow(q, r.docIds(i), r.scores(i)))
+      }
+    LocalRows.frame(spark, QidScoreSchema, rows)
   }
 
   /** Exclusion tokens analyzed like the index (case, word-break). */
@@ -343,8 +442,9 @@ object QueryEngine {
     * implies (/root/reference/api/combined.py:159-224, one request per
     * query against a shared index).
     *
-    * Returns (qid, docId, score): per-qid exact top-k, same per-query
-    * results as [[wandTopK]] (property-tested).
+    * Returns (qid, docId, score): per-qid exact top-k, each qid's rows in
+    * rank order, same per-query results as [[wandTopK]] (property-tested).
+    * The per-task lists merge on the driver: no per-qid finish job.
     */
   def wandTopKBatch(
       spark: SparkSession,
@@ -470,36 +570,99 @@ object QueryEngine {
     }
   }
 
+  /** One query's top k in rank order (score desc, docId asc), as
+    * primitive arrays — what a scan task returns per query and what the
+    * driver merge ([[mergeTopK]]) reads and writes.
+    */
+  private[query] final class Ranked(val docIds: Array[Long], val scores: Array[Double])
+      extends Serializable {
+    def size: Int = docIds.length
+  }
+
   /** Bounded top-k accumulator under the global tie-break (score desc,
-    * docId asc): the evictable worst entry is the smallest score, ties
-    * broken toward the larger docId. [[BoolScorer]] serves every ranked
-    * query with it, so the ranking contract has exactly one definition.
+    * docId asc), one per (scan task, query), shared by every shard group
+    * the task scores. Its worst entry — smallest score, ties broken toward
+    * the larger docId — is WAND's θ, and θ is that entry's (score, docId)
+    * PAIR: a task reads its shard groups in whatever order its files come
+    * (docIds do not ascend across groups), so a later candidate may hold a
+    * smaller docId than θ's and win an exact score tie. [[admits]] is the
+    * one comparison behind both pruning and insertion, so the ranking
+    * contract has exactly one definition. A binary heap over primitive
+    * arrays, worst entry at the root, grown on demand up to k.
     */
   private[query] final class TopKHeap(k: Int) {
-    private val ord: Ordering[(Long, Double)] = new Ordering[(Long, Double)] {
-      def compare(a: (Long, Double), b: (Long, Double)): Int = {
-        val c = java.lang.Double.compare(b._2, a._2) // smaller score first
-        if (c != 0) c else java.lang.Long.compare(a._1, b._1) // larger docId first
-      }
-    }
-    private val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Double)](ord)
+    private var docIds = new Array[Long](math.min(k, 16))
+    private var scores = new Array[Double](docIds.length)
+    private var size = 0
 
-    /** Current k-th score — WAND's θ; -inf while the heap is unfilled.
-      * Within a shard docIds only grow, so a candidate whose upper bound
-      * is <= θ can never displace an entry (equal score loses on docId).
+    def isEmpty: Boolean = size == 0
+
+    /** Whether a doc `docId` scoring `bound` — or at most `bound`, an
+      * upper bound — can enter: always while the heap is unfilled, else
+      * iff it beats θ under (score desc, docId asc).
       */
-    def theta: Double = if (heap.size < k) Double.NegativeInfinity else heap.head._2
+    def admits(bound: Double, docId: Long): Boolean =
+      size < k || bound > scores(0) || (bound == scores(0) && docId < docIds(0))
 
     def offer(docId: Long, score: Double): Unit =
-      if (heap.size < k) heap.enqueue((docId, score))
-      else {
-        val worst = heap.head
-        if (score > worst._2 || (score == worst._2 && docId < worst._1)) {
-          heap.dequeue(); heap.enqueue((docId, score))
+      if (size < k) {
+        if (size == docIds.length) {
+          val cap = math.min(k.toLong, 2L * size).toInt
+          docIds = java.util.Arrays.copyOf(docIds, cap)
+          scores = java.util.Arrays.copyOf(scores, cap)
         }
+        set(size, docId, score)
+        size += 1
+        siftUp(size - 1)
+      } else if (admits(score, docId)) {
+        set(0, docId, score)
+        siftDown(0)
       }
 
-    def drain(): Seq[(Long, Double)] = heap.dequeueAll.reverse
+    /** The entries in rank order; empties the heap. */
+    def drain(): Ranked = {
+      val out = new Ranked(new Array[Long](size), new Array[Double](size))
+      while (size > 0) {
+        size -= 1
+        out.docIds(size) = docIds(0)
+        out.scores(size) = scores(0)
+        set(0, docIds(size), scores(size))
+        siftDown(0)
+      }
+      out
+    }
+
+    private def set(i: Int, docId: Long, score: Double): Unit = {
+      docIds(i) = docId
+      scores(i) = score
+    }
+
+    /** Whether entry i ranks below entry j. */
+    private def worse(i: Int, j: Int): Boolean =
+      scores(i) < scores(j) || (scores(i) == scores(j) && docIds(i) > docIds(j))
+
+    private def swap(i: Int, j: Int): Unit = {
+      val d = docIds(i); val s = scores(i)
+      set(i, docIds(j), scores(j))
+      set(j, d, s)
+    }
+
+    private def siftUp(from: Int): Unit = {
+      var i = from
+      while (i > 0 && worse(i, (i - 1) / 2)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
+    }
+
+    private def siftDown(from: Int): Unit = {
+      var i = from
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        var w = i
+        if (l < size && worse(l, w)) w = l
+        if (l + 1 < size && worse(l + 1, w)) w = l + 1
+        if (w == i) done = true else { swap(i, w); i = w }
+      }
+    }
   }
 
   // --------------------------------------------- conjunctive (boolean AND)
@@ -900,11 +1063,11 @@ object QueryEngine {
     * wildcards (every query's stems expand in ONE dictionary scan),
     * phrases and field filters included — scores in a single shared
     * [[BoolScorer]] job (shared block scan + per-shard decode memo, the
-    * measured ~3× amortization of the per-job scheduler floor); a field
-    * query adds its allow-list job, and the two excepted kinds run their
-    * [[search]] plans and union in. Returns (qid, docId, score), per-qid
-    * top-k, each qid identical to a [[search]] call with the same text
-    * (property-tested).
+    * measured ~3× amortization of the per-job scheduler floor) finished by
+    * the driver merge; a field query adds its allow-list job, and the two
+    * excepted kinds run their [[search]] plans and union in. Returns (qid,
+    * docId, score), per-qid top-k, each qid identical to a [[search]] call
+    * with the same text (property-tested).
     *
     * `minShouldMatch` applies to every query in the batch (callers with
     * per-query msm issue those queries separately).
@@ -923,18 +1086,17 @@ object QueryEngine {
   ): DataFrame = {
     import spark.implicits._
     require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
-    // duplicate qids would merge two queries' candidates under one window
-    // partition or one qid literal of the union
+    // duplicate qids would leave two queries' rows indistinguishable in the
+    // result, or under one qid literal of the union
     require(queries.map(_._1).distinct.size == queries.size,
       s"duplicate qids in batch: ${queries.map(_._1)}")
     val parsed = queries.map { case (qid, q) => (qid, q, resolveFields(q, docs)) }
     val (other, ranked) = parsed.partition { case (_, _, pq) =>
       filterOnly(pq, cfg) || lonePhrase(pq, exclusionTerms(pq.excluded, cfg))
     }
-    val byStem = expandStems(spark, termStats,
-      ranked.flatMap { case (_, _, pq) => prefixStems(pq).map(_._1) })
     val batched = termTopKBatch(spark, blocks, termStats, corpus,
-      ranked.map { case (qid, _, pq) => termQuery(qid, pq, byStem, minShouldMatch, cfg, docs) },
+      termQueries(spark, termStats, ranked.map { case (qid, _, pq) => qid -> pq },
+        minShouldMatch, cfg, docs),
       k, cfg, tombstones)
     other.foldLeft(batched) { case (acc, (qid, q, _)) =>
       acc.unionByName(
@@ -1011,6 +1173,17 @@ object QueryEngine {
     TermQuery(qid, positive, exclusionTerms(pq.excluded, cfg), m, phrases, allow)
   }
 
+  /** Parsed ranked queries as the scorer takes them, every query's
+    * wildcard stems expanded together ([[expandStems]]).
+    */
+  private def termQueries(spark: SparkSession, termStats: Dataset[TermStat],
+      parsed: Seq[(String, ParsedQuery)], m: Int, cfg: IndexBuilder.Config,
+      docs: Option[DataFrame]): Seq[TermQuery] = {
+    val byStem = expandStems(spark, termStats,
+      parsed.flatMap { case (_, pq) => prefixStems(pq).map(_._1) })
+    parsed.map { case (qid, pq) => termQuery(qid, pq, byStem, m, cfg, docs) }
+  }
+
   /** A parsed query's analyzed wildcard stems with their occurrence counts. */
   private def prefixStems(pq: ParsedQuery): Seq[(String, Int)] =
     analyzePrefixStems(pq.prefixes.map(_.dropRight(1)))
@@ -1046,9 +1219,9 @@ object QueryEngine {
     * intersect in mapPartitions (docId-sharding co-locates all of a doc's
     * postings, so no cross-shard coordination; candidates are bounded by
     * the rarest term's postings — never a token-level explode/shuffle) →
-    * persisted match relation → global df → score + TakeOrderedAndProject.
-    * The k rows come back as a local DataFrame: the match relation is
-    * unpersisted before this returns.
+    * persisted match relation → global df → score + TakeOrderedAndProject,
+    * collected as InternalRows into the local relation every ranked path
+    * ends in: the match relation is unpersisted before this returns.
     */
   def phraseTopK(
       spark: SparkSession,
@@ -1083,7 +1256,7 @@ object QueryEngine {
           contributionCol(lit(1), lit(idf), $"tfp", $"dl", corpus.avgdl, p).as("score"))
         .orderBy($"score".desc, $"docId".asc)
         .limit(k)
-      spark.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
+      scoreRows(spark, LocalRows.collect(top).toSeq)
     } finally matches.unpersist()
   }
 
@@ -1203,26 +1376,31 @@ object QueryEngine {
     * with the same block-max pruning. Phrases and field filters are
     * per-document checks on the pivot doc (Lucene's two-phase iteration:
     * the postings approximate, positions verify only candidates). One
-    * shard at a time per partition.
+    * shard at a time per partition, into one heap per query for the whole
+    * partition.
     */
   private[query] object BoolScorer {
 
-    /** Rows must arrive shard-grouped ([[shardGrouped]]). Every query
-      * is scored against each shard group while its blocks are at hand.
-      * Decoded blocks are memoized per shard ([[Shard]]), so a block
-      * shared by several queries is decoded once.
+    /** One scan task's share of a query batch. Rows must arrive
+      * shard-grouped ([[shardGrouped]]); every query is scored against
+      * each shard group while its blocks are at hand, into ONE heap per
+      * query shared by all of the task's groups, so a group prunes against
+      * the best docs of the groups before it. Decoded blocks are memoized
+      * per shard ([[Shard]]), so a block shared by several queries is
+      * decoded once. Returns, for every query with a candidate, its index
+      * in `queries` and the task's top k.
       */
-    def scorePartitionBatch(
+    def scoreTask(
         it: BufferedIterator[PostingBlock],
         queries: Seq[BoolQuery],
         k: Int,
         k1: Double, b: Double, avgdl: Double,
         tombstones: DocIdSet = DocIdSet.empty
-    ): Iterator[(String, Long, Double)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
+    ): Iterator[(Int, Ranked)] = {
+      val heaps = Array.fill(queries.size)(new TopKHeap(k))
       while (it.hasNext) {
         val shard = new Shard(it)
-        queries.foreach { q =>
+        queries.iterator.zip(heaps.iterator).foreach { case (q, heap) =>
           // docId-sharding co-locates a doc's postings: a match needs m of
           // the query's terms, and every phrase word, present in this
           // shard. q.terms is term-sorted, so the cursors are too (the
@@ -1239,32 +1417,37 @@ object QueryEngine {
               !tombstones.contains(doc) && q.allow.forall(_.contains(doc)) &&
                 !excludedAt(not, doc) &&
                 chains.forall { case (chain, slop) => phraseTf(chain, slop, doc) > 0 }
-            out ++= scoreShard(cursors, q.m, k, accept)
-              .map { case (d, s) => (q.qid, d, s) }
+            scoreShard(cursors, q.m, heap, accept)
           }
         }
       }
-      out.iterator
+      heaps.indices.iterator.filterNot(heaps(_).isEmpty).map(i => i -> heaps(i).drain())
     }
 
     /** WAND pivot selection on global term upper bounds with a match-count
       * condition: the pivot is the first cursor, in curDoc order, whose
       * prefix holds at least m cursors AND whose prefix upper-bound sum
-      * beats θ. No doc before the pivot can hold m terms and beat θ, so a
-      * lagging cursor jumps to it. Once the pivot is extended over docId
-      * ties, every prefix cursor sits on the pivot doc (>= m of them), and
-      * the sum of their *current-block* upper bounds must still beat θ or
-      * the doc is skipped without scoring (Ding & Suel's BMW). A doc that
-      * `accept` rejects (tombstoned, outside the allow-list, holding an
-      * excluded term, missing a phrase) is skipped the same way.
-      * θ respects the global tie-break (score desc, docId asc): within a
-      * shard docIds only grow, so a candidate whose upper bound is <= θ can
-      * never displace a heap entry. `cursors` must be term-sorted: scores
-      * sum in ascending term order, the pinned order of every path.
+      * could enter `heap` at that cursor's doc. No doc before the pivot can
+      * hold m terms and enter, so a lagging cursor jumps to it. Once the
+      * pivot is extended over docId ties, every prefix cursor sits on the
+      * pivot doc (>= m of them), and the sum of their *current-block*
+      * upper bounds must still enter or the doc is skipped without scoring
+      * (Ding & Suel's BMW). A doc that `accept` rejects (tombstoned,
+      * outside the allow-list, holding an excluded term, missing a phrase)
+      * is skipped the same way.
+      *
+      * θ is the heap's (score, docId) pair ([[TopKHeap.admits]]): a bound
+      * enters iff it is > θ.score, or = θ.score at a docId < θ.docId. The
+      * heap may hold docs of other shard groups on either side of this
+      * shard's docIds, so an exact tie at a smaller docId must be scored.
+      * A bound sum is widened by its worst rounding ([[sumUpperBound]]) so
+      * the summation order cannot hide such a tie. Pruning stays exact in
+      * any group order: within a group a prefix's docs only grow, and θ
+      * only rises. `cursors` must be term-sorted: scores sum in ascending
+      * term order, the pinned order of every path.
       */
-    private[query] def scoreShard(cursors: Array[Cursor], m: Int, k: Int,
-        accept: Long => Boolean): Seq[(Long, Double)] = {
-      val heap = new TopKHeap(k)
+    private[query] def scoreShard(cursors: Array[Cursor], m: Int, heap: TopKHeap,
+        accept: Long => Boolean): Unit = {
       // the live cursors in curDoc order: cursors only move forward, so an
       // insertion sort restores the order in about one pass per step
       val sorted = cursors.clone()
@@ -1278,23 +1461,23 @@ object QueryEngine {
           sorted(j + 1) = c
           s += 1
         }
-        val theta = heap.theta
         var acc = 0.0
         var pivotIdx = -1
         var i = 0
         while (i < live && pivotIdx < 0) {
           acc += sorted(i).globalUb
-          if (i + 1 >= m && acc > theta) pivotIdx = i
+          if (i + 1 >= m && heap.admits(sumUpperBound(acc, i + 1), sorted(i).curDoc))
+            pivotIdx = i
           i += 1
         }
-        if (pivotIdx < 0) live = 0 // no remaining doc can hold m terms and beat θ
+        if (pivotIdx < 0) live = 0 // no remaining doc can hold m terms and enter
         else {
           val pivotDoc = sorted(pivotIdx).curDoc
           // extend the pivot across docId ties: cursors beyond the first
           // qualifying index can sit at pivotDoc too, and the block-max
           // bound below must cover EVERY cursor positioned at pivotDoc or
           // the skip branch silently drops a doc whose true score
-          // (including the tied terms) exceeds θ (Ding & Suel's BMW /
+          // (including the tied terms) enters the heap (Ding & Suel's BMW /
           // Lucene pivot semantics)
           while (pivotIdx + 1 < live && sorted(pivotIdx + 1).curDoc == pivotDoc)
             pivotIdx += 1
@@ -1302,7 +1485,8 @@ object QueryEngine {
             var blockAcc = 0.0
             var j = 0
             while (j <= pivotIdx) { blockAcc += sorted(j).curBlockUb; j += 1 }
-            if (blockAcc > theta && accept(pivotDoc)) {
+            if (heap.admits(sumUpperBound(blockAcc, pivotIdx + 1), pivotDoc) &&
+                accept(pivotDoc)) {
               var score = 0.0
               var t = 0
               while (t < cursors.length) {
@@ -1340,8 +1524,19 @@ object QueryEngine {
           live = w
         }
       }
-      heap.drain()
     }
+
+    /** An upper bound of the sum of `n` nonnegative doubles in ANY order,
+      * given `acc`, their sum in one order: floating-point addition is not
+      * associative, so past two terms a score summed in term order can
+      * exceed the same bounds summed in curDoc order by a few ulps —
+      * enough to skip a doc that ties θ exactly. Each order is within
+      * (n-1)·2^-52 of the exact sum (Lucene's MathUtil.sumUpperBound).
+      */
+    private def sumUpperBound(acc: Double, n: Int): Double =
+      if (n <= 2) acc else acc * (1.0 + 2.0 * (n - 1) * SumUlp)
+
+    private val SumUlp = java.lang.Math.scalb(1.0, -52)
 
     /** Whether an exclusion cursor holds `doc`. The cursors skip forward
       * lazily: the docs checked here only grow within a shard (every live

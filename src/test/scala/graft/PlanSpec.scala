@@ -1,11 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.index.{IndexBuilder, IndexStore}
 import graft.query.QueryEngine
@@ -13,13 +13,39 @@ import TestKit.spark
 
 /** Physical-plan shape assertions (the "would this survive 100x" checks):
   * filters/pruning reach the parquet scan, small sides broadcast, the
-  * postings relation stays narrow, top-k plans as TakeOrderedAndProject.
+  * postings relation stays narrow, the exhaustive top-k plans as
+  * TakeOrderedAndProject. A ranked query's result is a local relation of
+  * rows its one scoring job returned, so its scan is asserted on
+  * [[QueryEngine.scorerInput]], the scorer's input.
   */
 class PlanSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+  private def plan(df: Dataset[_]): String = df.queryExecution.executedPlan.toString
+
+  /** The physical plan (AQE's input plan when adaptive). */
+  private def physical(df: Dataset[_]): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.inputPlan
+    case other => other
+  }
+
+  /** The block scan a ranked search (or searchBatch) over `queries` is
+    * scored from.
+    */
+  private def scorerInput(idx: IndexStore.Index, queries: Seq[String], m: Int = 1,
+      docs: Option[DataFrame] = None): String =
+    plan(QueryEngine.scorerInput(spark, idx.blocks, idx.termStats, queries, m,
+      SparkEntry.cfg, docs).getOrElse(fail(s"no query of $queries can match")))
+
+  /** A ranked result runs no per-qid window and no shuffle after scoring:
+    * the finish is the driver's merge of the tasks' top-k lists.
+    */
+  private def assertLocalFinish(df: DataFrame): Unit = {
+    val p = physical(df)
+    assert(p.find(_.isInstanceOf[WindowExec]).isEmpty, s"a Window finishes the top-k:\n$p")
+    assert(p.find(_.isInstanceOf[Exchange]).isEmpty, s"an Exchange follows the scorer:\n$p")
+  }
 
   test("P1: filter and column pruning reach the parquet scan") {
     val p = plan(graft.operators.Relational.queries("p1_select_prune")(spark, dir))
@@ -109,8 +135,7 @@ class PlanSpec extends AnyFunSuite {
     // them at the parquet scan, or enabling storePositions would tax every
     // query. The index at `dir` IS positional (SparkEntry.cfg).
     val idx = SparkEntry.index(spark, dir)
-    val p = plan(QueryEngine.wandTopK(spark, idx.blocks, idx.termStats,
-      idx.corpus, "data spark", 10, SparkEntry.cfg))
+    val p = scorerInput(idx, Seq("data spark"))
     // assert on the scan's column list (the ReadSchema string truncates)
     val scanCols = "FileScan parquet \\[[^\\]]*\\]".r.findAllIn(p).toSeq
     assert(scanCols.nonEmpty, p)
@@ -118,15 +143,16 @@ class PlanSpec extends AnyFunSuite {
       "WAND scan reads the positions column:\n" + p)
   }
 
-  test("conjunctive scan: term predicate pushed, positions column unread, TakeOrderedAndProject finish") {
+  test("conjunctive scan: term predicate pushed, positions column unread, local finish") {
     val idx = SparkEntry.index(spark, dir)
-    val p = plan(QueryEngine.conjunctiveTopK(spark, idx.blocks, idx.termStats,
-      idx.corpus, "data spark -join", 10, SparkEntry.cfg))
+    // "data spark -join" at m = 2 is conjunctiveTopK's query
+    val p = scorerInput(idx, Seq("data spark -join"), m = 2)
     assert(p.contains("PushedFilters: [In(term"), p)
     val scanCols = "FileScan parquet \\[[^\\]]*\\]".r.findAllIn(p).toSeq
     assert(scanCols.nonEmpty && !scanCols.exists(_.contains("positions#")),
       "conjunctive scan reads the positions column:\n" + p)
-    assert(p.contains("TakeOrderedAndProject"), p)
+    assertLocalFinish(QueryEngine.conjunctiveTopK(spark, idx.blocks, idx.termStats,
+      idx.corpus, "data spark -join", 10, SparkEntry.cfg))
   }
 
   test("lifecycle (deleted) docs view broadcasts the tiny tombstone relation") {
@@ -149,10 +175,11 @@ class PlanSpec extends AnyFunSuite {
   test("batch WAND scans the block table once for the whole query batch") {
     val idx = SparkEntry.index(spark, dir)
     val qs = Seq("b1" -> "data spark", "b2" -> "join stream", "b3" -> "window")
-    val p = plan(QueryEngine.wandTopKBatch(spark, idx.blocks, idx.termStats,
-      idx.corpus, qs, 10))
+    val p = scorerInput(idx, qs.map(_._2))
     val scans = "Scan parquet".r.findAllMatchIn(p).size
     assert(scans == 1, s"expected ONE shared block scan, got $scans:\n$p")
+    assertLocalFinish(QueryEngine.wandTopKBatch(spark, idx.blocks, idx.termStats,
+      idx.corpus, qs, 10))
   }
 
   test("searchBatch with minShouldMatch = 2 and exclusions scans the block table once") {
@@ -161,8 +188,7 @@ class PlanSpec extends AnyFunSuite {
     val idx = SparkEntry.index(spark, dir)
     val qs = Seq("m1" -> "data spark stream", "m2" -> "join window -data",
       "m3" -> "spark window stream -join")
-    val p = plan(QueryEngine.searchBatch(spark, idx.blocks, idx.termStats,
-      idx.corpus, qs, 10, 2, SparkEntry.cfg, idx.tombstoneSet))
+    val p = scorerInput(idx, qs.map(_._2), m = 2)
     val scans = "Scan parquet".r.findAllMatchIn(p).size
     assert(scans == 1, s"expected ONE shared block scan, got $scans:\n$p")
   }
@@ -219,12 +245,12 @@ class PlanSpec extends AnyFunSuite {
       "role predicate did not reach the docs parquet scan:\n" + allow)
     // the ranked plan is the term-only one: the allow-list was collected
     // into a DocIdSet, so no docs scan or join remains in it
-    val p = plan(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
-      "role:user data spark", 10, 1, SparkEntry.cfg, idx.tombstoneSet,
-      Some(idx.docs.toDF())))
+    val p = scorerInput(idx, Seq("role:user data spark"), docs = Some(idx.docs.toDF()))
     assert(p.contains("PushedFilters: [In(term"), p) // block scan stays term-pushed
     assert(scans(p).size == 1 && !p.contains("Join"), p)
-    assert(p.contains("TakeOrderedAndProject"), p)
+    assertLocalFinish(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
+      "role:user data spark", 10, 1, SparkEntry.cfg, idx.tombstoneSet,
+      Some(idx.docs.toDF())))
   }
 
   test("composed search keeps the term-pushed scan and the top-k finish") {
@@ -232,10 +258,10 @@ class PlanSpec extends AnyFunSuite {
     // BoolScorer job — the phrase is a per-document positional check, so
     // the scan reads positions and no survivor join is left
     val idx = SparkEntry.index(spark, dir)
-    val p = plan(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
-      "\"data stream\"~1 spark -join", 10, 1, SparkEntry.cfg, idx.tombstoneSet))
+    val p = scorerInput(idx, Seq("\"data stream\"~1 spark -join"))
     assert(p.contains("PushedFilters: [In(term"), p)
-    assert(p.contains("TakeOrderedAndProject"), p)
+    assertLocalFinish(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
+      "\"data stream\"~1 spark -join", 10, 1, SparkEntry.cfg, idx.tombstoneSet))
     assert(scans(p).size == 1, s"expected ONE block scan:\n$p")
     assert(!p.contains("Join"), s"a join is left in the phrase + term plan:\n$p")
     assert(scans(p).exists(_.contains("positions#")),
@@ -246,35 +272,29 @@ class PlanSpec extends AnyFunSuite {
     val idx = SparkEntry.index(spark, dir)
     val qs = Seq("p1" -> "\"data stream\" spark", "f1" -> "role:user spark join",
       "t1" -> "window join")
-    val p = plan(QueryEngine.searchBatch(spark, idx.blocks, idx.termStats,
-      idx.corpus, qs, 10, 1, SparkEntry.cfg, idx.tombstoneSet, Some(idx.docs.toDF())))
+    val p = scorerInput(idx, qs.map(_._2), docs = Some(idx.docs.toDF()))
     assert(scans(p).size == 1, s"expected ONE shared block scan, got ${scans(p).size}:\n$p")
     assert(!p.contains("Join"), p)
+    assertLocalFinish(QueryEngine.searchBatch(spark, idx.blocks, idx.termStats,
+      idx.corpus, qs, 10, 1, SparkEntry.cfg, idx.tombstoneSet, Some(idx.docs.toDF())))
   }
 
   test("a loaded index's term scorers read the block scan without an exchange") {
     // each shard dir of a loaded index holds one file, so the scorer groups
-    // shards straight off the scan; the single query's finish stays a
-    // TakeOrderedAndProject and only the batch's per-qid window exchanges
+    // shards straight off the scan, and a single query and a batch both
+    // finish on the driver: no window, no exchange anywhere
     val idx = SparkEntry.index(spark, dir)
-    def scorerInputs(df: DataFrame): Seq[SparkPlan] = {
-      val p = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.inputPlan
-        case other => other
-      }
-      p.collect { case m: MapPartitionsExec => m.child }
+    def assertExchangeFree(queries: Seq[String]): Unit = {
+      val input = physical(QueryEngine.scorerInput(spark, idx.blocks, idx.termStats, queries,
+        1, SparkEntry.cfg).getOrElse(fail(s"no query of $queries can match")))
+      assert(input.find(_.isInstanceOf[Exchange]).isEmpty,
+        "an exchange feeds the block scorer:\n" + input)
     }
-    def assertExchangeFree(df: DataFrame): Unit = {
-      val inputs = scorerInputs(df)
-      assert(inputs.nonEmpty, "no MapPartitions scorer in the plan:\n" + plan(df))
-      assert(inputs.forall(_.find(_.isInstanceOf[Exchange]).isEmpty),
-        "an exchange feeds the block scorer:\n" + plan(df))
-    }
-    val single = QueryEngine.wandTopK(spark, idx.blocks, idx.termStats,
-      idx.corpus, "data spark", 10, SparkEntry.cfg)
-    assertExchangeFree(single)
-    assert(plan(single).contains("TakeOrderedAndProject"), plan(single))
-    assertExchangeFree(QueryEngine.wandTopKBatch(spark, idx.blocks, idx.termStats,
+    assertExchangeFree(Seq("data spark"))
+    assertExchangeFree(Seq("data spark", "join stream"))
+    assertLocalFinish(QueryEngine.wandTopK(spark, idx.blocks, idx.termStats,
+      idx.corpus, "data spark", 10, SparkEntry.cfg))
+    assertLocalFinish(QueryEngine.wandTopKBatch(spark, idx.blocks, idx.termStats,
       idx.corpus, Seq("b1" -> "data spark", "b2" -> "join stream"), 10, SparkEntry.cfg))
   }
 
@@ -303,5 +323,27 @@ class PlanSpec extends AnyFunSuite {
     assert(prefix == 1, s"a prefix query ran $prefix jobs")
     assert(phrase == 1, s"a phrase + terms query ran $phrase jobs")
     assert(fielded <= 3, s"a field query ran $fielded jobs")
+  }
+
+  test("job counts: a searchBatch of term, m-of-n and exclusion queries is one job") {
+    // the per-task top-k lists merge on the driver: no second job for a
+    // per-qid finish
+    val idx = SparkEntry.index(spark, dir)
+    val sc = spark.sparkContext
+    val qs = Seq("t1" -> "data spark", "m1" -> "data spark stream window",
+      "x1" -> "join window stream -data")
+    def jobs(m: Int): Int = {
+      def run(): Unit = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
+        qs, 10, m, SparkEntry.cfg, idx.tombstoneSet).collect()
+      run() // warm: no first-touch job of a lazy relation is counted
+      val group = s"batch-jobs-$m"
+      sc.setJobGroup(group, group)
+      try run() finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    Seq(1, 2).foreach { m =>
+      val n = jobs(m)
+      assert(n == 1, s"a searchBatch at minShouldMatch $m ran $n jobs")
+    }
   }
 }

@@ -3,9 +3,10 @@ package graft.query
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{DataFrame, Encoders}
-import org.apache.spark.sql.execution.MapPartitionsExec
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 
 import graft.SparkEntry
@@ -32,20 +33,25 @@ class ServingPathSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[(Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
-  /** Whether an exchange feeds a block scorer (a MapPartitions) of `df`. */
-  private def exchangeFed(df: DataFrame): Boolean = {
-    val p = df.queryExecution.executedPlan match {
+  /** Whether an exchange is in `ds`'s plan: a block scorer's input
+    * ([[QueryEngine.scorerInput]]) or the phrase matches, whose only
+    * exchange is the one feeding the phrase scorer.
+    */
+  private def exchangeFed(ds: Dataset[_]): Boolean = {
+    val p = ds.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.inputPlan
       case other => other
     }
-    val inputs = p.collect { case m: MapPartitionsExec => m.child }
-    assert(inputs.nonEmpty, s"no block scorer in the plan:\n$p")
-    inputs.exists(_.find(_.isInstanceOf[Exchange]).isDefined)
+    assert(p.find(_.isInstanceOf[FileSourceScanExec]).nonEmpty ||
+      p.find(_.isInstanceOf[InMemoryTableScanExec]).nonEmpty, s"no block scan in the plan:\n$p")
+    p.find(_.isInstanceOf[Exchange]).isDefined
   }
 
-  private def wand(idx: IndexStore.Index, q: String): DataFrame =
-    QueryEngine.wandTopK(spark, idx.blocks, idx.termStats, idx.corpus, q, 10, cfg,
-      idx.tombstoneSet)
+  /** The block scan the term query `q` is scored from. */
+  private def input(idx: IndexStore.Index, q: String,
+      c: IndexBuilder.Config = cfg): Dataset[_] =
+    QueryEngine.scorerInput(spark, idx.blocks, idx.termStats, Seq(q), 1, c)
+      .getOrElse(fail(s"[$q] can match nothing"))
 
   private def jobs(run: => Unit): Int = {
     val sc = spark.sparkContext
@@ -166,8 +172,7 @@ class ServingPathSpec extends AnyFunSuite {
       "the lifecycle fixture is not multi-generation with deletes")
     assert(QueryEngine.wholeFileScan(idx.blocks))
     val c = SparkEntry.cfg.copy(storePositions = false)
-    assert(!exchangeFed(QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
-      "spark join data", 10, 1, c, idx.tombstoneSet)))
+    assert(!exchangeFed(input(idx, "spark join data", c)))
     val nonEmpty = assertServesExactly(idx, Seq(
       "spark join data" -> 1,
       "spark join data" -> 3,
@@ -199,11 +204,11 @@ class ServingPathSpec extends AnyFunSuite {
 
   test("fallback: files split by a small maxPartitionBytes keep the shard exchange") {
     val idx = IndexStore.load(spark, singleGenDir)
-    assert(QueryEngine.wholeFileScan(idx.blocks) && !exchangeFed(wand(idx, "term0000")))
+    assert(QueryEngine.wholeFileScan(idx.blocks) && !exchangeFed(input(idx, "term0000")))
     withConf("spark.sql.files.maxPartitionBytes" -> "1024",
         "spark.sql.files.openCostInBytes" -> "1") {
       assert(!QueryEngine.wholeFileScan(idx.blocks))
-      assert(exchangeFed(wand(idx, "term0000")))
+      assert(exchangeFed(input(idx, "term0000")))
       assert(exchangeFed(QueryEngine.phraseMatches(spark, idx.blocks, "term0000 term0001",
         cfg).get))
       assert(assertServesExactly(idx, genQueries) >= 7)
@@ -215,7 +220,7 @@ class ServingPathSpec extends AnyFunSuite {
     idx.blocks.persist()
     try {
       assert(!QueryEngine.wholeFileScan(idx.blocks))
-      assert(exchangeFed(wand(idx, "term0000")))
+      assert(exchangeFed(input(idx, "term0000")))
       assert(assertServesExactly(idx, genQueries) >= 7)
     } finally idx.blocks.unpersist()
   }

@@ -2,7 +2,9 @@ package graft.query
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{Codec, DocIdSet}
+import graft.TestKit.OracleBM25
+import graft.functions.Analyzer
+import graft.index.{Codec, DocIdSet, IndexBuilder}
 import graft.index.Codec.P
 import graft.model.PostingBlock
 import graft.query.QueryEngine.{BoolQuery, BoolScorer, QTerm}
@@ -70,19 +72,20 @@ class WandUnitSpec extends AnyFunSuite {
       .sortBy { case (d, s) => (-s, d) }.take(k)
   }
 
-  /** Every query of `queries` in ONE scorePartitionBatch call, finished
-    * per qid like the Spark paths (global order over the shards' top-k).
+  /** The top k of one task's (score desc, docId asc) list. */
+  private def pairs(r: QueryEngine.Ranked): Seq[(Long, Double)] = r.docIds.toSeq.zip(r.scores)
+
+  /** Every query of `queries` in ONE scoreTask call over the shard groups
+    * in ascending shard order (one scan task), per qid in rank order.
     */
   private def scored(blocks: Seq[PostingBlock], queries: Seq[BoolQuery], k: Int,
       avgdl: Double, tombstones: DocIdSet = DocIdSet.empty)
       : Map[String, Seq[(Long, Double)]] = {
     val sorted = blocks.sortBy(b => (b.shardId, b.term, b.minDocId))
-    val rows = BoolScorer.scorePartitionBatch(sorted.iterator.buffered, queries, k,
-      k1, b, avgdl, tombstones).toSeq
-    queries.map { q =>
-      q.qid -> rows.filter(_._1 == q.qid).map(r => (r._2, r._3))
-        .sortBy { case (d, s) => (-s, d) }.take(k)
-    }.toMap
+    val byQuery = BoolScorer.scoreTask(sorted.iterator.buffered, queries, k,
+      k1, b, avgdl, tombstones).toMap
+    queries.indices.map(i => queries(i).qid -> byQuery.get(i).fold(Seq.empty[(Long, Double)])(pairs))
+      .toMap
   }
 
   private def wand(qts: Seq[QTerm], m: Int = 1): BoolQuery =
@@ -222,5 +225,93 @@ class WandUnitSpec extends AnyFunSuite {
     }
     assert(msmExcl > 300, s"m > 1 + exclusion cases mostly empty ($msmExcl) — vacuous")
     assert(phrased > 300, s"phrase cases mostly empty ($phrased) — vacuous")
+  }
+
+  test("θ is a (score, docId) pair: shard groups in any order, ties decided by docId") {
+    // A task reads its shard files in whatever order Spark packs them, so
+    // its one heap per query meets docIds out of order. Tie-heavy corpora
+    // (every doc the same length, tf 0-2 per word) make many docs score
+    // exactly alike, so whether a doc enters is decided by the docId half
+    // of θ. Every query goes through the scorer over the shard groups in
+    // several shuffled orders, as one task and split over two tasks merged
+    // on the driver, and must equal the brute-force search-box oracle rank
+    // for rank: m = 1, m-of-n and AND, with and without an exclusion,
+    // tombstones and an allow-list.
+    val cfg = IndexBuilder.Config()
+    val rnd = new scala.util.Random(20261020L)
+    val words = Seq("w0", "w1", "w2", "w3")
+    val dlen = 10
+    var tieDecided = 0
+    var checked = 0
+    (1 to 120).foreach { iter =>
+      val nDocs = 8 + rnd.nextInt(40)
+      val docs = (0 until nDocs).map { d =>
+        val toks = words.flatMap(w => Seq.fill(rnd.nextInt(3))(w)) ++
+          (if (rnd.nextDouble() < 0.2) Seq("x0") else Nil)
+        d.toLong -> rnd.shuffle(toks ++ Seq.fill(dlen - toks.size)("f0")).mkString(" ")
+      }.toVector
+      val c = OracleBM25.corpusFromDocs(docs, cfg.analyzer)
+      assert(c.dl.values.forall(_ == dlen))
+      // 2-5 docId-range shards of 1-3 postings a block
+      val nShards = 2 + rnd.nextInt(4)
+      val blockSize = 1 + rnd.nextInt(3)
+      val shardOf: Long => Int = d => (d * nShards / nDocs).toInt
+      val groups: Seq[Seq[PostingBlock]] = (0 until nShards).map { shard =>
+        c.postings.toSeq.sortBy(_._1).flatMap { case (t, ps) =>
+          ps.toSeq.filter(p => shardOf(p._1) == shard).sortBy(_._1)
+            .map { case (d, tf) => P(d, tf, c.dl(d)) }
+            .grouped(blockSize).zipWithIndex.map { case (bps, bi) => blk(shard, t, bi, bps) }
+        }
+      }.filter(_.nonEmpty)
+      val dead = (0 until nDocs).filter(_ => rnd.nextDouble() < 0.1).map(_.toLong).toSet
+      val allow =
+        if (rnd.nextBoolean()) None
+        else Some((0 until nDocs).filter(_ => rnd.nextDouble() < 0.8).map(_.toLong).toSet)
+      val tombstones = DocIdSet.fromIds(dead.toArray)
+      val allowSet = allow.map(a => DocIdSet.fromIds(a.toArray))
+      val keep: Long => Boolean = id => !dead(id) && allow.forall(_(id))
+      // search-box texts over 2-4 distinct words, some typed twice (qtf 2)
+      val texts = (1 to 3).map { _ =>
+        val ws = rnd.shuffle(words).take(2 + rnd.nextInt(3))
+        (ws ++ ws.filter(_ => rnd.nextDouble() < 0.2)).mkString(" ")
+      }
+      for (text <- texts; excl <- Seq("", " -x0")) {
+        val n = Analyzer.analyzeQuery(text, cfg.analyzer).size
+        Seq(1, 2, n).distinct.foreach { m =>
+          val q = text + excl
+          val positive = Analyzer.analyzeQuery(text, cfg.analyzer)
+            .filter { case (t, _) => c.postings.contains(t) }
+          if (positive.size >= m) {
+            val bq = BoolQuery(q, positive.map { case (t, qtf) =>
+              QTerm(t, qtf * Bm25.idf(c.n, c.postings(t).size.toLong))
+            }, if (excl.nonEmpty && c.postings.contains("x0")) Seq("x0") else Nil, m, Nil, allowSet)
+            val full = OracleBM25.search(c, q, m, nDocs, cfg, keep)
+            Seq(1, 2, 3, 5).foreach { k =>
+              val want = full.take(k)
+              if (full.size > k && full(k - 1)._2 == full(k)._2) tieDecided += 1
+              (1 to 3).foreach { _ =>
+                val order = rnd.shuffle(groups)
+                val one = BoolScorer.scoreTask(order.flatten.iterator.buffered, Seq(bq), k,
+                  k1, b, c.avgdl, tombstones).toSeq
+                val got = one.headOption.fold(Seq.empty[(Long, Double)])(r => pairs(r._2))
+                assert(got == want,
+                  s"iter=$iter [$q] m=$m k=$k order=${order.map(_.head.shardId)}: got $got want $want")
+                val cut = rnd.nextInt(order.size + 1)
+                val lists = Seq(order.take(cut), order.drop(cut)).flatMap { part =>
+                  BoolScorer.scoreTask(part.flatten.iterator.buffered, Seq(bq), k,
+                    k1, b, c.avgdl, tombstones).map(_._2)
+                }
+                val merged = pairs(QueryEngine.mergeTopK(lists, k))
+                assert(merged == want, s"iter=$iter [$q] m=$m k=$k split at $cut: " +
+                  s"merged $merged want $want")
+                checked += 1
+              }
+            }
+          }
+        }
+      }
+    }
+    info(s"$checked checks, $tieDecided with the k-th score tied past the cut")
+    assert(tieDecided > 500, s"only $tieDecided cases where the docId tie-break decides")
   }
 }
