@@ -208,9 +208,10 @@ object SparkEntry {
   private[graft] val prefixQuery: String = "dat* join"
 
   /** Unified search-box fixtures (query text, minShouldMatch) — each mixes
-    * several features so they exercise [[QueryEngine.composedTopK]], the
-    * path no dedicated API covers: slop phrase + exclusion + free terms;
-    * wildcard + phrase + free term; phrase + minimum-should-match.
+    * several features in one query that no dedicated API covers, scored by
+    * [[QueryEngine.search]]'s one block-max scorer job: slop phrase +
+    * exclusion + free terms; wildcard + phrase + free term; phrase +
+    * minimum-should-match.
     */
   private[graft] val mixedSet: Seq[(String, (String, Int))] = Seq(
     "q1" -> (("query \"data stream\"~2 -batch join", 1)),
@@ -332,7 +333,8 @@ object SparkEntry {
   }
 
   /** The unified search box ([[QueryEngine.search]]): full grammar in one
-    * string, routed onto the dedicated scorers or the composed plan.
+    * string; a filter-only query is a match-all under its filter, every
+    * other query one block-max scorer job.
     */
   private[graft] def bm25Search(s: SparkSession, dir: String, q: String,
       m: Int = 1, k: Int = 10): DataFrame = {
@@ -351,9 +353,11 @@ object SparkEntry {
     finish(top, idx.docs, k)
   }
 
-  /** Batched unified-grammar fixture: plain + wildcard queries share one
-    * WAND job; the composed and fielded ones union in — the serving shape
-    * for a request batch over the single search box.
+  /** Batched unified-grammar fixture: every query that is not
+    * filter-only — plain, wildcard, composed and fielded alike — shares one
+    * block-max scorer job (a fielded one adds its allow-list's jobs), and a
+    * filter-only one would union in — the serving shape for a request batch
+    * over the single search box.
     */
   private[graft] val batchSearchSet: Seq[(String, String)] = Seq(
     "s1" -> "spark join data",
@@ -720,8 +724,8 @@ object SparkEntry {
   }
 
   /** Unified search-box oracle — the composition of the per-feature oracle
-    * pieces, mirroring [[QueryEngine.search]]'s general path
-    * ([[QueryEngine.composedTopK]]): every quoted phrase filters (its
+    * pieces, mirroring [[QueryEngine.search]]'s general path (its one
+    * block-max scorer job): every quoted phrase filters (its
     * adjacency/slop CTEs under a per-phrase suffix), exclusions drop
     * candidate docs, minimum-should-match gates on the per-doc
     * distinct-matched-term count, and ranking is the standard BM25 fold
@@ -878,7 +882,7 @@ object SparkEntry {
     */
   private def phraseOracleSql(phrase: String): String = {
     val terms = Analyzer.tokenize(phrase, cfg.analyzer)
-    // mirror the engine (phraseMatches returns None): an all-stopword
+    // mirror the engine (phraseTopK returns no rows): an all-stopword
     // phrase is an empty result, not a crash while building the oracle map
     if (terms.isEmpty)
       return s"""WITH $cteTranscripts,
@@ -911,8 +915,8 @@ object SparkEntry {
   private def phraseFilterRankOracleSql(freeTerms: String, phrase: String): String = {
     val pTerms = Analyzer.tokenize(phrase, cfg.analyzer)
     // same guard as phraseOracleSql: an all-stopword phrase is an empty
-    // result (engine: phraseMatches = None), never a crash while the whole
-    // oracle map is being built
+    // result (engine: phraseFilterRank returns no rows), never a crash
+    // while the whole oracle map is being built
     if (pTerms.isEmpty)
       return s"""WITH $cteTranscripts,
                 |$cteDocs

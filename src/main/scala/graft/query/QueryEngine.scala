@@ -21,25 +21,30 @@ import graft.model._
   *     fold), fully inside whole-stage codegen. This is the semantic
   *     baseline every optimized path must match (SURVEY.md §7.3 step 3).
   *
-  *   - `wandTopK` (and every other ranked query: AND, m-of-n,
-  *     exclusions, wildcards, phrase filters, `field:value` filters,
-  *     batches): block-max WAND over the encoded posting blocks, one
-  *     document-at-a-time scorer ([[QueryEngine.BoolScorer]]) per
-  *     docId-range shard whose pivot doc passes per-document checks
-  *     (tombstones, field allow-list, exclusions, then phrase positions —
-  *     Lucene's two-phase iteration). A scan task keeps ONE top-k heap per
-  *     query for all of its shard groups ([[TopKHeap]]), and its θ is the
-  *     pair (score, docId) of the heap's worst entry, so a shard group read
-  *     late prunes against the task's best so far in whatever order the
-  *     groups arrive (REPOSE's partition-level threshold sharing). Each
-  *     task returns its top k per query as primitive arrays; the driver
-  *     k-way merges them under (score desc, docId asc) — the reference's
-  *     final orderBy/limit (bm25_searcher.py:111) — and the result is a
-  *     local relation of those rows. Block-max metadata is an upper bound
-  *     used only to SKIP work, never to approximate — exactness is
-  *     property-tested against the exhaustive path.
+  *   - every ranked query (`wandTopK`, AND, m-of-n, exclusions,
+  *     wildcards, phrases, `field:value` filters, batches): block-max WAND
+  *     over the encoded posting blocks, one document-at-a-time scorer
+  *     ([[QueryEngine.BoolScorer]]) per docId-range shard whose pivot doc
+  *     passes per-document checks (tombstones, field allow-list,
+  *     exclusions, then phrase positions — Lucene's two-phase iteration).
+  *     A scan task keeps ONE top-k heap per query for all of its shard
+  *     groups ([[TopKHeap]]), and its θ is the pair (score, docId) of the
+  *     heap's worst entry, so a shard group read late prunes against the
+  *     task's best so far in whatever order the groups arrive (REPOSE's
+  *     partition-level threshold sharing). Each task returns its top k per
+  *     query as primitive arrays; the driver k-way merges them under
+  *     (score desc, docId asc) — the reference's final orderBy/limit
+  *     (bm25_searcher.py:111) — and the result is a local relation of
+  *     those rows. Block-max metadata is an upper bound used only to SKIP
+  *     work, never to approximate — exactness is property-tested against
+  *     the exhaustive path. A lone quoted phrase scores as one term
+  *     (Lucene's PhraseQuery) whose idf needs its df, known only once
+  *     every task has counted its matches: the same scan walks the
+  *     phrase, each task returns its match count and the candidates that
+  *     any idf can rank into the top k ([[PhraseMatches]]), and the driver
+  *     sums the df and finishes ([[mergePhrase]]).
   *
-  * Serving a term query, or a whole batch of them, on a loaded index is
+  * Serving a ranked query, or a whole batch of them, on a loaded index is
   * ONE Spark job: the query terms' idfs and every wildcard expansion come
   * from a driver-side term dictionary ([[TermDictionary]], loaded once per
   * `termStats` relation), the scorer reads the term-pushed block scan as
@@ -144,23 +149,26 @@ object QueryEngine {
     * terms that have postings, `m` how many of `terms` a document must
     * contain, `phrases` the phrases it must hold (every phrase word is one
     * of `terms`), `allow` the docIds its `field:value` filters keep (None:
-    * no filter).
+    * no filter). `phraseAsTerm`: a lone quoted phrase, scored as one term
+    * (tf = its occurrences, idf over its df) — its `terms` are the
+    * distinct phrase words, walked but never weighted.
     */
   private[query] final case class BoolQuery(qid: String, terms: Seq[QTerm],
       excluded: Seq[String], m: Int, phrases: Seq[Phrase] = Nil,
-      allow: Option[DocIdSet] = None)
+      allow: Option[DocIdSet] = None, phraseAsTerm: Boolean = false)
 
   /** A ranked query before the idf lookup: positive (term, qtf) pairs,
     * the rest as in [[BoolQuery]].
     */
   private final case class TermQuery(qid: String, terms: Seq[(String, Int)],
       excluded: Seq[String], m: Int, phrases: Seq[Phrase] = Nil,
-      allow: Option[DocIdSet] = None)
+      allow: Option[DocIdSet] = None, phraseAsTerm: Boolean = false)
 
-  /** The PostingBlock encoder, derived once (`spark.implicits._` derives
-    * it by Scala reflection at every use).
+  /** The PostingBlock and TermStat encoders, derived once
+    * (`spark.implicits._` derives them by Scala reflection at every use).
     */
   private val PostingBlockEnc: Encoder[PostingBlock] = Encoders.product[PostingBlock]
+  private val TermStatEnc: Encoder[TermStat] = Encoders.product[TermStat]
 
   /** Blocks with the positions column blanked on every row but
     * `phraseWords`': the typed Dataset[PostingBlock] deserializer would
@@ -189,7 +197,9 @@ object QueryEngine {
     * left with fewer than m terms matches nothing (so one absent required
     * term empties an AND); an excluded term without postings excludes
     * nothing. A phrase word without postings, an all-stopword phrase or
-    * an empty allow-list empties its query.
+    * an empty allow-list empties its query. A lone phrase reads no term
+    * stats: its words are walked unweighted, and a word without postings
+    * is in no shard, so nothing matches.
     */
   private def scorerPlan(
       spark: SparkSession,
@@ -202,15 +212,18 @@ object QueryEngine {
     // fewer distinct terms than m can never match: no idf collect for them
     val satisfiable = queries.filter(q => q.terms.nonEmpty && q.terms.size >= q.m &&
       q.phrases.forall(_._1.nonEmpty) && q.allow.forall(_.nonEmpty))
-    val names = satisfiable.flatMap(q => q.terms.map(_._1) ++ q.excluded).distinct
-    if (names.isEmpty) return None
-    val idfs: Map[String, Double] = termDictionary(termStats) match {
-      case Some(dict) => names.flatMap(t => dict.idf(t).map(t -> _)).toMap
-      case None => termStats.filter($"term".isin(names: _*))
-        .collect().map(t => t.term -> t.idf).toMap
-    }
+    val names = satisfiable.filterNot(_.phraseAsTerm)
+      .flatMap(q => q.terms.map(_._1) ++ q.excluded).distinct
+    val idfs: Map[String, Double] =
+      if (names.isEmpty) Map.empty
+      else termDictionary(termStats) match {
+        case Some(dict) => names.flatMap(t => dict.idf(t).map(t -> _)).toMap
+        case None => termStats.filter($"term".isin(names: _*))
+          .collect().map(t => t.term -> t.idf).toMap
+      }
     val live = satisfiable.flatMap { q =>
       val qts = q.terms.collect {
+        case (t, _) if q.phraseAsTerm => QTerm(t, 0.0)
         case (t, qtf) if idfs.contains(t) => QTerm(t, qtf * idfs(t))
       }.sortBy(_.term)
       // a phrase match holds every distinct phrase word, each a positive
@@ -218,7 +231,7 @@ object QueryEngine {
       val words = q.phrases.flatMap(_._1).distinct
       if (qts.size < q.m || !words.forall(w => qts.exists(_.term == w))) None
       else Some(BoolQuery(q.qid, qts, q.excluded.filter(idfs.contains),
-        math.max(q.m, words.size), q.phrases, q.allow))
+        math.max(q.m, words.size), q.phrases, q.allow, q.phraseAsTerm))
     }
     if (live.isEmpty) return None
     val scanNames = live.flatMap(q => q.terms.map(_.term) ++ q.excluded).distinct
@@ -231,7 +244,8 @@ object QueryEngine {
     * ONE Spark job over [[scorerPlan]]'s scan, in which each task scores
     * its shard groups into one heap per query and returns that query's top
     * k ([[BoolScorer.scoreTask]]), then a k-way merge of the tasks' lists
-    * on the driver ([[mergeTopK]]). The job runs now, inside the call.
+    * on the driver ([[mergeTopK]]; a lone phrase's through [[mergePhrase]]).
+    * The job runs now, inside the call.
     */
   private def rankedTopK(
       spark: SparkSession,
@@ -255,27 +269,32 @@ object QueryEngine {
         BoolScorer.scoreTask(it.buffered, qB.value, kk, p.k1, p.b, avgdl, tsB.value)
       }.collect()
     } finally qB.destroy()
-    perTask.groupBy(_._1).toSeq.sortBy(_._1).map { case (i, lists) =>
-      live(i).qid -> mergeTopK(lists.map(_._2).toSeq, k)
+    perTask.groupBy(_._1).toSeq.sortBy(_._1).map { case (i, parts) =>
+      val lists = parts.map(_._2).toSeq
+      live(i).qid ->
+        (if (live(i).phraseAsTerm) mergePhrase(lists, corpus.docCount, k) else mergeTopK(lists, k))
     }
   }
 
-  /** The best `k` of several rank-ordered lists (one per scan task), in
-    * rank order (score desc, docId asc), under the heap's one comparison:
-    * each list is read until its next entry cannot enter. A docId is in
-    * at most one list: a doc's postings all sit in one file, which one
-    * task reads whole (or in one exchanged shard).
+  /** The best `k` of several lists (one per scan task, each in any
+    * order), in rank order (score desc, docId asc), under the heap's one
+    * comparison. A docId is in at most one list: a doc's postings all sit
+    * in one file, which one task reads whole (or in one exchanged shard).
     */
   private[query] def mergeTopK(lists: Seq[Ranked], k: Int): Ranked = {
     val heap = new TopKHeap(k)
-    lists.foreach { r =>
-      var i = 0
-      while (i < r.size && heap.admits(r.scores(i), r.docIds(i))) {
-        heap.offer(r.docIds(i), r.scores(i))
-        i += 1
-      }
-    }
+    lists.foreach(r => r.docIds.indices.foreach(i => heap.offer(r.docIds(i), r.scores(i))))
     heap.drain()
+  }
+
+  /** A lone phrase's exact top k from its tasks' candidates
+    * ([[PhraseMatches.candidates]]): idf over the live matches the tasks
+    * counted, among `docCount` docs, and each candidate's score idf · f —
+    * `Bm25.contribution(1, idf, tf, dl, …)` bit for bit.
+    */
+  private[query] def mergePhrase(lists: Seq[Ranked], docCount: Long, k: Int): Ranked = {
+    val idf = Bm25.idf(docCount, lists.map(_.matches).sum)
+    mergeTopK(lists.map(r => new Ranked(r.docIds, r.scores.map(idf * _))), k)
   }
 
   /** The scan [[searchBatch]] scores `queries`' ranked ones from — the
@@ -467,9 +486,8 @@ object QueryEngine {
     * the next shard change, keyed by term and docId-sorted, with per-group
     * decode memos — a block read by several queries, or by a query's terms
     * and its phrases, decodes once, and a block's positions decode only
-    * when a positional check asks. The
-    * single definition behind both block scorers ([[BoolScorer]] and
-    * [[PhraseScorer]]) — a shard-grouping fix lands everywhere at once.
+    * when a positional check asks. Read only by the one block scorer
+    * ([[BoolScorer]]).
     */
   private[query] final class Shard(it: BufferedIterator[PostingBlock]) {
     private val byTerm: Map[String, Array[PostingBlock]] = {
@@ -572,12 +590,57 @@ object QueryEngine {
 
   /** One query's top k in rank order (score desc, docId asc), as
     * primitive arrays — what a scan task returns per query and what the
-    * driver merge ([[mergeTopK]]) reads and writes.
+    * driver merge ([[mergeTopK]]) reads and writes. A task's list for a
+    * lone phrase is its candidates instead, in no order, `scores` holding
+    * their idf-free parts f and `matches` the task's live match count
+    * ([[PhraseMatches]]).
     */
-  private[query] final class Ranked(val docIds: Array[Long], val scores: Array[Double])
-      extends Serializable {
-    def size: Int = docIds.length
+  private[query] final class Ranked(val docIds: Array[Long], val scores: Array[Double],
+      val matches: Long = 0L) extends Serializable
+
+  /** A lone phrase's live matches in one scan task, each keyed on the
+    * idf-free part of its score, f = `Bm25.partial(tf, dl, …)`: the phrase
+    * scores as one term, and its idf waits on the df the driver sums.
+    */
+  private[query] final class PhraseMatches {
+    private val docIds = new scala.collection.mutable.ArrayBuilder.ofLong
+    private val fs = new scala.collection.mutable.ArrayBuilder.ofDouble
+
+    def isEmpty: Boolean = docIds.length == 0
+
+    def add(docId: Long, f: Double): Unit = { docIds += docId; fs += f }
+
+    /** Every match that an idf ≥ 0 can rank into the phrase's top k, and
+      * the match count. Multiplying by idf > 0 keeps the order of the f's
+      * but can round two of them into one score, and the docId tie-break
+      * then decides; idf = 0 (the phrase is in every live doc) scores every
+      * match 0. So the candidates are the top k by (f desc, docId asc),
+      * every match with f ≥ f_k·(1 − 4ε), f_k the k-th f (a doc whose
+      * score ties the k-th's has an f ≥ f_k·(1 − ε)), and the k smallest
+      * docIds.
+      */
+    def candidates(k: Int): Ranked = {
+      val ids = docIds.result()
+      val f = fs.result()
+      val n = ids.length
+      val keep: Int => Boolean =
+        if (n <= k) _ => true
+        else {
+          val byF = f.clone()
+          java.util.Arrays.sort(byF)
+          val byId = ids.clone()
+          java.util.Arrays.sort(byId)
+          val minF = byF(n - k) * (1.0 - 4 * Eps)
+          val maxId = byId(k - 1)
+          i => f(i) >= minF || ids(i) <= maxId
+        }
+      val kept = (0 until n).filter(keep)
+      new Ranked(kept.map(ids).toArray, kept.map(f).toArray, n)
+    }
   }
+
+  /** ε = 2^-52, the gap between 1.0 and the next double. */
+  private val Eps = java.lang.Math.ulp(1.0)
 
   /** Bounded top-k accumulator under the global tie-break (score desc,
     * docId asc), one per (scan task, query), shared by every shard group
@@ -991,7 +1054,6 @@ object QueryEngine {
     *
     * Routing (each single-feature query is property-tested identical to
     * its dedicated API in SearchSpec):
-    *   - lone `"phrase"~s`           → [[phraseTopK]]
     *   - `field:value` + `-term`s    → match-all under the filter: constant
     *     only (no positive intent)     score 0, docId order, the excluded
     *                                   terms' docs anti-joined
@@ -1004,11 +1066,13 @@ object QueryEngine {
     *                                   a quoted phrase (any slop) is a
     *                                   per-document positional check at the
     *                                   pivot ([[phraseFilterRank]] for one
-    *                                   phrase + free terms); `field:value`
-    *                                   filters the live docs view
-    *                                   (`docs`, REQUIRED then; predicate
-    *                                   pushed to its parquet) into a
-    *                                   [[DocIdSet]] allow-list the pivot
+    *                                   phrase + free terms), and a lone one
+    *                                   is counted and scored as one term in
+    *                                   the same job ([[phraseTopK]]);
+    *                                   `field:value` filters the live docs
+    *                                   view (`docs`, REQUIRED then;
+    *                                   predicate pushed to its parquet) into
+    *                                   a [[DocIdSet]] allow-list the pivot
     *                                   doc must be in. Stats stay
     *                                   corpus-wide (Lucene filter
     *                                   semantics, not a sub-corpus rebuild).
@@ -1034,9 +1098,10 @@ object QueryEngine {
       docs: Option[DataFrame] = None
   ): DataFrame = {
     require(minShouldMatch >= 1, s"minShouldMatch must be >= 1, got $minShouldMatch")
+    if (k < 1) return emptyScores(spark)
     val pq = resolveFields(query, docs)
-    val excl = exclusionTerms(pq.excluded, cfg)
     if (filterOnly(pq, cfg)) {
+      val excl = exclusionTerms(pq.excluded, cfg)
       import spark.implicits._
       val base = fieldFilter(pq.fields, docs.get)
       val filtered =
@@ -1046,28 +1111,21 @@ object QueryEngine {
         .orderBy($"docId".asc).limit(k)
     }
     val byStem = expandStems(spark, termStats, prefixStems(pq).map(_._1))
-    val q = termQuery("", pq, byStem, minShouldMatch, cfg, docs)
-    // more required matches than distinct positive terms is unsatisfiable
-    if (q.terms.isEmpty || minShouldMatch > q.terms.size) emptyScores(spark)
-    else if (lonePhrase(pq, excl)) {
-      // a phrase match contains every phrase word, so any satisfiable m is
-      // already met — scoring is the phrase-as-one-term PhraseQuery shape
-      phraseTopK(spark, blocks, corpus, pq.phrases.head._1, k, cfg,
-        pq.phrases.head._2, tombstones)
-    } else termTopK(spark, blocks, termStats, corpus, q, k, cfg, tombstones)
+    termTopK(spark, blocks, termStats, corpus,
+      termQuery("", pq, byStem, minShouldMatch, cfg, docs), k, cfg, tombstones)
   }
 
   /** Batched unified search — a whole request batch through the one
-    * search-box grammar in as few jobs as possible: every query but a lone
-    * phrase and a filter-only query — any `minShouldMatch`, exclusions,
-    * wildcards (every query's stems expand in ONE dictionary scan),
-    * phrases and field filters included — scores in a single shared
-    * [[BoolScorer]] job (shared block scan + per-shard decode memo, the
-    * measured ~3× amortization of the per-job scheduler floor) finished by
-    * the driver merge; a field query adds its allow-list job, and the two
-    * excepted kinds run their [[search]] plans and union in. Returns (qid,
-    * docId, score), per-qid top-k, each qid identical to a [[search]] call
-    * with the same text (property-tested).
+    * search-box grammar in as few jobs as possible: every query but a
+    * filter-only one — any `minShouldMatch`, exclusions, wildcards (every
+    * query's stems expand in ONE dictionary scan), phrases, lone phrases
+    * and field filters included — scores in a single shared [[BoolScorer]]
+    * job (shared block scan + per-shard decode memo, the measured ~3×
+    * amortization of the per-job scheduler floor) finished by the driver
+    * merge; a field query adds its allow-list job, and a filter-only query
+    * runs its [[search]] plan and unions in. Returns (qid, docId, score),
+    * per-qid top-k, each qid identical to a [[search]] call with the same
+    * text (property-tested).
     *
     * `minShouldMatch` applies to every query in the batch (callers with
     * per-query msm issue those queries separately).
@@ -1090,10 +1148,9 @@ object QueryEngine {
     // result, or under one qid literal of the union
     require(queries.map(_._1).distinct.size == queries.size,
       s"duplicate qids in batch: ${queries.map(_._1)}")
+    if (k < 1) return LocalRows.frame(spark, QidScoreSchema, Nil)
     val parsed = queries.map { case (qid, q) => (qid, q, resolveFields(q, docs)) }
-    val (other, ranked) = parsed.partition { case (_, _, pq) =>
-      filterOnly(pq, cfg) || lonePhrase(pq, exclusionTerms(pq.excluded, cfg))
-    }
+    val (other, ranked) = parsed.partition { case (_, _, pq) => filterOnly(pq, cfg) }
     val batched = termTopKBatch(spark, blocks, termStats, corpus,
       termQueries(spark, termStats, ranked.map { case (qid, _, pq) => qid -> pq },
         minShouldMatch, cfg, docs),
@@ -1141,7 +1198,8 @@ object QueryEngine {
       Analyzer.analyzeQuery(pq.free.mkString(" "), cfg.analyzer).isEmpty
 
   /** A lone quoted phrase (nothing else in the box) keeps PhraseQuery
-    * scoring ([[phraseTopK]]).
+    * scoring ([[phraseTopK]]). A phrase match holds every phrase word, so
+    * any satisfiable m is already met.
     */
   private def lonePhrase(pq: ParsedQuery, excl: Seq[String]): Boolean =
     pq.phrases.size == 1 && pq.free.isEmpty && pq.prefixes.isEmpty &&
@@ -1170,7 +1228,8 @@ object QueryEngine {
       else if (positive.isEmpty || positive.size < m || phrases.exists(_._1.isEmpty))
         Some(DocIdSet.empty)
       else Some(DocIdSet.fromDF(fieldFilter(pq.fields, docs.get)))
-    TermQuery(qid, positive, exclusionTerms(pq.excluded, cfg), m, phrases, allow)
+    val excl = exclusionTerms(pq.excluded, cfg)
+    TermQuery(qid, positive, excl, m, phrases, allow, lonePhrase(pq, excl))
   }
 
   /** Parsed ranked queries as the scorer takes them, every query's
@@ -1213,15 +1272,13 @@ object QueryEngine {
     * positions with at least one such chain (the minimal completion is
     * greedy, so existence is exact). slop = 0 degenerates to adjacency.
     *
-    * Plan: term-pushed block scan (positions column read — BM25 paths
-    * read it for phrase words only), shard-grouped without an exchange on
-    * a loaded index → per-shard document-at-a-time positional
-    * intersect in mapPartitions (docId-sharding co-locates all of a doc's
-    * postings, so no cross-shard coordination; candidates are bounded by
-    * the rarest term's postings — never a token-level explode/shuffle) →
-    * persisted match relation → global df → score + TakeOrderedAndProject,
-    * collected as InternalRows into the local relation every ranked path
-    * ends in: the match relation is unpersisted before this returns.
+    * Plan: ONE [[BoolScorer]] job over the term-pushed block scan
+    * (positions read for the phrase words), shard-grouped without an
+    * exchange on a loaded index. Each task walks the phrase's words with
+    * the scorer's leapfrog, counts its live matches and returns the
+    * candidates any idf can rank into the top k ([[PhraseMatches]]); the
+    * driver sums the counts into the df and finishes ([[mergePhrase]]).
+    * Reads no term stats; the job runs inside the call.
     */
   def phraseTopK(
       spark: SparkSession,
@@ -1233,31 +1290,10 @@ object QueryEngine {
       slop: Int = 0,
       tombstones: DocIdSet = DocIdSet.empty
   ): DataFrame = {
-    import spark.implicits._
-    val lazyMatches = phraseMatches(spark, blocks, phrase, cfg, slop, tombstones)
-      .getOrElse(return emptyScores(spark))
-    // two consumers (df count + scoring): persisted, and unpersisted once
-    // the top k are on the driver — a cache entry left behind per distinct
-    // phrase would grow the session's CacheManager, which every later
-    // query's cache substitution walks.
-    // NOTE (optimization round): folding the count into the scoring plan
-    // via a broadcast scalar aggregate was tried and MEASURED SLOWER
-    // (+0.09 s/query at sf0.1 — the BroadcastExchange job outweighs a
-    // count() on the cached matches), so the explicit count stays.
-    val matches = lazyMatches.persist()
-    try {
-      val dfp = matches.count()
-      if (dfp == 0) return emptyScores(spark)
-      val p = cfg.params
-      // same association as the term scorer (contributionCol), qtf = 1
-      val idf = Bm25.idf(corpus.docCount, dfp)
-      val top = matches
-        .select($"docId",
-          contributionCol(lit(1), lit(idf), $"tfp", $"dl", corpus.avgdl, p).as("score"))
-        .orderBy($"score".desc, $"docId".asc)
-        .limit(k)
-      scoreRows(spark, LocalRows.collect(top).toSeq)
-    } finally matches.unpersist()
+    val words = Analyzer.tokenize(phrase, cfg.analyzer) // order + duplicates matter
+    termTopK(spark, blocks, spark.emptyDataset(TermStatEnc), corpus,
+      TermQuery("", words.distinct.map(_ -> 1), Nil, 1, Seq((words, slop)),
+        phraseAsTerm = true), k, cfg, tombstones)
   }
 
   /** Mixed quoted + free-term query — the search-box semantics for
@@ -1283,92 +1319,6 @@ object QueryEngine {
       TermQuery("", Analyzer.analyzeQuery(freeTerms + " " + phrase, cfg.analyzer), Nil, 1,
         Seq((Analyzer.tokenize(phrase, cfg.analyzer), 0))), k, cfg, tombstones)
 
-  /** The lazy (un-persisted) phrase match relation (docId, tfp, dl): the
-    * term-pushed block scan grouped by shard ([[shardGrouped]], no
-    * exchange on a loaded index) and intersected by [[PhraseScorer]] —
-    * exposed separately so plan-shape tests can assert on the actual scan
-    * (term pushdown + positions column) before the persist hides it. None
-    * when the analyzed phrase is empty.
-    */
-  private[graft] def phraseMatches(
-      spark: SparkSession,
-      blocks: Dataset[PostingBlock],
-      phrase: String,
-      cfg: IndexBuilder.Config,
-      slop: Int = 0,
-      tombstones: DocIdSet = DocIdSet.empty
-  ): Option[DataFrame] = {
-    import spark.implicits._
-    val terms = Analyzer.tokenize(phrase, cfg.analyzer) // order + duplicates matter
-    if (terms.isEmpty) return None
-    val distinctTerms = terms.distinct
-    val termsB = spark.sparkContext.broadcast(terms)
-    val tsB = tombstones.broadcastVia(spark)
-    val slop0 = slop
-    Some(shardGrouped(blocks.filter($"term".isin(distinctTerms: _*)), blocks, cfg)
-      .mapPartitions { it =>
-        PhraseScorer.matchPartition(it.buffered, termsB.value, slop0, tsB.value)
-      }
-      .toDF("docId", "tfp", "dl"))
-  }
-
-  /** Positional intersect: emits (docId, phraseTf, dl) per matching doc. */
-  private[query] object PhraseScorer {
-
-    /** Rows must arrive shard-grouped ([[shardGrouped]]). Shard groups
-      * are consumed LAZILY, one at a time: a high-df phrase holds at most
-      * one shard's match set in memory, never the whole partition's
-      * (the per-shard set is itself bounded by the shard's doc range).
-      */
-    def matchPartition(
-        it: BufferedIterator[PostingBlock],
-        terms: Seq[String],
-        slop: Int = 0,
-        tombstones: DocIdSet = DocIdSet.empty
-    ): Iterator[(Long, Int, Int)] = {
-      val distinctTerms = terms.distinct
-      new Iterator[(Long, Int, Int)] {
-        private var cur: Iterator[(Long, Int, Int)] = Iterator.empty
-        private def refill(): Unit =
-          while (!cur.hasNext && it.hasNext) {
-            val shard = new Shard(it)
-            // docId-sharding co-locates a doc's postings: a match needs
-            // every distinct phrase term present in this shard
-            if (distinctTerms.forall(shard.has)) {
-              // weight 0: the cursors are walked, never scored
-              val cursors = distinctTerms.map(t => t -> shard.cursor(t, 0.0, 0.0, 0.0, 1.0)).toMap
-              cur = intersectShard(cursors.values.toArray, terms.map(cursors).toArray, slop,
-                tombstones).iterator
-            }
-          }
-        override def hasNext: Boolean = { refill(); cur.hasNext }
-        override def next(): (Long, Int, Int) = { refill(); cur.next() }
-      }
-    }
-
-    /** Leapfrog docId intersection of `cs` + the phrase's occurrence count
-      * over `chain` (its cursors in phrase order, duplicates repeated).
-      */
-    private def intersectShard(cs: Array[Cursor], chain: Array[Cursor], slop: Int,
-        tombstones: DocIdSet): Seq[(Long, Int, Int)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-      while (!cs.exists(_.exhausted)) {
-        var target = Long.MinValue
-        cs.foreach(c => if (c.curDoc > target) target = c.curDoc)
-        cs.foreach(_.advanceTo(target))
-        if (cs.forall(c => !c.exhausted && c.curDoc == target)) {
-          // tombstoned docs never match (they'd distort the phrase df)
-          if (!tombstones.contains(target)) {
-            val tfp = BoolScorer.phraseTf(chain, slop, target)
-            if (tfp > 0) out += ((target, tfp, cs(0).curDl))
-          }
-          cs.foreach(_.advance())
-        }
-      }
-      out.toSeq
-    }
-  }
-
   /** The one document-at-a-time scorer behind every ranked query:
     * block-max WAND (Ding & Suel, SIGIR 2011) with a minimum-should-match
     * constraint, the shape of Lucene's WANDScorer. m = 1 is disjunctive
@@ -1388,7 +1338,8 @@ object QueryEngine {
       * the best docs of the groups before it. Decoded blocks are memoized
       * per shard ([[Shard]]), so a block shared by several queries is
       * decoded once. Returns, for every query with a candidate, its index
-      * in `queries` and the task's top k.
+      * in `queries` and the task's top k — for a lone phrase, its match
+      * count and candidates ([[PhraseMatches]]).
       */
     def scoreTask(
         it: BufferedIterator[PostingBlock],
@@ -1398,9 +1349,11 @@ object QueryEngine {
         tombstones: DocIdSet = DocIdSet.empty
     ): Iterator[(Int, Ranked)] = {
       val heaps = Array.fill(queries.size)(new TopKHeap(k))
+      val found = queries.map(q => Option.when(q.phraseAsTerm)(new PhraseMatches)).toArray
       while (it.hasNext) {
         val shard = new Shard(it)
-        queries.iterator.zip(heaps.iterator).foreach { case (q, heap) =>
+        queries.indices.foreach { i =>
+          val q = queries(i)
           // docId-sharding co-locates a doc's postings: a match needs m of
           // the query's terms, and every phrase word, present in this
           // shard. q.terms is term-sorted, so the cursors are too (the
@@ -1417,11 +1370,25 @@ object QueryEngine {
               !tombstones.contains(doc) && q.allow.forall(_.contains(doc)) &&
                 !excludedAt(not, doc) &&
                 chains.forall { case (chain, slop) => phraseTf(chain, slop, doc) > 0 }
-            scoreShard(cursors, q.m, heap, accept)
+            // a lone phrase (m = every word) accepts no doc, so its heap
+            // never fills and every doc holding all its words is checked:
+            // each live match is counted and kept with its f
+            def collect(doc: Long): Boolean = {
+              val (chain, slop) = chains.head
+              val tf = if (tombstones.contains(doc)) 0 else phraseTf(chain, slop, doc)
+              if (tf > 0) found(i).get.add(doc, Bm25.partial(tf, chain(0).curDl, k1, b, avgdl))
+              false
+            }
+            scoreShard(cursors, q.m, heaps(i), if (q.phraseAsTerm) collect else accept)
           }
         }
       }
-      heaps.indices.iterator.filterNot(heaps(_).isEmpty).map(i => i -> heaps(i).drain())
+      queries.indices.iterator.flatMap { i =>
+        found(i) match {
+          case Some(matches) => Option.when(!matches.isEmpty)(i -> matches.candidates(k))
+          case None => Option.when(!heaps(i).isEmpty)(i -> heaps(i).drain())
+        }
+      }
     }
 
     /** WAND pivot selection on global term upper bounds with a match-count
@@ -1534,9 +1501,7 @@ object QueryEngine {
       * (n-1)·2^-52 of the exact sum (Lucene's MathUtil.sumUpperBound).
       */
     private def sumUpperBound(acc: Double, n: Int): Double =
-      if (n <= 2) acc else acc * (1.0 + 2.0 * (n - 1) * SumUlp)
-
-    private val SumUlp = java.lang.Math.scalb(1.0, -52)
+      if (n <= 2) acc else acc * (1.0 + 2.0 * (n - 1) * Eps)
 
     /** Whether an exclusion cursor holds `doc`. The cursors skip forward
       * lazily: the docs checked here only grow within a shard (every live

@@ -164,9 +164,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("phrase scan pushes the term predicate and reads positions") {
+    // a lone phrase is scored from the same scan as every ranked query
     val idx = SparkEntry.index(spark, dir)
-    val p = plan(QueryEngine.phraseMatches(spark, idx.blocks,
-      "data spark", SparkEntry.cfg).get)
+    val p = scorerInput(idx, Seq("\"data spark\""))
     assert(p.contains("PushedFilters: [In(term"), p)
     assert("FileScan parquet \\[[^\\]]*\\]".r.findAllIn(p)
       .exists(_.contains("positions#")), p)
@@ -345,5 +345,32 @@ class PlanSpec extends AnyFunSuite {
       val n = jobs(m)
       assert(n == 1, s"a searchBatch at minShouldMatch $m ran $n jobs")
     }
+  }
+
+  test("job counts: a lone phrase is one job, alone and in a searchBatch") {
+    // a lone phrase is walked, counted and scored in the scorer's one job,
+    // its df summed on the driver; a batch holding it, a term query and an
+    // m-of-n query stays one job
+    val idx = SparkEntry.index(spark, dir)
+    val sc = spark.sparkContext
+    def jobs(group: String)(run: => Unit): Int = {
+      run // warm: no first-touch job of a lazy relation is counted
+      sc.setJobGroup(group, group)
+      try run finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val phrase = "\"fast table\""
+    def search(): DataFrame = QueryEngine.search(spark, idx.blocks, idx.termStats, idx.corpus,
+      phrase, 10, 1, SparkEntry.cfg, idx.tombstoneSet)
+    val qs = Seq("p1" -> phrase, "t1" -> "data spark", "m1" -> "data spark stream window")
+    def batch(): DataFrame = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats,
+      idx.corpus, qs, 10, 2, SparkEntry.cfg, idx.tombstoneSet)
+    assert(search().collect().nonEmpty, s"vacuous: [$phrase] matches nothing")
+    assert(batch().collect().map(_.getString(0)).distinct.length == qs.size,
+      "vacuous: a query of the batch matches nothing")
+    val searchJobs = jobs("lone-phrase-search")(search().collect())
+    assert(searchJobs == 1, s"a lone-phrase search ran $searchJobs jobs")
+    val batchJobs = jobs("lone-phrase-batch")(batch().collect())
+    assert(batchJobs == 1, s"a searchBatch holding a lone phrase ran $batchJobs jobs")
   }
 }

@@ -345,4 +345,26 @@ class SearchSpec extends AnyFunSuite {
     assert(got.map(_._1) == userIds.drop(2).take(10000),
       "filter-only must return exactly the LIVE filtered docs in docId order")
   }
+
+  test("k < 1 returns no rows on every route, through search and searchBatch") {
+    // a filter-only query's match-all ends in limit(k), which Spark rejects
+    // for a negative k at analysis: k < 1 must return no rows instead, as
+    // the ranked routes (a lone phrase and a term query) do
+    val idx = buildIndex(TranscriptGen.turns(seed = 130, nConvs = 20), "graft-search-k")
+    val docsDf = Some(idx.docs.toDF())
+    val queries = Seq("f" -> "role:user", "p" -> "\"term0000 term0001\"",
+      "t" -> "term0000 term0001")
+    def search(q: String, k: Int) = rows(QueryEngine.search(spark, idx.blocks, idx.termStats,
+      idx.corpus, q, k, 1, cfg, idx.tombstoneSet, docsDf))
+    def batch(k: Int) = QueryEngine.searchBatch(spark, idx.blocks, idx.termStats, idx.corpus,
+      queries, k, 1, cfg, idx.tombstoneSet, docsDf).collect().toSeq
+    queries.foreach { case (_, q) => assert(search(q, 1).nonEmpty, s"vacuous: [$q] at k = 1") }
+    assert(batch(1).map(_.getString(0)).distinct.size == queries.size)
+    Seq(0, -1).foreach { k =>
+      queries.foreach { case (_, q) =>
+        assert(search(q, k).isEmpty, s"search [$q] at k = $k returned rows")
+      }
+      assert(batch(k).isEmpty, s"searchBatch at k = $k returned rows")
+    }
+  }
 }

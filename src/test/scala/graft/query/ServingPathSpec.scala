@@ -34,8 +34,8 @@ class ServingPathSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   /** Whether an exchange is in `ds`'s plan: a block scorer's input
-    * ([[QueryEngine.scorerInput]]) or the phrase matches, whose only
-    * exchange is the one feeding the phrase scorer.
+    * ([[QueryEngine.scorerInput]]), whose only exchange is the one feeding
+    * the scorer.
     */
   private def exchangeFed(ds: Dataset[_]): Boolean = {
     val p = ds.queryExecution.executedPlan match {
@@ -47,7 +47,7 @@ class ServingPathSpec extends AnyFunSuite {
     p.find(_.isInstanceOf[Exchange]).isDefined
   }
 
-  /** The block scan the term query `q` is scored from. */
+  /** The block scan the ranked query `q` (a lone phrase too) is scored from. */
   private def input(idx: IndexStore.Index, q: String,
       c: IndexBuilder.Config = cfg): Dataset[_] =
     QueryEngine.scorerInput(spark, idx.blocks, idx.termStats, Seq(q), 1, c)
@@ -197,8 +197,7 @@ class ServingPathSpec extends AnyFunSuite {
     val idx = IndexStore.load(spark, dir)
     assert(idx.manifest.blockDirs.size == 2 && idx.tombstoneSet.nonEmpty)
     assert(QueryEngine.wholeFileScan(idx.blocks))
-    assert(!exchangeFed(QueryEngine.phraseMatches(spark, idx.blocks, "term0000 term0001",
-      cfg, 0, idx.tombstoneSet).get))
+    assert(!exchangeFed(input(idx, "\"term0000 term0001\"")))
     assert(assertServesExactly(idx, genQueries) >= 7, "generated queries mostly empty")
   }
 
@@ -209,8 +208,7 @@ class ServingPathSpec extends AnyFunSuite {
         "spark.sql.files.openCostInBytes" -> "1") {
       assert(!QueryEngine.wholeFileScan(idx.blocks))
       assert(exchangeFed(input(idx, "term0000")))
-      assert(exchangeFed(QueryEngine.phraseMatches(spark, idx.blocks, "term0000 term0001",
-        cfg).get))
+      assert(exchangeFed(input(idx, "\"term0000 term0001\"")))
       assert(assertServesExactly(idx, genQueries) >= 7)
     }
   }

@@ -15,7 +15,8 @@ import graft.query.QueryEngine.{BoolQuery, BoolScorer, QTerm}
   * the SAME encoded blocks — no Spark involved, so adversarial block
   * layouts (weak current block, docId ties at the pivot, multi-block
   * lists, too few matches at the pivot, phrase words on the pivot doc but
-  * apart) can be constructed exactly.
+  * apart) can be constructed exactly. A lone phrase's per-task counts and
+  * candidates are checked through the driver's finish.
   */
 class WandUnitSpec extends AnyFunSuite {
 
@@ -313,5 +314,104 @@ class WandUnitSpec extends AnyFunSuite {
     }
     info(s"$checked checks, $tieDecided with the k-th score tied past the cut")
     assert(tieDecided > 500, s"only $tieDecided cases where the docId tie-break decides")
+  }
+
+  test("a lone phrase: scoreTask's counts and candidates, finished on the driver, equal the phrase oracle") {
+    // The phrase scores as one term, its idf over the live matches every
+    // task counted. Random positional corpora, phrases of 1-3 words
+    // (repeats allowed) at slop 0-2, tombstones, and 1-4 docId-range
+    // shards read in shuffled orders by 1-3 tasks; a quarter of the
+    // corpora hold the phrase in every doc, so idf = 0 and docId order
+    // decides. Each result must equal the brute-force PhraseQuery oracle
+    // over the live docs, rank for rank and bit for bit.
+    val cfg = IndexBuilder.Config()
+    val rnd = new scala.util.Random(20261021L)
+    val words = Seq("w0", "w1", "w2")
+    var checked = 0
+    var nonEmpty = 0
+    var idfZero = 0
+    (1 to 200).foreach { iter =>
+      val nDocs = 3 + rnd.nextInt(30)
+      val phrase = Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.size)))
+      val slop = rnd.nextInt(3)
+      val everywhere = rnd.nextDouble() < 0.25
+      val texts: Map[Long, Array[String]] = (0 until nDocs).map { d =>
+        val toks = Seq.fill(1 + rnd.nextInt(12))(
+          if (rnd.nextDouble() < 0.75) words(rnd.nextInt(words.size)) else "f0")
+        val at = rnd.nextInt(toks.size + 1)
+        d.toLong -> (if (everywhere) toks.take(at) ++ phrase ++ toks.drop(at) else toks).toArray
+      }.toMap
+      val nShards = 1 + rnd.nextInt(4)
+      val blockSize = 1 + rnd.nextInt(3)
+      val groups: Seq[Seq[PostingBlock]] = (0 until nShards).map { shard =>
+        (words :+ "f0").flatMap { t =>
+          texts.toSeq.filter { case (d, _) => (d * nShards / nDocs).toInt == shard }.sortBy(_._1)
+            .flatMap { case (d, toks) =>
+              val pos = toks.indices.filter(toks(_) == t).map(_ + 1).toArray // 1-based
+              if (pos.isEmpty) None else Some((P(d, pos.length, toks.length), pos))
+            }
+            .grouped(blockSize).zipWithIndex.map { case (bps, bi) =>
+              blk(shard, t, bi, bps.map(_._1), bps.map(_._2))
+            }
+        }
+      }.filter(_.nonEmpty)
+      // doc 0 stays live, so the live corpus is never empty
+      val dead = (1 until nDocs).filter(_ => rnd.nextDouble() < 0.2).map(_.toLong).toSet
+      val tombstones = DocIdSet.fromIds(dead.toArray)
+      val live = OracleBM25.corpusFromDocs(texts.toVector.sortBy(_._1)
+        .collect { case (d, toks) if !dead(d) => d -> toks.mkString(" ") }, cfg.analyzer)
+      val liveMatches = live.docs.count { case (d, _) =>
+        OracleBM25.phraseTf(texts(d), phrase, slop) > 0 }
+      val q = BoolQuery("p", phrase.distinct.sorted.map(QTerm(_, 0.0)), Nil,
+        phrase.distinct.size, Seq((phrase, slop)), phraseAsTerm = true)
+      Seq(1, 2, 3, 5).foreach { k =>
+        val want = OracleBM25.phraseTopK(live, phrase.mkString(" "), slop, k, cfg)
+        (1 to 3).foreach { _ =>
+          val order = rnd.shuffle(groups)
+          val cuts = Seq.fill(rnd.nextInt(3))(rnd.nextInt(order.size + 1)).sorted
+          val tasks = (0 +: cuts :+ order.size).sliding(2).map(c => order.slice(c.head, c.last))
+          val lists = tasks.flatMap { part =>
+            BoolScorer.scoreTask(part.flatten.iterator.buffered, Seq(q), k,
+              k1, b, live.avgdl, tombstones).map(_._2)
+          }.toSeq
+          val got = pairs(QueryEngine.mergePhrase(lists, live.n, k))
+          assert(got == want, s"iter=$iter [${phrase.mkString(" ")}]~$slop k=$k " +
+            s"${lists.size} tasks: got $got want $want")
+          checked += 1
+        }
+        if (want.nonEmpty) nonEmpty += 1
+        if (liveMatches == live.n && liveMatches > k) idfZero += 1
+      }
+    }
+    info(s"$checked checks, $nonEmpty (corpus, k) with matches, $idfZero at idf = 0 past k")
+    assert(nonEmpty > 400, s"phrase cases mostly empty ($nonEmpty) — vacuous")
+    assert(idfZero > 100, s"only $idfZero idf = 0 cases with more matches than k")
+  }
+
+  test("a lone phrase's finish: a score tie rounded from f and nextDown(f) goes to the smaller docId") {
+    val f = Bm25.partial(3, 7, k1, b, 5.0)
+    val lower = Math.nextDown(f)
+    // a doc count whose idf (df = 3) rounds both products to one score
+    val n = (3 to 100000).find { n =>
+      val idf = Bm25.idf(n.toLong, 3L)
+      idf > 0 && idf * f == idf * lower
+    }.getOrElse(fail("no idf ties f and nextDown(f)"))
+    val idf = Bm25.idf(n.toLong, 3L)
+    // doc 9 holds the larger f, doc 4 the smaller one, doc 1 (the smallest
+    // docId) a far smaller f: the tie puts doc 4 first
+    val tied = new QueryEngine.PhraseMatches
+    tied.add(9L, f)
+    tied.add(4L, lower)
+    tied.add(1L, f / 2)
+    assert(pairs(QueryEngine.mergePhrase(Seq(tied.candidates(1)), n.toLong, 1)) ==
+      Seq(4L -> idf * lower))
+    assert(pairs(QueryEngine.mergePhrase(Seq(tied.candidates(2)), n.toLong, 2)) ==
+      Seq(4L -> idf * lower, 9L -> idf * f))
+    // every doc matches (df = N): idf = 0, and docId order decides
+    val all = new QueryEngine.PhraseMatches
+    all.add(8L, 2 * f)
+    all.add(5L, f)
+    all.add(2L, f / 2)
+    assert(pairs(QueryEngine.mergePhrase(Seq(all.candidates(1)), 3L, 1)) == Seq(2L -> 0.0))
   }
 }
